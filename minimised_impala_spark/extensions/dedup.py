@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import QUERIES, query
+from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
 P = 2147483647  # Mersenne prime 2^31-1
@@ -687,9 +688,10 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = exploded.groupBy("p", "q").applyInPandas(
         score_tile, schema="left_id long, right_id long, cosine double"
     )
-    return (
-        pairs.select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy("left_id", "right_id")
+    return order_after_python(
+        pairs.select("left_id", "right_id", F.round("cosine", 6).alias("cosine")),
+        "left_id",
+        "right_id",
     )
 
 
@@ -780,9 +782,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE persisted index carrying the banded signatures, the normalized
     # vector AND the int8 proxy codes for the rescore pre-filter, all
     # from a single Arrow crossing (r12 + r13, guide §4.1: the
-    # JVM↔Python crossing is the cost — cross once with every output;
-    # plans/r12/dedup_embedding_lsh_{before,after}.txt show one
-    # ArrowEvalPython scan instead of two). persist, not localCheckpoint:
+    # JVM↔Python crossing is the cost — cross once with every output:
+    # separate signature and normalize UDFs each put their own
+    # ArrowEvalPython over their own corpus scan). persist, not localCheckpoint:
     # same single-compute reuse, none of the checkpoint-RDD creation cost
     # at plan-build time.
     idx = corpus_df.select("vec_id", prep("e").alias("p")).select(
@@ -840,7 +842,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("left_id", "right_id")
     )
     norm = idx.select("vec_id", "ne")
-    return (
+    scored = (
         survivors.join(
             norm.select(F.col("vec_id").alias("left_id"), F.col("ne").alias("le")),
             "left_id",
@@ -855,8 +857,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("left_id", "right_id", VK.dot_pair_once("le", "re").alias("cosine"))
         .filter(F.col("cosine") >= 0.7)
         .select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
-        .orderBy("left_id", "right_id")
     )
+    return order_after_python(scored, "left_id", "right_id")
 
 
 # --------------------------------------------------------------------------
@@ -1539,16 +1541,15 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("is_dropped", F.lit(True))
     )
     self_dup = F.round(VK.cosine_pair("e", "e"), 6) > _SEM_TAU
-    return (
-        assign.join(rep_dropped, "vec_id", "left")
-        .select(
+    return order_after_python(
+        assign.join(rep_dropped, "vec_id", "left").select(
             "vec_id",
             "cluster",
             F.when(F.col("vec_id") == F.col("rep"), F.col("is_dropped").isNull())
             .otherwise(~self_dup)
             .alias("kept"),
-        )
-        .orderBy("vec_id")
+        ),
+        "vec_id",
     )
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
 # pandas kernels below ship to workers — see serde module docstring
@@ -346,10 +347,10 @@ ORDER BY doc_id, chunk_idx
 )
 def multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        audio_chunks(docs)
-        .select("doc_id", "chunk_idx", "offset", "n_samples")
-        .orderBy("doc_id", "chunk_idx")
+    return order_after_python(
+        audio_chunks(docs).select("doc_id", "chunk_idx", "offset", "n_samples"),
+        "doc_id",
+        "chunk_idx",
     )
 
 
@@ -377,13 +378,16 @@ def multimodal_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     plumbing — binary in → binary out + dims through Arrow batches)."""
     docs = load_table(spark, sf_dir, "documents")
     out = resized(docs, 224, 224)
-    return out.select(
+    return order_after_python(
+        out.select(
+            "doc_id",
+            "width",
+            "height",
+            F.length("payload").cast("bigint").alias("out_len"),
+            F.md5("payload").alias("out_md5"),
+        ),
         "doc_id",
-        "width",
-        "height",
-        F.length("payload").cast("bigint").alias("out_len"),
-        F.md5("payload").alias("out_md5"),
-    ).orderBy("doc_id")
+    )
 
 
 _FEATURES_ORACLE = """
@@ -408,7 +412,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     feats = extract_features(docs, dim=8)
     cols = [F.col("embedding")[i].alias(f"f{i}") for i in range(8)]
-    return feats.select("doc_id", *cols).orderBy("doc_id")
+    return order_after_python(feats.select("doc_id", *cols), "doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -488,14 +492,14 @@ def multimodal_pair_clip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     s = VK.cosine_pair("tv", "iv")
-    return (
+    return order_after_python(
         pairs.select(
             "doc_id",
             "source",
             F.round(s, 6).alias("clip_score"),
             (s >= 0.0).alias("kept"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 

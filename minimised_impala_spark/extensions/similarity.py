@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from minimised_impala_spark.extensions import vector_kernels as VK
 from minimised_impala_spark.queries.registry import query
-from minimised_impala_spark.shipping import ship_module_by_value
+from minimised_impala_spark.shipping import order_after_python, ship_module_by_value
 from minimised_impala_spark.tables import load_table
 
 ship_module_by_value("minimised_impala_spark.extensions.vector_kernels")
@@ -1081,10 +1081,10 @@ def sim_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt[r.c] = [float(x) for x in r.cent]
         centers = nxt
 
-    return emb.select(
+    return order_after_python(
+        emb.select("vec_id", VK.make_kmeans_assign_udf(centers)("e").alias("cluster")),
         "vec_id",
-        VK.make_kmeans_assign_udf(centers)("e").alias("cluster"),
-    ).orderBy("vec_id")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1795,8 +1795,8 @@ def sim_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similar enough"), and the primitive under dedup_embedding's pair
 # stage. 100 TB shape: queries broadcast, the τ predicate applies
 # map-side right after the Arrow-batched BLAS kernel — no window, no
-# per-query sort, no shuffle at all before the final presentation
-# ORDER BY; an LSH/IVF pre-prune (sim_lsh_ann / sim_ivf_ann) slots in
+# per-query sort, no shuffle before the final presentation ORDER BY
+# except its own rebalance (order_after_python); an LSH/IVF pre-prune (sim_lsh_ann / sim_ivf_ann) slots in
 # front unchanged when the corpus no longer scans. 6dp rounding before
 # the τ compare keeps the boundary identical in both engines.
 @query(
@@ -1828,7 +1828,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("e").alias("ce"))
-    return (
+    hits = (
         F.broadcast(q)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -1839,5 +1839,5 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(VK.cosine_pair_once("qe", "ce"), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= 0.25)
-        .orderBy("query_id", "neighbor_id")
     )
+    return order_after_python(hits, "query_id", "neighbor_id")

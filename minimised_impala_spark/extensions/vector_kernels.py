@@ -17,8 +17,8 @@ relative and every consumer rounds at 1e-6, so oracle hashes are stable
 (P(round-boundary collision) ≈ 1e-9 per pair).
 
 This module is shipped BY VALUE into task closures (see shipping.py): it
-must import only stdlib + numpy/pandas at module level, and executors need
-no access to the repo.
+must import only stdlib + numpy/pandas (and shipping, which travels by
+value with it) at module level, and executors need no access to the repo.
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+
+from minimised_impala_spark.shipping import drop_zip_finders
 
 # DataType objects, not DDL strings: string return types are parsed through
 # the active SparkContext, which doesn't exist yet at import time.
@@ -55,6 +57,12 @@ _POWERS = np.arange(N_PLANES)
 
 
 def _mat(s: pd.Series) -> np.ndarray:
+    # Every kernel passes through here, so this is where a reused worker
+    # drops its zip finders: PySpark invalidates import caches at the
+    # start of every task and each cached zipimporter then re-reads
+    # pyspark.zip — 0.07–0.15 s per task on a 4-vCPU host
+    # (shipping.drop_zip_finders).
+    drop_zip_finders()
     return np.vstack(s.to_numpy())
 
 
@@ -137,6 +145,13 @@ cosine_pair_once = cosine_pair.asNondeterministic()
 # so cosine <= est + bound, and a filter on (est + bound) >= τ keeps every
 # pair whose true cosine can reach τ. No recall coupling: the proxy is an
 # internal bound, not an approximation the result depends on.
+#
+# The kernel evaluates it through r = s/|a|, which lies in [1/(127·8),
+# 1/127] for every nonzero vector, so no product under- or overflows. A
+# norm below √(smallest normal double) carries no usable bound (its squares
+# underflowed; a zero vector's is 0): such a pair yields +inf, a candidate
+# the exact rescore decides — as it does the NaN of a zero vector.
+_MIN_NORM = float(np.sqrt(np.finfo(np.float64).tiny))
 
 
 @pandas_udf(T.DoubleType())
@@ -147,13 +162,14 @@ def cosine_ub_pair(
     """Upper bound on cosine(a, b) from the int8 codes: est + bound."""
     if qa.empty:
         return _empty()
-    ma = np.vstack(qa.to_numpy()).astype("int32")
-    mb = np.vstack(qb.to_numpy()).astype("int32")
-    va, vb = sa.to_numpy(), sb.to_numpy()
+    ma = _mat(qa).astype("int32")
+    mb = _mat(qb).astype("int32")
     wa, wb = na.to_numpy(), nb.to_numpy()
-    est = va * vb * (ma * mb).sum(axis=1) / (wa * wb)
-    bound = 4.0 * va / wa + 4.0 * vb / wb + 48.0 * va * vb / (wa * wb)
-    return pd.Series(est + bound)
+    ok = (wa >= _MIN_NORM) & (wb >= _MIN_NORM)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ra, rb = sa.to_numpy() / wa, sb.to_numpy() / wb
+        ub = ra * rb * (ma * mb).sum(axis=1) + 4.0 * ra + 4.0 * rb + 48.0 * ra * rb
+    return pd.Series(np.where(ok, ub, np.inf))
 
 
 cosine_ub_pair_once = cosine_ub_pair.asNondeterministic()

@@ -26,6 +26,7 @@ from pyspark.sql.functions import pandas_udf
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.queries.tpch import isum
 from minimised_impala_spark.serde import pickle_module_by_value
+from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
 pickle_module_by_value(__name__)
@@ -55,11 +56,11 @@ ORDER BY doc_id
 )
 def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return (
+    return order_after_python(
         docs.filter(F.col("doc_id") < 200)
         .select("doc_id", _norm_text("text").alias("norm_text"))
-        .withColumn("n_chars", F.length("norm_text").cast("bigint"))
-        .orderBy("doc_id")
+        .withColumn("n_chars", F.length("norm_text").cast("bigint")),
+        "doc_id",
     )
 
 
@@ -98,13 +99,12 @@ ORDER BY o_orderstatus
 )
 def uda_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_orderstatus")
-        .agg(
+    return order_after_python(
+        orders.groupBy("o_orderstatus").agg(
             _count_rows("o_orderkey").alias("n"),
             _wavg_cents("o_totalprice", "o_custkey").alias("wavg_cents"),
-        )
-        .orderBy("o_orderstatus")
+        ),
+        "o_orderstatus",
     )
 
 
@@ -296,13 +296,13 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     spark.udtf.register("mis_sentence_split", _SentenceSplit)
     docs.filter(F.col("doc_id") < 120).createOrReplaceTempView("udtf_docs")
-    return spark.sql(
+    split = spark.sql(
         """
         SELECT d.doc_id, s.pos, s.sentence, s.n_tokens
         FROM udtf_docs d, LATERAL mis_sentence_split(d.doc_id, d.text) s
-        ORDER BY d.doc_id, s.pos
         """
     )
+    return order_after_python(split, "doc_id", "pos")
 
 
 # --------------------------------------------------------------------------
@@ -373,15 +373,15 @@ def udtf_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 50)
     spark.udtf.register("mis_longest_streak", _LongestStreak)
     ev.createOrReplaceTempView("udtf_events")
-    return spark.sql(
+    streaks = spark.sql(
         """
         SELECT * FROM mis_longest_streak(
           TABLE(SELECT user_id, ts, event_id, event_type FROM udtf_events)
           PARTITION BY user_id ORDER BY (ts, event_id)
         )
-        ORDER BY user_id
         """
     )
+    return order_after_python(streaks, "user_id")
 
 
 # --------------------------------------------------------------------------
