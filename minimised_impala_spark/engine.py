@@ -23,6 +23,13 @@ class Engine:
     >>> eng = Engine.local()
     >>> eng.load_fixture_tables("/root/testdata/sf0.001")
     >>> eng.sql("SELECT count(*) FROM lineitem").show()
+
+    The dialect's SQL functions are registered once per session: a second
+    ``Engine`` on the same session issues no statement, and one on a
+    ``newSession()`` sibling registers its own. A session built outside
+    ``build_session`` keeps Spark's default whole-stage-codegen cache (100
+    classes, smaller than this engine's working set), because that conf
+    is static and cannot be changed once the session exists.
     """
 
     def __init__(self, spark: SparkSession):

@@ -23,6 +23,7 @@ value with it) at module level, and executors need no access to the repo.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -52,7 +53,18 @@ def plane(pl: int) -> list[float]:
     ]
 
 
-_PLANES = np.array([plane(pl) for pl in range(N_PLANES)])  # N_PLANES × DIM
+@functools.cache
+def plane_table(n: int) -> np.ndarray:
+    """Planes 0..n-1 as one read-only n × DIM array, built once per process
+    for each n (the factories below ask for a handful of fixed sizes).
+    The 1056-plane table of the banded-LSH dedups takes 0.13-0.15 s of
+    md5s to build; memoized, only the first plan build pays it."""
+    table = np.array([plane(pl) for pl in range(n)])
+    table.setflags(write=False)
+    return table
+
+
+_PLANES = plane_table(N_PLANES)
 _POWERS = np.arange(N_PLANES)
 
 
@@ -222,7 +234,7 @@ def make_bucket_udf(plane_offset: int, n_planes: int = N_PLANES):
     [plane_offset, plane_offset + n_planes) — the SAME md5-derived plane
     table, so a second probe set (offset 8) is oracle-expressible with the
     identical _PLANE_SQL parameterized by plane index."""
-    planes = np.array([plane(pl) for pl in range(plane_offset, plane_offset + n_planes)])
+    planes = plane_table(plane_offset + n_planes)[plane_offset:]
     powers = np.arange(n_planes)
 
     @pandas_udf(T.LongType())
@@ -246,7 +258,7 @@ def make_band_sig_udf(n_bands: int, band_planes: int):
     p = 1 − θ/π, so recall at a given cosine rises with b while random
     collisions stay ∝ b·2^−r."""
     total = n_bands * band_planes
-    planes = np.array([plane(pl) for pl in range(total)])  # total × DIM
+    planes = plane_table(total)  # total × DIM
     powers = np.arange(band_planes)
 
     @pandas_udf(_ARR_L)
@@ -269,7 +281,7 @@ def make_lsh_prep_udf(n_bands: int, band_planes: int, with_norm_vec: bool = Fals
     the normalized vector for the exact rescore. Guide §4.1: the
     JVM↔Python crossing is the cost — cross once with every output."""
     total = n_bands * band_planes
-    planes = np.array([plane(pl) for pl in range(total)])
+    planes = plane_table(total)
     powers = np.arange(band_planes)
     fields = [
         T.StructField("sigs", _ARR_L),

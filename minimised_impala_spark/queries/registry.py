@@ -23,19 +23,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from minimised_impala_spark.session import session_key
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect exposes no sparkContext
-        return str(id(spark))
 
 
 def fresh(name: str) -> QueryFn:
@@ -55,7 +50,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
     def deco(fn: QueryFn) -> QueryFn:
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (_session_key(spark), sf_dir, name)
+            key = (session_key(spark), sf_dir, name)
             df = _PLAN_CACHE.get(key)
             if df is None:
                 df = fn(spark, sf_dir)

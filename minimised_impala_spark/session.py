@@ -42,7 +42,30 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Files: 128 MiB splits — at 100 TB that's ~800k tasks, a sane default.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # Generated-code class cache (a static conf, read when the JVM first
+    # compiles). Spark's default of 100 classes is far below this engine's
+    # working set: at the default a warm pass evicts, and recompiles with
+    # Janino, classes it has just used. Measured at local[2] on a 4-vCPU
+    # host, one sweep of all 333 registry queries at sf0.001 compiles 4,331
+    # distinct classes with an unbounded cache and 6,636 at 100; a second
+    # sweep compiles 1,592 (code that differs from run to run) against
+    # 6,614. The bigger cache costs +32 MB Metaspace (227 -> 259 MB) and
+    # +22 MB JIT code heap. 8192 holds the whole working set, and the LRU
+    # still bounds memory under ad-hoc queries.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
+
+
+def session_key(spark: SparkSession) -> str:
+    """Identity of one SparkSession, for per-session caches.
+
+    The JVM session's UUID, not the application id: sibling sessions from
+    ``newSession()`` share the application but each has its own catalog,
+    temp views and temp functions."""
+    try:
+        return spark._jsparkSession.sessionUUID()
+    except AttributeError:  # Spark Connect has no JVM session handle
+        return str(id(spark))
 
 
 def build_session(

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from minimised_impala_spark.session import session_key
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -42,13 +44,14 @@ def ensure_engine_semantics(spark: SparkSession) -> None:
 
 # DataFrame (logical-plan) cache: repeated load_table calls across the
 # query suite re-list files and re-read parquet footers otherwise. Keyed
-# by applicationId so a new session never sees stale plans — this mirrors
+# by session (session_key) so a DataFrame goes back only to the session it
+# is bound to, never to a newSession() sibling — this mirrors
 # the reference's catalogd metadata cache (SURVEY §1.4) at nano-scale.
 _DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (session_key(spark), sf_dir, name)
     cached = _DF_CACHE.get(key)
     if cached is not None:
         return cached

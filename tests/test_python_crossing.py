@@ -153,3 +153,16 @@ def test_lsh_prep_sigs_match_band_sig_udf(rows, shape):
     fused = np.vstack(_prep(*shape)(s)["sigs"].to_numpy())
     plain = np.vstack(_band_sigs(*shape)(s).to_numpy())
     assert np.array_equal(fused, plain)
+
+
+@pytest.mark.parametrize("n", [VK.N_PLANES, 88 * 12])
+def test_plane_table_is_the_plane_definition_read_only(n):
+    """The memoized table is ``plane()`` row for row (the definition the
+    DuckDB oracle mirrors), is built once per size, and cannot be
+    written: every UDF a factory builds shares it."""
+    table = VK.plane_table(n)
+    assert table.tolist() == [VK.plane(i) for i in range(n)]
+    assert not table.flags.writeable
+    assert VK.plane_table(n) is table
+    with pytest.raises(ValueError):
+        table[0, 0] = 0.0
