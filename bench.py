@@ -136,7 +136,8 @@ def main() -> None:
 
     from minimised_impala_spark.session import build_session
     from minimised_impala_spark.queries import load_all
-    from minimised_impala_spark.queries.registry import QUERIES, fresh
+    from minimised_impala_spark.queries.registry import fresh
+    from minimised_impala_spark.seams import query_scope
 
     load_all()
     spark = build_session(
@@ -166,8 +167,8 @@ def main() -> None:
 
     for t in ALL_TABLES:
         load_table(spark, sf_dir, t)
-    QUERIES["tpch_q6"](spark, sf_dir).collect()
-    QUERIES["tpch_q1"](spark, sf_dir).collect()
+    fresh("tpch_q6")(spark, sf_dir).collect()
+    fresh("tpch_q1")(spark, sf_dir).collect()
 
     # best-of-5 per query: first pass pays JVM JIT/codegen compilation,
     # later passes measure steady state — the regime a long-running engine
@@ -201,24 +202,13 @@ def main() -> None:
     def _draws(name: str) -> tuple:
         best = (float("inf"), 0.0, 0.0)
         for _ in range(n_draws):
-            # Measurement-bug fix (r12, documented in OPTIMIZATION_r12.md):
-            # queries that persist() an intra-query intermediate (the LSH /
-            # posting indexes) register it with the CacheManager, which
-            # matches LOGICAL PLANS — so draw 2's fresh DataFrame silently
-            # reused draw 1's cached intermediate and best-of-5 measured
-            # cache reads, not query execution (the exact failure mode the
-            # fresh() contract exists to prevent). Clear the cache before
-            # every draw, OUTSIDE the timed region: each draw then computes
-            # from the parquet inputs; within a draw the persist still
-            # provides its legitimate multi-consumer reuse. Base tables are
-            # never cached (tables._DF_CACHE memoizes DataFrame objects,
-            # not data), so this drops nothing else.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fresh(name)(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.collect()
-            t2 = time.perf_counter()
+            # the scope releases the draw's seams after the timed region
+            with query_scope():
+                t0 = time.perf_counter()
+                df = fresh(name)(spark, sf_dir)
+                t1 = time.perf_counter()
+                df.collect()
+                t2 = time.perf_counter()
             if t2 - t0 < best[0]:
                 best = (t2 - t0, t1 - t0, t2 - t1)
         return best

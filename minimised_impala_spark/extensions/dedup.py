@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minimised_impala_spark.queries.registry import QUERIES, query
+from minimised_impala_spark.queries.registry import fresh, query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
@@ -198,7 +199,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     are selective, replaced by MinHash-LSH at 100 TB."""
     # persist: three consumers (sizes + both join sides) each re-ran the
     # corpus scan + shingle explode uncached (r12, guide §5)
-    sh = shingles(spark, sf_dir).persist()
+    sh = seam(shingles(spark, sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     s1 = sh.select(F.col("doc_id").alias("d1"), "sh")
     s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
@@ -489,12 +490,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uncached (8 corpus scans in the executed plan; 1 after). |docs|×4
     # narrow rows — the persisted band index this op's 100 TB shape
     # already calls for (r12, guide §5).
-    chunks = sums.select(
+    chunks = seam(sums.select(
         "doc_id",
         F.posexplode(F.array(*[_chunk(k) for k in range(4)])).alias(
             "chunk", "ck"
         ),
-    ).persist()
+    ))
     c1 = chunks.select(F.col("doc_id").alias("d1"), "chunk", "ck")
     c2 = chunks.select(
         F.col("doc_id").alias("d2"),
@@ -784,12 +785,10 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from a single Arrow crossing (r12 + r13, guide §4.1: the
     # JVM↔Python crossing is the cost — cross once with every output:
     # separate signature and normalize UDFs each put their own
-    # ArrowEvalPython over their own corpus scan). persist, not localCheckpoint:
-    # same single-compute reuse, none of the checkpoint-RDD creation cost
-    # at plan-build time.
-    idx = corpus_df.select("vec_id", prep("e").alias("p")).select(
+    # ArrowEvalPython over their own corpus scan).
+    idx = seam(corpus_df.select("vec_id", prep("e").alias("p")).select(
         "vec_id", "p.ne", "p.sigs", "p.q", "p.qs", "p.nrm"
-    ).persist()
+    ))
     bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
     # Candidate pairs per bucket via groupBy + in-bucket pair expansion:
     # ONE exchange on the bucket key instead of the previous self-join's
@@ -1220,7 +1219,7 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frequencies, the ranked prefix, per-doc sizes, the rescore sets) —
     # uncached each re-ran the corpus scan + shingle explode (16 scans in
     # the executed plan; 1 after — r12, guide §5)
-    sh = shingles(spark, sf_dir).persist()
+    sh = seam(shingles(spark, sf_dir))
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     ranked = sh.join(dfreq, "sh").withColumn(
         "pos", F.row_number().over(W.partitionBy("doc_id").orderBy("df", "sh"))
@@ -1311,7 +1310,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus→signature pipeline — 8 scans in the executed plan; 1 after),
     # and the shingle sets feed both rescore sides. The persisted band
     # index IS this op's documented 100 TB shape.
-    bands = lsh_bands(spark, sf_dir).persist()
+    bands = seam(lsh_bands(spark, sf_dir))
     is_new = F.col("doc_id") % 10 == 7
     new_b = bands.filter(is_new).select(
         F.col("doc_id").alias("new_id"), "band", "bsig"
@@ -1320,9 +1319,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("corpus_id"), "band", "bsig"
     )
     cand = new_b.join(corp_b, ["band", "bsig"]).select("new_id", "corpus_id").distinct()
-    arrs = shingles(spark, sf_dir).groupBy("doc_id").agg(
+    arrs = seam(shingles(spark, sf_dir).groupBy("doc_id").agg(
         F.collect_set("sh").alias("shset")
-    ).persist()
+    ))
     a1 = arrs.select(F.col("doc_id").alias("new_id"), F.col("shset").alias("s1"))
     a2 = arrs.select(F.col("doc_id").alias("corpus_id"), F.col("shset").alias("s2"))
     c = F.size(F.array_intersect("s1", "s2"))
@@ -1368,7 +1367,7 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE persisted corpus feeds the candidate generator AND both
     # rescore sides — previously lsh_candidate_pairs rebuilt its own
     # corpus and a/b re-scanned twice more (6 scans; 1 after — r12, §5)
-    c = corpus(spark, sf_dir).persist()
+    c = seam(corpus(spark, sf_dir))
     pairs = lsh_candidate_pairs_of(c)
     a = c.select(F.col("doc_id").alias("d1"), F.col("text").alias("t1"))
     b = c.select(F.col("doc_id").alias("d2"), F.col("text").alias("t2"))
@@ -1413,7 +1412,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     this as the rescore, exactly like dedup_edit_distance does."""
     # persist: three consumers (sizes + both join sides) each re-ran
     # the corpus scan + shingle explode uncached (r12, guide §5)
-    sh = shingles(spark, sf_dir).persist()
+    sh = seam(shingles(spark, sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("d1"), "sh")
     b = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
@@ -1728,10 +1727,9 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: three consumers (the dup-gram frequencies, the marked
     # positions and the per-doc position counts) each re-ran the corpus
     # scan + 5-gram hash explode uncached (r12, guide §5)
-    grams = (
+    grams = seam(
         docs.select("doc_id", F.posexplode(gram_arr).alias("i0", "gh"))
         .select("doc_id", (F.col("i0") + 1).alias("p"), "gh")
-        .persist()
     )
     dupg = (
         grams.groupBy("gh")
@@ -1843,14 +1841,14 @@ def dedup_minhash_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame
     # MinHash mins are insensitive to shingle multiplicity, so the
     # distinct-shingle signature is bit-identical to bands_of's.
     # Plan: 16 corpus scans → 1 (audit: tools/plan_audit.py).
-    sh = shingles(spark, sf_dir).persist()
+    sh = seam(shingles(spark, sf_dir))
     hashed = sh.select("doc_id", _shingle_hash(F.col("sh")))
-    sig = hashed.groupBy("doc_id").agg(
+    sig = seam(hashed.groupBy("doc_id").agg(
         *[
             F.expr(f"min(({2 * j + 3} * h + {5 * j + 7}) % {P})").alias(f"m{j}")
             for j in range(N_HASH)
         ]
-    ).persist()
+    ))
     cand = _pairs_from_bands(_bands_from_sig(sig))
     a = sig.select(
         F.col("doc_id").alias("d1"),
@@ -2157,9 +2155,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus_df = base.unionByName(pert)
     prep = VK.make_lsh_prep_udf(_EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
-    # persist(), not localCheckpoint: checkpoint RDD creation is paid at
-    # call time even when lazy (serial driver cost — this query was the
-    # #2 plan_build offender in BENCH_r09); persist defers to first use.
     # ONE persisted index carries the raw vector, the banded signatures
     # AND the int8 proxy codes for the rescore pre-filter, all from a
     # single Arrow crossing (r12 + r13, guide §4.1: previously the
@@ -2167,9 +2162,9 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the perturbed corpus from parquet in a second — now the pair
     # generator, the proxy lookups and the vector lookups all read the
     # same in-memory table).
-    idx = corpus_df.select("vec_id", "e", prep("e").alias("p")).select(
+    idx = seam(corpus_df.select("vec_id", "e", prep("e").alias("p")).select(
         "vec_id", "e", "p.sigs", "p.q", "p.qs", "p.nrm"
-    ).persist()
+    ))
     bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
     # in-bucket pair expansion: one exchange on the bucket key instead of
     # the self-join's two (guide §2.4; same pattern as dedup_embedding_lsh)
@@ -2336,10 +2331,9 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.array().cast("array<string>"))
     # persist: both self-join sides read the distinct gram stream —
     # uncached each re-ran the mirror build + 8-gram explode (r12, §5)
-    grams = (
+    grams = seam(
         corpus_df.select("doc_id", "source", F.explode(gram_arr).alias("gh"))
         .distinct()
-        .persist()
     )
     a = grams.select(
         F.col("source").alias("src_a"), F.col("doc_id").alias("doc_a"), "gh"
@@ -2464,7 +2458,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of duplicate-cluster sizes from the CC collapse, with
     the removable-doc count (size - 1 per cluster under keep-one).
     Output: (cluster_size, n_clusters, n_docs, n_removable)."""
-    labels = QUERIES["dedup_cluster_cc"](spark, sf_dir)
+    labels = fresh("dedup_cluster_cc")(spark, sf_dir)
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
@@ -610,10 +611,10 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     corpus = docs.select("doc_id", "text").unionByName(pert)
-    hashed = corpus.select(
+    hashed = seam(corpus.select(
         "doc_id",
         phash_udf(F.col("text").cast("binary")).alias("chunks"),
-    ).localCheckpoint(eager=False)
+    ))
     bands = hashed.select(
         "doc_id", F.posexplode("chunks").alias("k", "chunk")
     )

@@ -41,7 +41,8 @@ from pyspark.sql import functions as F
 from minimised_impala_spark.extensions import dedup as _dedup  # noqa: F401
 from minimised_impala_spark.extensions import similarity as _similarity  # noqa: F401
 from minimised_impala_spark.queries import aggregates as _aggregates  # noqa: F401
-from minimised_impala_spark.queries.registry import ORACLES, QUERIES, query
+from minimised_impala_spark.queries.registry import ORACLES, fresh, query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.streaming import stateful as _stateful  # noqa: F401
 from minimised_impala_spark.tables import load_table
 
@@ -159,7 +160,7 @@ def _summarize(df: DataFrame, component: str) -> DataFrame:
 def pipeline_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for component, src, budget in _SCORECARD_COMPONENTS:
-        summary = _summarize(QUERIES[src](spark, sf_dir), component)
+        summary = _summarize(fresh(src)(spark, sf_dir), component)
         parts.append(
             summary.select(
                 F.lit(component).alias("component"),
@@ -375,10 +376,9 @@ def pipeline_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     # of the postings instead of a second corpus scan (2 scans / 5
     # exchanges → 1 scan / 3). Plan diff:
     # plans/r12/pipeline_source_overlap_matrix_{before,after}.txt.
-    posting = (
+    posting = seam(
         grams.groupBy("sh")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
-        .persist()
     )
     tot = (
         posting.select(F.explode("srcs").alias("source"))
@@ -505,7 +505,7 @@ def pipeline_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the two-snapshot union feeds the centroid components AND
     # the per-label counts — uncached both re-ran the scan + perturb
     # (4 scans in the executed plan; 1 after — r12, guide §5)
-    snap = emb.select(F.lit("a").alias("snap"), "label", "e").unionByName(b).persist()
+    snap = seam(emb.select(F.lit("a").alias("snap"), "label", "e").unionByName(b))
     comps = snap.select("snap", "label", F.posexplode("e").alias("dim", "x"))
     cents = comps.groupBy("label", "dim").agg(
         F.avg(F.when(F.col("snap") == "a", F.col("x"))).alias("ax"),
@@ -930,11 +930,10 @@ def pipeline_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the distinct (order, brand) table feeds FOUR consumers
     # (order count, singles, both self-join sides) — uncached each
     # re-ran the lineitem scan + broadcast join + distinct (r12, §5)
-    ob = (
+    ob = seam(
         li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .select(F.col("l_orderkey").alias("okey"), F.col("p_brand").alias("brand"))
         .distinct()
-        .persist()
     )
     n_orders = ob.agg(F.countDistinct("okey").cast("bigint").alias("n"))
     singles = ob.groupBy("brand").agg(F.count(F.lit(1)).cast("bigint").alias("n_b"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.tables import load_table
 
 K1 = 1.2
@@ -94,21 +95,18 @@ def _bm25_scores(
     # (Generate preserves partitioning), so the (doc_id, term) tf
     # aggregate, the per-doc dl aggregate, the matched⋈dl join and the
     # final per-doc score sum ALL reuse that partitioning with zero
-    # further fact exchanges. persist(), not localCheckpoint: the
+    # further fact exchanges. The seam must be a persist: its
     # InMemoryTableScan PRESERVES outputPartitioning (an ExistingRDD
-    # scan reports UnknownPartitioning, forcing dl to re-exchange) and
-    # is plan-build-time-free (the checkpoint RDD creation was ~0.3 s of
-    # serial driver work per fresh plan). On a persistent deployment
-    # this is exactly the doc_id-clustered posting index you'd write
-    # once and probe.
-    postings = (
+    # scan reports UnknownPartitioning, forcing dl to re-exchange). On a
+    # persistent deployment this is exactly the doc_id-clustered posting
+    # index you'd write once and probe.
+    postings = seam(
         docs.repartition(F.col("doc_id"))
         .select(
             "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()
     )
     dl = postings.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = dl.agg(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from minimised_impala_spark.extensions import vector_kernels as VK
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.shipping import order_after_python, ship_module_by_value
 from minimised_impala_spark.tables import load_table
 
@@ -229,14 +230,11 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature table before the self-join — without it both join
     # sides recompute the pandas-UDF stage (no ReusedExchange across
     # differently-aliased scans; measured 1.55 s → 1.14 s at sf0.1).
-    # persist, not localCheckpoint: the same single-compute reuse with
-    # none of the checkpoint-RDD creation cost (~0.1-0.3 s of serial
-    # driver work per fresh plan, r12). This is the engine analogue of
-    # building the LSH index once and probing it, exactly how a
-    # corpus-resident index behaves at 100 TB.
-    bucketed = emb.select(
+    # This is the engine analogue of building the LSH index once and
+    # probing it, exactly how a corpus-resident index behaves at 100 TB.
+    bucketed = seam(emb.select(
         "vec_id", VK.norm_vec("e").alias("e"), VK.lsh_bucket("e").alias("bucket")
-    ).persist()
+    ))
     a = bucketed.select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe"), "bucket"
     )
@@ -331,12 +329,12 @@ def sim_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: four consumers (each probe's query and candidate sides)
     # re-ran the norm+bucket ArrowEvalPython stage over the parquet scan
     # uncached (r12, guide §4.1/§5)
-    sig = emb.select(
+    sig = seam(emb.select(
         "vec_id",
         VK.norm_vec("e").alias("ne"),
         VK.lsh_bucket("e").alias("b0"),
         bucket1("e").alias("b1"),
-    ).persist()
+    ))
     a = sig.select(F.col("vec_id").alias("qid"), F.col("ne").alias("qe"), "b0", "b1")
     b = sig.select(
         F.col("vec_id").alias("nid"), F.col("ne").alias("ce"),
@@ -789,9 +787,8 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: FOUR consumers (codes, query set, rescore vectors, exact
     # ground truth) read the normalized corpus — without it each one
     # re-runs the norm_vec ArrowEvalPython stage over the parquet scan
-    # (r12 optimization, guide §4.1/§5: materialize the reused seam once;
-    # persist not localCheckpoint — plan-build-time-free, same reuse).
-    ne = emb.select("vec_id", VK.norm_vec("e").alias("ne")).persist()
+    # (r12 optimization, guide §4.1/§5: materialize the reused seam once).
+    ne = seam(emb.select("vec_id", VK.norm_vec("e").alias("ne")))
 
     # Codebooks train driver-side on a bounded deterministic sample
     # (vec_id-ordered, capped at 2048 vectors) with seeded numpy Lloyd's —
@@ -1530,12 +1527,10 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _vecd("embedding").alias("e")
     )
-    ne = emb.select("vec_id", VK.norm_vec("e").alias("ne"))
-    sig = emb.select("vec_id", VK.lsh_bucket("e").alias("bucket"))
     # materialize the UDF-produced tables once; both are reused on two
-    # join sides each (same reasoning as sim_lsh_ann's localCheckpoint)
-    ne = ne.localCheckpoint(eager=False)
-    sig = sig.localCheckpoint(eager=False)
+    # join sides each, so uncached each join side re-ran its Arrow UDF
+    ne = seam(emb.select("vec_id", VK.norm_vec("e").alias("ne")))
+    sig = seam(emb.select("vec_id", VK.lsh_bucket("e").alias("bucket")))
 
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
 

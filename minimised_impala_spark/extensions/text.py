@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.serde import pickle_module_by_value
 from minimised_impala_spark.tables import load_table
 
@@ -581,9 +582,9 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: bench_sh feeds both the per-bench sizes and the
     # intersection broadcast — uncached each re-ran the bench scan +
     # shingle explode (r12, guide §5)
-    bench_sh = bench.withColumn("toks", F.split("text", " ")).select(
+    bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
         "bench_id", F.explode(grams).alias("sh")
-    ).persist()
+    ))
     bsizes = bench_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))
     inter = (
         train_sh.join(F.broadcast(bench_sh.withColumnRenamed("sh", "bsh")),
@@ -652,9 +653,9 @@ def pipeline_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: three consumers (set-bit build, per-bench sizes, exact
     # rescore broadcast) each re-ran the bench scan + shingle explode
     # uncached (r12, guide §5)
-    bench_sh = bench.withColumn("toks", F.split("text", " ")).select(
+    bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
         "bench_id", F.explode(grams).alias("sh")
-    ).persist()
+    ))
     # phase 1: the compressed bench representation — distinct set bits
     set_bits = (
         _bloom_positions(bench_sh.select("sh").distinct()).select("pos").distinct()
@@ -1057,7 +1058,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     # persist the vocab census: it feeds the total AND the scoring
     # broadcast — uncached each re-ran the corpus census (r12, guide §5)
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).persist()
+    vocab = seam(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
     total = vocab.agg(F.sum("c").alias("n"))
     scored = (
         toks.join(F.broadcast(vocab), "tok")
@@ -1157,10 +1158,9 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # some bigram type) instead of re-grouping the corpus-sized bigram
     # stream a second time (r12, guide §2.3/§5; same rework as
     # text_kneser_ney_lm)
-    c12 = (
+    c12 = seam(
         bg.groupBy("bigram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-        .persist()
     )
     c1 = (
         c12.groupBy(
@@ -1305,9 +1305,9 @@ def text_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the min and the thresholds, thr feeds the keep-count join AND the
     # final report — uncached, each consumer re-ran the corpus census
     # (5 scans in the executed plan; 2 after — r12, guide §5)
-    census = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")).persist()
+    census = seam(docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
     n_min = census.agg(F.min("n_docs").alias("n_min"))
-    thr = (
+    thr = seam(
         census.crossJoin(F.broadcast(n_min))
         .select(
             "lang",
@@ -1316,7 +1316,6 @@ def text_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sqrt(F.col("n_min") * 1.0 / F.col("n_docs")) * 10000
             ).cast("bigint").alias("threshold"),
         )
-        .persist()
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -1621,18 +1620,18 @@ def pipeline_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist both one-row check frames: the orders aggregate feeds
     # three report rows and the lineitem one two — uncached, every
     # report row re-ran its full table aggregation (r12, guide §5)
-    o_checks = orders.agg(
+    o_checks = seam(orders.agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("o_orderkey").alias("nd"),
         F.sum((F.col("o_totalprice") <= 0).cast("bigint")).alias("bad_price"),
         F.sum(F.col("o_orderdate").isNull().cast("bigint")).alias("null_date"),
-    ).persist()
-    li_checks = li.agg(
+    ))
+    li_checks = seam(li.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
             ((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50)).cast("bigint")
         ).alias("bad_qty"),
-    ).persist()
+    ))
     orphans = li.join(
         orders.select("o_orderkey"),
         li["l_orderkey"] == F.col("o_orderkey"),
@@ -1861,7 +1860,7 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     os.rename(staging, state)
-    out = spark.read.parquet(state).orderBy("source").localCheckpoint(eager=True)
+    out = seam(spark.read.parquet(state).orderBy("source"), now=True)
     shutil.rmtree(state, ignore_errors=True)
     return out
 
@@ -1989,9 +1988,9 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the vocab census (feeds the total and the scoring
     # broadcast) and the per-doc scores (feed the prefix-scan rank and
     # the doc count) — uncached, 6 corpus scans; 2 after (r12, guide §5)
-    vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).persist()
+    vocab = seam(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")))
     total = vocab.agg(F.sum("c").alias("n"))
-    scored = (
+    scored = seam(
         toks.join(F.broadcast(vocab), "tok")
         .crossJoin(F.broadcast(total))
         .groupBy("doc_id")
@@ -2000,7 +1999,6 @@ def text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(-F.log(F.col("c") * 1.0 / F.col("n"))) / F.count(F.lit(1)), 4
             ).alias("avg_nll")
         )
-        .persist()
     )
     # rank by the (avg_nll, doc_id) TUPLE — avg_nll is already rounded
     # to 4 decimals so both engines order identical values; no packed
@@ -2156,13 +2154,12 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three totals (token counts + vocab size) derive from the persisted
     # vocab-sized census instead of three more corpus passes. 6 corpus
     # scans / 2 census exchanges → 2 scans / 1.
-    cc = (
+    cc = seam(
         tok.groupBy("t")
         .agg(
             F.count(F.lit(1)).alias("c_corpus"),
             F.count_if(F.col("source") == "src0").alias("c_target"),
         )
-        .persist()
     )
     tots = cc.agg(
         F.sum("c_corpus").alias("n_corpus"),
@@ -2716,9 +2713,9 @@ def text_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: bench_sh feeds both the per-bench sizes and the
     # intersection broadcast — uncached each re-ran the bench scan +
     # shingle explode (r12, guide §5)
-    bench_sh = bench.withColumn("toks", F.split("text", " ")).select(
+    bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
         "bench_id", F.explode(grams).alias("sh")
-    ).persist()
+    ))
     bsizes = bench_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))
     inter = (
         train_sh.join(
@@ -2885,14 +2882,13 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the top-k window partitionBy(doc_id) then reuse ONE
     # exchange, and the three consumers (stats, df, scored) read the
     # materialized index instead of re-running the explode+agg lineage.
-    postings = (
+    postings = seam(
         docs.repartition(F.col("doc_id"))
         .select(
             "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-        .persist()
     )
     stats = postings.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n")
@@ -2970,9 +2966,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the shingle relation once — first_seen and the join
     # back both consume it (same seam as the BM25 posting index;
     # measured 1.39 s → 1.22 s at sf0.1)
-    sh = shingles_of(docs.select("doc_id", "text")).localCheckpoint(
-        eager=False
-    )
+    sh = seam(shingles_of(docs.select("doc_id", "text")))
     first_seen = sh.groupBy("sh").agg(F.min("doc_id").alias("fd"))
     per_doc = (
         sh.join(first_seen, "sh")
@@ -3393,9 +3387,9 @@ def text_word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: three consumers (the document frequencies and both sides
     # of the co-occurrence self-join) each re-ran the scan + distinct-
     # token explode uncached (r12, guide §5)
-    tok = docs.select(
+    tok = seam(docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    ).persist()
+    ))
     n_docs = docs.agg(F.countDistinct("doc_id").alias("n"))
     df = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
     a = tok.select(F.col("doc_id").alias("d"), F.col("w").alias("w1"))
@@ -4095,10 +4089,9 @@ def text_kneser_ney_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans / 7 exchanges in the executed plan; 2 scans / 4 after). The
     # TYPE table is vocab-sized — the one LM artifact that is always
     # worth materializing at 100 TB (r12, guide §5).
-    c12 = (
+    c12 = seam(
         bg.groupBy("bigram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-        .persist()
     )
     # Every per-context / per-word model quantity derives from the TYPE
     # table c12 — never from a second pass over the occurrence stream:
@@ -4421,11 +4414,10 @@ def text_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the two vocab-sized census tables; the context totals
     # derive from the bigram TYPE table below (same rework as
     # text_bigram_lm / text_kneser_ney_lm — r12, guide §2.3/§5)
-    uni = (
+    uni = seam(
         t.select("source", F.explode("toks").alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     tot_u = uni.groupBy("source").agg(F.sum("c").alias("nt"))
     hu = (
@@ -4457,10 +4449,9 @@ def text_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w1_of = F.split_part(F.col("bigram"), F.lit("\t"), F.lit(1))
-    c12 = (
+    c12 = seam(
         bg.groupBy("source", "bigram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c12"))
-        .persist()
     )
     # c1(source, w1) = Σ_w2 c12 exactly — derived from the persisted
     # type table, not a second grouping of the corpus-sized stream
@@ -4558,11 +4549,10 @@ def text_jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # persist: three consumers (the totals and both pair-join sides)
     # each re-ran the corpus census uncached (r12, guide §5)
-    uni = (
+    uni = seam(
         docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        .persist()
     )
     tot = uni.groupBy("source").agg(F.sum("c").cast("bigint").alias("n"))
     a = uni.join(F.broadcast(tot), "source").select(

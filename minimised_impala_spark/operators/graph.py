@@ -14,7 +14,7 @@ jumping halves remaining path lengths, so rounds = O(log diameter) —
 dup-cluster graphs have tiny diameters, so 3-5 rounds in practice.
 
 Scale notes: every step is a key-partitioned shuffle of (id, comp) pairs
-— 16 bytes a row regardless of document size. `localCheckpoint` truncates
+— 16 bytes a row regardless of document size. An eager seam truncates
 the plan each round; without it the iterated lineage makes Catalyst
 re-analyze an exponentially growing tree (the classic iterative-DataFrame
 trap). Edge lists at 100 TB corpus scale are ~|near-dup pairs|, orders of
@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from minimised_impala_spark.seams import seam
 
 
 def connected_components(
@@ -39,7 +41,7 @@ def connected_components(
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    sym = sym.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=False)
+    sym = seam(sym.filter(F.col("a") != F.col("b")).distinct())
     labels = sym.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
 
     for _ in range(max_iter):
@@ -56,11 +58,8 @@ def connected_components(
         # 2. pointer jumping: comp''(v) = comp'(comp'(v)); min labels are
         # always node ids, so the self-join is total.
         ptr = stepped.select(F.col("id").alias("cid"), F.col("comp").alias("ccomp"))
-        jumped = (
-            stepped.join(ptr, stepped.comp == ptr.cid)
-            .select("id", F.col("ccomp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
+        hop = stepped.join(ptr, stepped.comp == ptr.cid)
+        jumped = seam(hop.select("id", F.col("ccomp").alias("comp")), now=True)
         changed = (
             jumped.alias("n")
             .join(labels.alias("o"), "id")
@@ -100,7 +99,7 @@ def pagerank(
     changes) plus one groupBy(dst) partial/final aggregation; rank state is
     8 bytes a node. The dangling term is a scalar aggregate crossJoined
     back (broadcast of one row), never a driver collect. Each round ends
-    in a ``localCheckpoint`` (same reasoning as ``connected_components``):
+    in an eager seam (same reasoning as ``connected_components``):
     without it Catalyst re-analyzes a plan tree that grows with every
     round — measured 7-15 s of pure driver-side analysis for 5 rounds on
     a 5-node graph — while the checkpoint caps each round's plan at one
@@ -112,14 +111,13 @@ def pagerank(
     # Loop-invariant and re-read by every round's job: materialize once
     # (lazily — the first round's action computes it) instead of
     # recomputing the upstream edge derivation K times.
-    norm_edges = (
+    norm_edges = seam(
         edges.join(outd, src)
         .select(
             F.col(src).alias("e_src"),
             F.col(dst).alias("e_dst"),
             (F.col(weight) / F.col("outw")).alias("share"),
         )
-        .localCheckpoint(eager=False)
     )
     ranks = nodes.join(n_nodes).select(
         F.col(node), (F.lit(1.0) / F.col("n_nodes")).alias("rank")
@@ -136,7 +134,7 @@ def pagerank(
         dangle = dangling_nodes.join(ranks, node).select("rank").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangle")
         )
-        ranks = (
+        ranks = seam(
             nodes.join(contrib, nodes[node] == contrib.e_dst, "left")
             .join(dangle)
             .join(n_nodes)
@@ -150,7 +148,7 @@ def pagerank(
                         + F.col("dangle") / F.col("n_nodes")
                     )
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            now=True,
         )
     return ranks

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from minimised_impala_spark.seams import seam
+
 _PID = "__prefix_pid"
 _LOCAL = "__prefix_local"
 _OFF = "__prefix_off"
@@ -62,16 +64,11 @@ def distributed_cumsum(
     # boundary a few rows apart and the offsets no longer match the
     # bucket contents (observed as a ±2 drift in the concurrency sweep:
     # rows that switched buckets get double/never-counted in the offset).
-    # persist, not the previous eager localCheckpoint (r12): caching
-    # gives the same compute-once guarantee (both branches read the one
-    # materialized RDD; block-level locks serialize racing tasks), but
-    # lazily — the eager checkpoint ran the whole range-exchange job at
-    # PLAN BUILD time (~0.5 s on the events fixture, serial driver-side
-    # cost on every fresh build; guide §1.2 per-task work, §5 caching).
-    ranged = (
+    # Both branches read the one materialized RDD; block-level locks
+    # serialize racing tasks.
+    ranged = seam(
         df.repartitionByRange(n, *[F.col(c) for c in order_cols])
         .withColumn(_PID, F.spark_partition_id())
-        .persist()
     )
     local_w = (
         Window.partitionBy(_PID)

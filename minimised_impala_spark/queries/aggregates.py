@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.queries.tpch import dsum
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.tables import load_table
 
 
@@ -394,8 +395,8 @@ def set_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     # persist both side sets: each feeds the INTERSECT and the EXCEPT —
     # uncached, every set op re-scanned orders (4 scans; 2 after — r12 §5)
-    f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey").persist()
-    o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey").persist()
+    f = seam(orders.filter(F.col("o_orderstatus") == "F").select("o_custkey"))
+    o = seam(orders.filter(F.col("o_orderstatus") == "O").select("o_custkey"))
     inter = f.intersect(o).agg(F.count(F.lit(1)).alias("n")).select(
         F.lit("intersect").alias("op"), "n"
     )
@@ -1209,12 +1210,11 @@ def agg_kll_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # untouched.
     # Plan diff: plans/r12/agg_kll_accuracy_report_{before,after}.txt.
     kk = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("kk")
-    pre = (
+    pre = seam(
         li.select(F.col("l_returnflag").alias("g"),
                   F.col("l_extendedprice").cast("double").alias("x"), kk)
         .withColumn("salt", F.pmod(F.col("kk"), F.lit(64)))
         .repartition(F.col("g"), F.col("salt"))
-        .persist()
     )
     raw = pre.select("g", "x")
     src = pre.select(
@@ -1367,7 +1367,7 @@ def agg_theta_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k, pmax = _THETA_K, float(_THETA_MAX)
     ev = load_table(spark, sf_dir, "events")
-    pri = (
+    pri = seam(
         ev.select(F.col("event_type").alias("et"), "user_id")
         .distinct()
         .withColumn(
@@ -1380,7 +1380,6 @@ def agg_theta_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sides; theta/prs feed every pairwise stage — uncached, the
         # distinct+md5 pass re-ran once per consumer (11 events scans in
         # the executed plan; 1 after)
-        .persist()
     )
     ranked = pri.select(
         "et",
@@ -1391,7 +1390,7 @@ def agg_theta_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rn"),
         F.count(F.lit(1)).over(W.partitionBy("et")).alias("exact_d"),
     )
-    sk = ranked.filter(F.col("rn") <= k).select("et", "user_id", "p").persist()
+    sk = seam(ranked.filter(F.col("rn") <= k).select("et", "user_id", "p"))
     theta = ranked.groupBy("et").agg(
         F.coalesce(
             F.max(F.when(F.col("rn") == k, F.col("p"))), F.lit(_THETA_MAX)
@@ -1404,10 +1403,9 @@ def agg_theta_sketch_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     tb = theta.select(
         F.col("et").alias("et_b"), F.col("th").alias("th_b"), F.col("exact_d").alias("db")
     )
-    prs = (
+    prs = seam(
         ta.join(tb, F.col("et_a") < F.col("et_b"))
         .select("et_a", "et_b", F.least("th_a", "th_b").alias("th"), "da", "db")
-        .persist()
     )
     sa = sk.select(F.col("et").alias("et_a"), F.col("user_id").alias("ua"), F.col("p").alias("pa"))
     sb = sk.select(F.col("et").alias("et_b"), F.col("user_id").alias("ub"), F.col("p").alias("pb"))
@@ -1585,7 +1583,7 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan and exchange (plain ReusedExchange does not fire here:
     # column pruning pushes different Projects below the two
     # repartition subtrees, de-canonicalizing them).
-    w = (
+    w = seam(
         li.select(
             F.col("l_returnflag").alias("g"),
             F.col("l_extendedprice").cast("double").alias("x"),
@@ -1593,7 +1591,6 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("b", F.floor(F.col("x") / 1000).cast("bigint"))
         .repartition(F.col("g"), F.col("b"))
-        .persist()
     )
     # phase 1: per-(group, bucket) weight totals + prefix base offsets
     bw = w.groupBy("g", "b").agg(F.sum("wt").alias("w_b"))

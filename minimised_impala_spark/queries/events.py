@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.tables import load_table
 
 
@@ -335,19 +336,17 @@ def events_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran once per downstream consumer (6 events scans in the
     # executed plan; 3, one selective scan per stage, after — r12,
     # guide §5). The per-user stage tables are ~|users| rows.
-    s1 = (
+    s1 = seam(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .persist()
     )
-    s2 = (
+    s2 = seam(
         ev.filter(F.col("event_type") == "view")
         .join(s1.withColumnRenamed("user_id", "u1"), F.col("u1") == F.col("user_id"))
         .filter(F.col("ts") >= F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .persist()
     )
     s3 = (
         ev.filter(F.col("event_type") == "purchase")
@@ -579,7 +578,7 @@ ORDER BY grain, bucket, event_type
 )
 def events_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    minute = (
+    minute = seam(
         ev.select(
             F.date_trunc("minute", "ts").alias("bucket"),
             "event_type",
@@ -590,14 +589,12 @@ def events_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist the two lower grains: each feeds its own report level
         # AND the next rollup — uncached, the minute aggregate re-ran
         # once per level (3 events scans; 1 after — r12, guide §5)
-        .persist()
     )
-    hour = (
+    hour = seam(
         minute.groupBy(
             F.date_trunc("hour", "bucket").alias("bucket"), "event_type"
         )
         .agg(F.sum("n").alias("n"), F.sum("sum_cents").alias("sum_cents"))
-        .persist()
     )
     day = (
         hour.groupBy(F.date_trunc("day", "bucket").alias("bucket"), "event_type")
@@ -1145,9 +1142,9 @@ def events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the deviation stream feeds BOTH the MAD percentile and
     # the final fence count — uncached, each re-ran the events scan,
     # the median percentile aggregate and the join (r12, guide §5)
-    dev = ev.join(med, "event_type").select(
+    dev = seam(ev.join(med, "event_type").select(
         "event_type", "value", "m", F.abs(F.col("value") - F.col("m")).alias("d")
-    ).persist()
+    ))
     mad = dev.groupBy("event_type").agg(
         F.percentile("d", F.lit(0.5)).alias("mad")
     )
@@ -1262,8 +1259,8 @@ def _cooccurrence_edges(ev: DataFrame) -> DataFrame:
     and events_link_prediction: distinct (event_type, hour) cells,
     deterministic 16-user cap per cell (WindowGroupLimit — the hot-cell
     density control that keeps the self-join out of the Σ occupancy²
-    regime), weight-4 thresholded edges. Callers localCheckpoint the
-    result before fanning out to multiple consumers."""
+    regime), weight-4 thresholded edges. Callers seam the result before
+    fanning out to multiple consumers."""
     cells_all = ev.selectExpr(
         "event_type", "date_trunc('hour', ts) AS h", "user_id"
     ).distinct()
@@ -1307,7 +1304,7 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     AQE broadcasts at fixture scale and shuffle-joins on the node key
     once the table outgrows the threshold — the r9 invariance matrix
     proves results are strategy-independent.  Returns (deg, oriented)
-    pre-checkpoint so callers (and the plan tests) see the full
+    unmaterialized so callers (and the plan tests) see the full
     lineage."""
     # selectExpr strings, not nested Column trees: every Column operator
     # is a py4j round trip and this helper alone cost ~0.5 s of the
@@ -1317,11 +1314,10 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # union+groupBy exchange over the edge list (r12, guide §5)
     # explode(array(u, v)) instead of a two-scan unionAll: ONE pass over
     # the cached edge list feeds the degree count (r13, guide §2.4)
-    deg = (
+    deg = seam(
         edges.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     oriented = (
         edges.join(deg.selectExpr("node AS u", "d AS da"), "u")
@@ -1338,18 +1334,12 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 @query("events_triangle_count", oracle=_TRIANGLE_ORACLE)
 def events_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    edges = _cooccurrence_edges(ev)
-    # four consumers below (degrees, orientation, edge count) re-run the
+    # three consumers below (degrees, orientation, edge count) re-run the
     # capped cell self-join without this; same seam as link prediction.
-    # persist(), not localCheckpoint: PySpark builds the checkpoint RDD
-    # at CALL time even with eager=False (~0.5 s of serial driver work
-    # each — 70% of this query's plan_build, profiled in NOTES r9),
-    # while persist is plan-time-free and gives the same single-compute
-    # reuse via InMemoryTableScan.
-    edges = edges.persist()
+    edges = seam(_cooccurrence_edges(ev))
     deg, oriented = _orient_edges(edges)
     # two arms read the oriented edge list (wedge build + closing edges)
-    oriented = oriented.persist()
+    oriented = seam(oriented)
     # Fused wedge build (r13, guide §2.4 — the "fused orient-join"
     # VERDICT r12 item 2 asked for): the old x⋈y self-join shuffled the
     # oriented list twice by s and paid a SortMergeJoin just to pair
@@ -1557,10 +1547,9 @@ def events_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 predicted links by neighbor-set Jaccard among wedge pairs
     not already connected in the co-occurrence graph."""
     ev = load_table(spark, sf_dir, "events")
-    edges = _cooccurrence_edges(ev)
     # the edge set feeds three consumers (adjacency both ways + the
     # anti-join); materialize it once instead of re-running the cell join
-    edges = edges.localCheckpoint(eager=False)
+    edges = seam(_cooccurrence_edges(ev))
     adj = edges.select(F.col("u").alias("node"), F.col("v").alias("neigh")).unionAll(
         edges.select(F.col("v").alias("node"), F.col("u").alias("neigh"))
     )
@@ -1905,11 +1894,10 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the per-user cohort table feeds the cohort sizes AND the
     # purchase join — uncached both re-ran the signup scan + aggregate
     # (r12, guide §5)
-    cohorts = (
+    cohorts = seam(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.date_trunc("week", F.min("ts")).cast("date").alias("cw"))
-        .persist()
     )
     cohort_size = cohorts.groupBy("cw").agg(F.count(F.lit(1)).alias("n_users"))
     # cohorts is per-USER — data-proportional, so no broadcast hint (the
@@ -2009,9 +1997,9 @@ def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     # persist: the purchase set has two consumers (the touch band-join
     # and the value fan-out) — uncached both re-ran the filtered events
     # scan (r12, guide §5)
-    purch = ev.filter(F.col("event_type") == "purchase").select(
+    purch = seam(ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
-    ).persist()
+    ))
     t = ev.filter(F.col("event_type") != "purchase").select(
         F.col("user_id").alias("t_user"),
         F.col("event_type").alias("channel"),
@@ -2275,7 +2263,7 @@ ORDER BY w
 def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(F.max("ts").alias("corpus_end"))
-    lives = (
+    lives = seam(
         ev.groupBy("user_id")
         .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
         .crossJoin(F.broadcast(bounds))
@@ -2291,7 +2279,6 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # persist: ~|users| rows feeding both the total count and the
         # per-week death/censor table (r12, guide §5)
-        .persist()
     )
     tot = lives.agg(F.count(F.lit(1)).alias("n_total"))
     wk = lives.groupBy(F.col("lw").alias("w")).agg(
@@ -2382,7 +2369,7 @@ ORDER BY event_type
 @query("events_ab_test_report", oracle=_AB_ORACLE)
 def events_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    users = (
+    users = seam(
         ev.select("user_id")
         .distinct()
         .select(
@@ -2401,7 +2388,6 @@ def events_ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist: the arm assignment feeds the per-arm sizes AND the
         # conversion join — uncached both re-ran the distinct+md5 pass
         # (r12, guide §5)
-        .persist()
     )
     arm_n = users.groupBy("arm").agg(F.count(F.lit(1)).alias("n"))
     # users is per-USER (data-proportional) — no broadcast hint (the
@@ -2758,17 +2744,17 @@ def events_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lag/lead window; seq feeds the state tallies AND the churn stream
     # — uncached, each consumer re-ran the events scan + distinct
     # (3 scans; 1 after — r12, guide §5)
-    uw = ev.select(
+    uw = seam(ev.select(
         "user_id", F.date_trunc("week", F.col("ts")).cast("date").alias("week")
-    ).distinct().persist()
+    ).distinct())
     maxw = uw.agg(F.max("week").alias("mw"))
     w = W.partitionBy("user_id").orderBy("week")
-    seq = uw.select(
+    seq = seam(uw.select(
         "user_id",
         "week",
         F.lag("week").over(w).alias("prev_w"),
         F.lead("week").over(w).alias("next_w"),
-    ).persist()
+    ))
     states = seq.groupBy("week").agg(
         F.count_if(F.col("prev_w").isNull()).cast("bigint").alias("n_new"),
         F.count_if(F.col("prev_w") == F.date_sub(F.col("week"), 7))
@@ -2926,9 +2912,9 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
     # persist: the purchase set has two consumers (the touch band-join
     # and the value fan-out) — uncached both re-ran the filtered events
     # scan (r12, guide §5)
-    purch = ev.filter(F.col("event_type") == "purchase").select(
+    purch = seam(ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
-    ).persist()
+    ))
     t = ev.filter(F.col("event_type") != "purchase").select(
         F.col("user_id").alias("t_user"),
         F.col("event_type").alias("channel"),
@@ -3042,7 +3028,7 @@ def events_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law regr fit broadcast onto every row. Output: (degree,
     n_nodes, slope_e4, r2_e4)."""
     ev = load_table(spark, sf_dir, "events")
-    edges = _cooccurrence_edges(ev).localCheckpoint(eager=False)
+    edges = seam(_cooccurrence_edges(ev))
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))

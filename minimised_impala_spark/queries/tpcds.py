@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.queries.tpch import _rev, davg, dsum, isum, ts
+from minimised_impala_spark.seams import seam
 from minimised_impala_spark.tables import load_table
 
 
@@ -786,14 +787,13 @@ def tpcds_q4_growth_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist: the year-total CTE feeds all four self-join arms —
     # uncached each arm re-ran the orders scan + aggregate (r12, §5);
     # this is the materialized year_total CTE every q4 plan uses
-    yr = (
+    yr = seam(
         o.groupBy(
             F.col("o_custkey").alias("c"),
             F.year("o_orderdate").cast("int").alias("y"),
             ch.alias("ch"),
         )
         .agg(dsum("o_totalprice", 2).alias("t"))
-        .persist()
     )
     f1 = yr.filter(F.col("ch") == "fast").select(
         F.col("c"), F.col("y").alias("y1"), F.col("t").alias("t_f1")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
+from minimised_impala_spark.seams import seam
 
 
 def _reconcile_stage_links(stage: str, expected: dict[str, str]) -> None:
@@ -702,7 +703,7 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    res = spark.read.parquet(out).orderBy("user_id").localCheckpoint(eager=True)
+    res = seam(spark.read.parquet(out).orderBy("user_id"), now=True)
     shutil.rmtree(out, ignore_errors=True)
     return res
 
@@ -799,7 +800,7 @@ def streaming_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming near-dup detection against a LANDED corpus — the production
 # shape of continuous ingest dedup (the batch formulation is
 # dedup_incremental; this runs the identical probe per micro-batch): the
-# corpus band index and shingle sets build ONCE (localCheckpoint — the
+# corpus band index and shingle sets build ONCE (a seam — the
 # persistable index), each arriving batch computes its own MinHash band
 # signatures with the same dedup.bands_of kernel, semi-joins the band
 # index for candidates, exact-rescores trigram Jaccard against only the
@@ -883,17 +884,15 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % 10 == 7
     static_docs = full.filter(~is_new)
     # the landed index: built once, probed per batch
-    static_bands = (
+    static_bands = seam(
         D.bands_of(static_docs)
         .select(F.col("doc_id").alias("corpus_id"), "band", "bsig")
-        .localCheckpoint(eager=False)
     )
-    static_sets = (
+    static_sets = seam(
         D.shingles_of(static_docs)
         .groupBy("doc_id")
         .agg(F.collect_set("sh").alias("s2"))
         .select(F.col("doc_id").alias("corpus_id"), "s2")
-        .localCheckpoint(eager=False)
     )
 
     out = f"/tmp/mis_sdlsh_{uuid.uuid4().hex[:12]}"
@@ -950,7 +949,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         q.stop()
     res = (
-        spark.read.parquet(out).orderBy("new_id").localCheckpoint(eager=True)
+        seam(spark.read.parquet(out).orderBy("new_id"), now=True)
         if os.path.exists(out)
         else spark.createDataFrame(
             [], "new_id bigint, match_id bigint, jaccard double"

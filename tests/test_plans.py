@@ -600,6 +600,7 @@ def test_plan_build_time_bounded(spark, sf_dir):
     expression construction."""
     import time as _time
 
+    from minimised_impala_spark.extensions.pipeline_audit import _SCORECARD_COMPONENTS
     from minimised_impala_spark.queries.registry import QUERIES, fresh
 
     budget_s = 1.0
@@ -623,20 +624,32 @@ def test_plan_build_time_bounded(spark, sf_dir):
         "events_pagerank_transitions", "pipeline_near_dedup",
         "dedup_cluster_cc",
     }
+    # composites build other builders fresh inside themselves (some of
+    # them skipped above): they get the budget on top of those builds
+    inner = {
+        "dedup_cluster_size_histogram": ["dedup_cluster_cc"],
+        "pipeline_quality_scorecard": [src for _, src, _ in _SCORECARD_COMPONENTS],
+    }
+
+    def build_s(name: str) -> float:
+        t0 = _time.perf_counter()
+        fresh(name)(spark, sf_dir)
+        return _time.perf_counter() - t0
+
+    def over_s(name: str) -> float:
+        base = sum(build_s(i) for i in inner.get(name, ()))
+        return build_s(name) - base
+
     slow: dict[str, float] = {}
     for name in QUERIES:
         if name.startswith(skip_prefixes) or name in skip:
             continue
-        t0 = _time.perf_counter()
-        fresh(name)(spark, sf_dir)
-        dt = _time.perf_counter() - t0
+        dt = over_s(name)
         if dt > budget_s:
             slow[name] = round(dt, 2)
     # ambient-load tolerance: re-measure offenders once, keep the min
     for name in list(slow):
-        t0 = _time.perf_counter()
-        fresh(name)(spark, sf_dir)
-        dt = _time.perf_counter() - t0
+        dt = over_s(name)
         if dt <= budget_s:
             del slow[name]
         else:

@@ -21,6 +21,7 @@ from hypothesis import strategies as st
 from minimised_impala_spark.extensions import vector_kernels as VK
 from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import fresh
+from minimised_impala_spark.seams import query_scope
 from minimised_impala_spark.shipping import drop_zip_finders
 from tools.plan_audit import physical_plan, pysort, python_nodes
 
@@ -50,7 +51,10 @@ def test_python_stage_not_resampled_by_sort(name, spark, sf_dir):
     """No Python stage feeds a global sort's range partitioner directly:
     the partitioner samples its input by running it, so that stage would
     run twice (shipping.order_after_python puts an exchange between)."""
-    plan = physical_plan(fresh(name)(spark, sf_dir))
+    # in a scope, so no earlier case's seam stands in for this plan's
+    # Python stage (sim_ann_recall_report persists sim_lsh_buckets' plan)
+    with query_scope():
+        plan = physical_plan(fresh(name)(spark, sf_dir))
     assert python_nodes(plan), f"{name} has no Python stage; drop it from the list"
     assert not pysort(plan), plan.toString()
 

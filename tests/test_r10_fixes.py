@@ -148,11 +148,20 @@ def test_decimal_to_double_cast_parity_past_2_53(spark):
 # New audit class for the r10 persist seams: a persist()ed seam must stay
 # CORRECT when its cached blocks are evicted (Spark recomputes evicted
 # partitions from lineage — safe only because the seam builds are
-# deterministic). Run the two swapped queries in a SUBPROCESS JVM whose
+# deterministic). Run the seamed queries in a SUBPROCESS JVM whose
 # unified memory is squeezed (tiny heap, minimal storage protection) so
 # cached blocks evict under execution pressure, and pin bit-identical
 # results vs the suite session. (A second in-process SparkSession would
-# silently reuse the existing JVM and its memory config.)
+# silently reuse the existing JVM and its memory config.) The last six
+# had lazy-checkpoint seams, whose blocks were never recomputed, before
+# every lazy seam became a persist.
+_EVICTED = (
+    "events_triangle_count", "dedup_threshold_sweep", "text_ngram_novelty",
+    "multimodal_phash_neardup", "sim_ann_recall_report", "events_link_prediction",
+    "events_degree_distribution", "streaming_dedup_lsh",
+)
+
+
 def test_persist_seams_correct_under_cache_eviction(spark, tmp_path):
     import json
     import subprocess
@@ -165,7 +174,7 @@ def test_persist_seams_correct_under_cache_eviction(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     want = {
         n: sorted(map(repr, map(tuple, QUERIES[n](spark, sf).collect())))
-        for n in ("events_triangle_count", "dedup_threshold_sweep")
+        for n in _EVICTED
     }
     script = tmp_path / "evict_probe.py"
     script.write_text(
@@ -185,12 +194,13 @@ spark.sparkContext.setLogLevel("ERROR")
 from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import QUERIES
 load_all()
+NAMES = %r
 out = {}
-for n in ("events_triangle_count", "dedup_threshold_sweep"):
+for n in NAMES:
     rows = sorted(map(repr, map(tuple, QUERIES[n](spark, "/root/testdata/sf0.001").collect())))
     out[n] = rows
 print("EVICT_RESULT " + json.dumps(out))
-"""
+""" % (_EVICTED,)
     )
     r = subprocess.run(
         [_sys.executable, str(script)], capture_output=True, text=True,

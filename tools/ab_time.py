@@ -24,6 +24,7 @@ def main() -> int:
     from minimised_impala_spark.session import local_test_session
     from minimised_impala_spark.queries import load_all
     from minimised_impala_spark.queries.registry import fresh
+    from minimised_impala_spark.seams import query_scope
     from minimised_impala_spark.tables import ALL_TABLES, load_table
 
     load_all()
@@ -38,15 +39,13 @@ def main() -> int:
     for n in names:
         best = (float("inf"), 0.0, 0.0, 0)
         for _ in range(draws):
-            # mirror bench.py: drop persisted intra-query intermediates so
-            # every draw recomputes (CacheManager matches fresh plans)
-            spark.catalog.clearCache()
-            c0 = compilations.getCount()
-            t0 = time.perf_counter()
-            df = fresh(n)(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.collect()
-            t2 = time.perf_counter()
+            with query_scope():
+                c0 = compilations.getCount()
+                t0 = time.perf_counter()
+                df = fresh(n)(spark, sf_dir)
+                t1 = time.perf_counter()
+                df.collect()
+                t2 = time.perf_counter()
             if t2 - t0 < best[0]:
                 best = (t2 - t0, t1 - t0, t2 - t1, compilations.getCount() - c0)
         print(f"{n:34s} sec={best[0]:.3f} plan={best[1]:.3f} exec={best[2]:.3f} "

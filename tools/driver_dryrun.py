@@ -2,8 +2,12 @@
 """Dry-run the driver's t2 correctness gate locally.
 
 Runs tests/oracle.compare over the registry in driver priority order at
-sf0.01 (the gate scale) with a plain SparkSession, mirroring what
-CORRECTNESS_r{N}.json will record. Use before ending a round:
+sf0.01 (the gate scale) with a plain SparkSession, recording what
+CORRECTNESS_r{N}.json will record. The gate collects the memoized
+__spark_entry__.queries() in one session with no scope, so a query may
+read an earlier query's seams (tests/test_seams.py pins that path); here
+each query is built fresh inside its own query_scope(). Use before
+ending a round:
 
     python tools/driver_dryrun.py           # first 50 (the driver cap)
     python tools/driver_dryrun.py 0 999     # everything
@@ -37,19 +41,19 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    from minimised_impala_spark.queries.registry import fresh
+    from minimised_impala_spark.seams import query_scope
     from tests.oracle import compare
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    names = list(qs)[lo:hi]
+    oracles = entrymod.oracle_sql()
+    names = list(entrymod.queries())[lo:hi]
     bad: list[str] = []
     empty: list[str] = []
     for i, n in enumerate(names, start=lo + 1):
         t0 = time.time()
         try:
-            # queries persist() intra-query intermediates; CacheManager
-            # entries outlive the query, so drop them between rows
-            spark.catalog.clearCache()
-            r = compare(n, spark, sf_dir, qs[n], oracles[n])
+            with query_scope():
+                r = compare(n, spark, sf_dir, fresh(n), oracles[n])
             ok = r["ok"] and r["strict_match"]
             print(
                 f"{i:3d} {n:34s} {'OK ' if ok else 'FAIL'} "

@@ -34,17 +34,19 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    from minimised_impala_spark.queries.registry import fresh
+    from minimised_impala_spark.seams import query_scope
     from tests.oracle import compare
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     bad: list[str] = []
     for sf in scales:
         sf_dir = os.path.join(base, sf)
         for n in names:
             t0 = time.time()
             try:
-                spark.catalog.clearCache()
-                r = compare(n, spark, sf_dir, qs[n], oracles[n])
+                with query_scope():
+                    r = compare(n, spark, sf_dir, fresh(n), oracles[n])
                 ok = r["ok"] and r["strict_match"]
                 print(
                     f"{sf:8s} {n:34s} {'OK ' if ok else 'FAIL'} "

@@ -153,6 +153,7 @@ def main() -> int:
 
     from minimised_impala_spark.queries import load_all
     from minimised_impala_spark.queries.registry import QUERIES, fresh
+    from minimised_impala_spark.seams import query_scope
 
     load_all()
     flagged: dict[str, list[str]] = {}
@@ -162,8 +163,8 @@ def main() -> int:
             continue
         static = not (name.startswith(SKIP_PREFIXES) or name in SKIP_EXACT)
         try:
-            spark.catalog.clearCache()
-            plan = physical_plan(fresh(name)(spark, sf_dir))
+            with query_scope():
+                plan = physical_plan(fresh(name)(spark, sf_dir))
         except Exception as ex:  # noqa: BLE001
             flagged.setdefault(name, []).append(f"ERROR {type(ex).__name__}")
             continue

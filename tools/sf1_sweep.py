@@ -91,6 +91,8 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from minimised_impala_spark.queries.registry import fresh
+    from minimised_impala_spark.seams import query_scope
     from tests.oracle import compare
 
     # Optional per-row wall clamp: $MIS_SF1_ROW_TIMEOUT seconds. DuckDB's
@@ -118,10 +120,8 @@ def main() -> int:
                 import signal
 
                 signal.alarm(row_timeout)
-            # queries persist() intra-query intermediates; CacheManager
-            # entries outlive the query, so drop them between rows
-            spark.catalog.clearCache()
-            r = compare(name, spark, sf1_dir, qs[name], osql[name])
+            with query_scope():
+                r = compare(name, spark, sf1_dir, fresh(name), osql[name])
         except Exception as ex:  # noqa: BLE001 — sweep must survive one row
             print(f"{i:3d} {name:40s} ERR {type(ex).__name__}: {ex}",
                   flush=True)
