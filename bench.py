@@ -1,9 +1,13 @@
 #!/usr/bin/env python
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the cores this process may run on. ``--sf1``
+runs the same suite at the 10x fixture ($SPARK_GRAFT_SF1_DIR, built by
+tools/make_sf1.py when missing).
 
-Prints ONE JSON line:
-{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints two JSON lines: the full record, then a compact metric line
+{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ..., "cpus": N}
+last, so a bounded tail capture of the log always holds it.
 
 The headline set covers the plan shapes that dominate 100 TB workloads:
 wide-agg scan (q1), selective scan (q6), multi-join star (q3/q5/q9/q18),
@@ -13,12 +17,16 @@ operators (LSH, not the quadratic baselines).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 HEADLINE = [
     "tpch_q1",
@@ -34,39 +42,24 @@ HEADLINE = [
     "sim_lsh_ann",
 ]
 
-# Timed and reported alongside, but NOT in the suite wall: these have no
-# r1 bar, and the suite total must stay comparable across rounds.
-# dedup_embedding joined in r4 after the block-outer-product rework (it
-# was deliberately excluded while it was a broadcast nested loop).
+# Timed and reported alongside, but not in the suite wall, so the wall
+# stays comparable with earlier artifacts as queries are added.
 EXTRA = [
     "dedup_embedding",
     "dedup_embedding_lsh",
     "sim_pq_ann",
     "text_bm25_topk",
     "text_chunk_overlap",
-    # round-6 additions
     "sim_filtered_ann",
     "text_domain_cap",
     "text_tfidf_keywords",
     "events_triangle_count",
-    # round-7 additions — one per new family: sketch-audit, dedup audit,
-    # two-phase weighted order statistic
     "agg_kll_accuracy_report",
     "dedup_threshold_sweep",
     "agg_weighted_percentile",
-    # late round-8 additions — one per new family: LM scoring with
-    # broadcast model tables, posting-bounded source matrix, dedup
-    # pre-flight with the checkpointed canon seam
     "text_kneser_ney_lm",
     "pipeline_source_overlap_matrix",
     "pipeline_dedup_impact_report",
-    # round-9 additions, completed to all five in r10 (VERDICT r9 #8 —
-    # their sf0.1->sf1 smoke ratios stay measured, not one-shot):
-    # derived-dim min-cost (window-in-one-exchange q2), integer-cents
-    # group-vs-global HAVING (q11), multi-collection correlated
-    # aggregate (q20), per-row ORDER BY/LIMIT + OUTER unnest
-    # (order_topn), collection-HOF existence (q21 fused to exists()
-    # lambdas, zero joins for the subqueries)
     "tpch_q2",
     "tpch_q11",
     "nested_tpch_q20",
@@ -75,227 +68,108 @@ EXTRA = [
 ]
 
 
-def _prior_round_bound(sf1_mode: bool) -> str:
-    """1.8x the newest committed bench artifact's total for this scale —
-    the cross-round sanity bound, derived instead of hardcoded so it
-    tracks the suite as queries are added and as the suite gets faster.
-    Reads both artifact shapes: the driver's wrapper ({"parsed":
-    {"value": ...}}) and the raw detail record ({"value": ...})."""
-    import glob
-    import re as _re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    pat = "BENCH_sf1_r*.json" if sf1_mode else "BENCH_r*.json"
+def _prior_round_bound(sf1_mode: bool, cpus: int, root: str = HERE) -> float:
+    """1.8x the total of the newest committed bench artifact taken at this
+    scale on ``cpus`` cores: the sanity bound on an attempt's total, derived
+    so it tracks the suite as it grows and speeds up. No bound (inf) when no
+    artifact was taken at ``cpus`` cores: wall time depends on the core
+    count. Reads the driver's wrapper ({"cpus": N, "parsed": {"value": ...}})
+    and the compact metric line ({"cpus": N, "value": ...})."""
     best_round, total = -1, None
-    for path in glob.glob(os.path.join(here, pat)):
-        # low-core scaling artifacts (BENCH_r12_c8.json) don't match:
-        # the bound must come from the same core count the suite runs at
-        m = _re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if rnd <= best_round:
-            continue
+    for path in glob.glob(os.path.join(root, "BENCH_sf1_r*.json" if sf1_mode else "BENCH_r*.json")):
+        m = re.search(r"_r(\d+)", os.path.basename(path))
         try:
             with open(path) as f:
                 doc = json.load(f)
-            val = (doc.get("parsed") or {}).get("value") or doc.get("value")
         except (OSError, ValueError):
             continue
-        if isinstance(val, (int, float)) and val > 0:
-            best_round, total = rnd, float(val)
-    return str(round(1.8 * total, 3)) if total is not None else "inf"
+        val = (doc.get("parsed") or {}).get("value") or doc.get("value")
+        if m and doc.get("cpus") == cpus and isinstance(val, (int, float)) and val > 0 \
+                and int(m.group(1)) > best_round:
+            best_round, total = int(m.group(1)), float(val)
+    return round(1.8 * total, 3) if total is not None else float("inf")
 
 
 def main() -> None:
-    # --sf1: run the identical suite against the 10x fixture
-    # (tools/make_sf1.py output) and emit the SAME parseable metric
-    # JSON, so round-over-round 10x scale numbers diff mechanically
-    # instead of living as prose in SCALE.md (VERDICT r7 directive #6).
-    # Default draws drop to 3 at sf1 — the suite is ~4x longer per draw
-    # and the best-of guard matters less when each draw is tens of
-    # seconds.
+    from minimised_impala_spark.queries import load_all
+    from minimised_impala_spark.queries.registry import run
+    from minimised_impala_spark.session import graft_cpus, local_test_session
+    from minimised_impala_spark.tables import ALL_TABLES, load_table
+
     sf1_mode = "--sf1" in sys.argv
     if sf1_mode:
         sf_dir = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/mis_sf1")
         if not os.path.isdir(sf_dir):
-            import subprocess
-
-            subprocess.run(
-                [
-                    sys.executable,
-                    os.path.join(os.path.dirname(__file__), "tools", "make_sf1.py"),
-                    sf_dir,
-                ],
-                check=True,
-            )
+            subprocess.run([sys.executable, os.path.join(HERE, "tools", "make_sf1.py"), sf_dir], check=True)
     else:
         sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = graft_cpus()
+    # fewer draws at sf1: each is ~4x longer, and the best-of guard matters
+    # less when a draw takes tens of seconds
     n_draws = int(os.environ.get("SPARK_GRAFT_DRAWS", "3" if sf1_mode else "5"))
 
-    from minimised_impala_spark.session import build_session
-    from minimised_impala_spark.queries import load_all
-    from minimised_impala_spark.queries.registry import fresh
-    from minimised_impala_spark.seams import query_scope
-
     load_all()
-    spark = build_session(
-        app_name="mis-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.ui.enabled": "false",
-            # the \r-refreshed console progress bar interleaves with stdout
-            # in captured logs and bloats the driver's tail window — the
-            # r6 metric line was clipped at the front because of it.
-            "spark.ui.showConsoleProgress": "false",
-            # local[N] runs executor threads inside the driver JVM — the
-            # 1g default heap is undersized for N=32 with broadcast joins
-            # (first observed as a broadcast OOM at the sf1 scale smoke).
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        },
-    )
+    spark = local_test_session("mis-bench", cpus)
 
-    # warm the JVM + parquet footers once (not counted). q6 warms the
-    # selective-scan shape; q1 additionally warms the WIDE-agg codegen
-    # shape — it runs first in the suite, so without this its 5 measured
-    # draws all pay whatever the cold window costs (BENCH_r05 showed q1
-    # exec_s 0.79 driver vs 0.38 quiet with identical code — VERDICT r5
-    # item 4).
-    from minimised_impala_spark.tables import ALL_TABLES, load_table
-
+    # Warm the JVM and parquet footers once, not counted. q6 warms the
+    # selective-scan shape and q1 the wide-agg codegen shape: q1 runs first
+    # in the suite, so unwarmed its draws would all pay the cold window.
     for t in ALL_TABLES:
         load_table(spark, sf_dir, t)
-    fresh("tpch_q6")(spark, sf_dir).collect()
-    fresh("tpch_q1")(spark, sf_dir).collect()
+    run(spark, "tpch_q6", sf_dir)
+    run(spark, "tpch_q1", sf_dir)
 
-    # best-of-5 per query: first pass pays JVM JIT/codegen compilation,
-    # later passes measure steady state — the regime a long-running engine
-    # (and the reference's daemon) actually serves queries in. Each
-    # iteration builds a FRESH DataFrame (registry.fresh): re-collecting a
-    # cached plan would reuse materialized shuffle outputs and measure
-    # incremental recomputation instead of query execution.
-    #
-    # Each query reports {sec, plan_build_s, exec_s}: plan_build_s is
-    # driver-side Python DataFrame construction (fresh(name)(...)), exec_s
-    # is .collect() — the cluster-execution analogue. Five iterations, not
-    # three: the shared host shows SPIKY ambient contention (same-code
-    # same-session exec_s observed 0.37 s and 1.15 s minutes apart), and
-    # more draws per query raise the odds of one quiet window each
-    # (measured: best-of-3 7.4-9.7 s across runs, best-of-5 5.8 s).
-    # The split exists because BENCH_r04 regressed 45% with zero plan
-    # changes and the aggregate number couldn't distinguish ambient
-    # driver-box load (inflates plan_build_s and exec_s uniformly) from
-    # an engine regression (moves exec_s of specific queries). The
-    # reference's per-operator runtime profile
-    # (be/src/util/runtime-profile.cc) is the analogue signal.
-    # Ambient-load guard (VERDICT r6 item 4): the shared host shows spiky
-    # external load that inflated ten untouched queries ~15-20% in r6 with
-    # byte-identical plans. Record the 1-min loadavg next to each
-    # best-of-5, and if the host looked busy when the draws started, run
-    # the 5 draws once more and keep the overall best — a quiet window
-    # minutes later usually exists. The threshold is generous because our
-    # own local[32] bursts contribute to load1 mid-suite.
+    # Best of n_draws per query: the first draw pays JIT and codegen
+    # compilation, later draws measure the steady state a long-running
+    # engine serves in. Each draw builds a fresh DataFrame: re-collecting a
+    # cached plan reuses materialized shuffle outputs and measures
+    # incremental recomputation. plan_build_s (driver-side Python) and
+    # exec_s (collect) are split because ambient load inflates both
+    # uniformly while an engine regression moves exec_s of specific queries.
+    # The shared host's load is spiky, so when the host looked busy as a
+    # query's draws started, the draws run once more and the best is kept.
     load_retry_threshold = float(os.environ.get("SPARK_GRAFT_LOAD_RETRY", "16"))
 
-    def _draws(name: str) -> tuple:
-        best = (float("inf"), 0.0, 0.0)
-        for _ in range(n_draws):
-            # the scope releases the draw's seams after the timed region
-            with query_scope():
-                t0 = time.perf_counter()
-                df = fresh(name)(spark, sf_dir)
-                t1 = time.perf_counter()
-                df.collect()
-                t2 = time.perf_counter()
-            if t2 - t0 < best[0]:
-                best = (t2 - t0, t1 - t0, t2 - t1)
-        return best
-
-    def best_of_5(name: str) -> dict:
+    def best_of(name: str) -> dict:
         load1 = os.getloadavg()[0]
-        best = _draws(name)
-        if load1 > load_retry_threshold:
-            best = min(best, _draws(name))
+        n = n_draws * (2 if load1 > load_retry_threshold else 1)
+        best = min((run(spark, name, sf_dir) for _ in range(n)), key=lambda r: r.build_s + r.exec_s)
         return {
-            "sec": round(best[0], 3),
-            "plan_build_s": round(best[1], 3),
-            "exec_s": round(best[2], 3),
+            "sec": round(best.build_s + best.exec_s, 3),
+            "plan_build_s": round(best.build_s, 3),
+            "exec_s": round(best.exec_s, 3),
             "load1": round(load1, 2),
         }
 
-    # Quiet-ambient gate (VERDICT r8 item 4, tightened r9 item 3,
-    # reworked r10 "What's wrong #3" + ADVICE r10): the r9 artifact
-    # passed the old <2 gate at load1 1.95 yet read 21% slower than a
-    # same-code run at 1.23; the r10 rework then MERGED per-query bests
-    # across quiet and noisy attempts while reporting min(start_load1)
-    # as the ambient bound — a composite no single run produced, with
-    # the bound claim inverted (a best draw could come from the
-    # noisiest attempt). Now the suite (a) WAITS for load1 to fall
-    # STRICTLY below the quiet target (1.5) before each attempt (load1
-    # has a 1-minute time constant, so a quiet window usually exists
-    # within a couple of minutes), (b) re-runs the whole suite up to N
-    # times until ≥2 attempts START quiet and pass the sanity bound
-    # below (r12), (c) publishes ONE COHERENT
-    # attempt — the quiet attempt with the lowest total (falling back
-    # to the overall-best attempt with quiet_ambient=false only if no
-    # attempt ever started quiet) — so ambient_load1 IS the start load
-    # of the run the numbers came from, and (d) records every
-    # attempt's total + start load so the judge sees the spread.
+    # Ambient gate. Load that starts or lands mid-suite inflates every
+    # number, plan_build_s included. So each attempt (a) waits for load1
+    # to fall strictly below the quiet target (load1 has a 1-minute time
+    # constant, so a quiet window usually comes within minutes); attempts
+    # (b) repeat until two start quiet and stay under the sanity bound, as
+    # one contaminated attempt is likely but two rarely are; and the run
+    # (c) publishes one coherent attempt, the quiet clean one with the
+    # lowest total, so ambient_load1 is the start load of the run the
+    # numbers came from, and (d) records every attempt's total and load.
     quiet_target = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "1.5"))
     max_attempts = int(os.environ.get("SPARK_GRAFT_QUIET_RETRIES", "4"))
     wait_budget_s = float(os.environ.get("SPARK_GRAFT_QUIET_WAIT", "150"))
-    # Mid-run contamination guard (r12, VERDICT r11 "What's wrong #2"):
-    # the r11 artifact STARTED quiet (load1 1.42) but external load
-    # landed mid-suite and inflated every number ~5-7x uniformly —
-    # including plan_build_s, pure driver-side Python, the environmental
-    # signature — and the one-coherent-attempt logic published it
-    # because the quiet-START check was the only gate. Two additions:
-    # (a) collect at least TWO quiet-start attempts (min() across them
-    # publishes the clean one — simultaneous contamination of both is
-    # what the sanity bound below catches), and (b) a cross-round
-    # sanity bound on the attempt total: recent quiet totals are
-    # 6.7-7.8 s at sf0.1 / ~23 s at sf1, so a quiet-START attempt
-    # exceeding ~1.8x that is flagged suspect=true and another attempt
-    # is drawn. Suspect attempts publish only if nothing better exists
-    # (quiet_ambient/suspect fields make that explicit to the judge).
     want_quiet = int(os.environ.get("SPARK_GRAFT_QUIET_ATTEMPTS", "2"))
     custom_dir = not sf1_mode and sf_dir != "/root/testdata/sf0.1"
-    # The bound derives from the PREVIOUS round's committed artifact
-    # (VERDICT r12 item 3 — the old hardcoded 14/45 s was a constant
-    # that had to be hand-bumped whenever the headline list grew, and a
-    # self-serving one at that): 1.8x the last clean quiet total, the
-    # same margin the constants encoded. Falls back to no bound when no
-    # prior artifact exists (first round at a new scale) — the
-    # quiet-start gate still applies, and `suspect` stays false-able
-    # only when a bound exists.
-    sane_total = float(
-        os.environ.get(
-            "SPARK_GRAFT_SANE_TOTAL",
-            "inf" if custom_dir else _prior_round_bound(sf1_mode),
-        )
-    )
+    sane = os.environ.get("SPARK_GRAFT_SANE_TOTAL")
+    sane_total = float(sane) if sane else float("inf") if custom_dir else _prior_round_bound(sf1_mode, cpus)
 
-    def _wait_for_quiet() -> float:
+    def _wait_for_quiet() -> None:
         deadline = time.time() + wait_budget_s
-        load1 = os.getloadavg()[0]
-        while load1 >= quiet_target and time.time() < deadline:
+        while os.getloadavg()[0] >= quiet_target and time.time() < deadline:
             time.sleep(5)
-            load1 = os.getloadavg()[0]
-        return load1
-
-    def _run_suite() -> tuple[dict, dict, float]:
-        start_load = os.getloadavg()[0]
-        d = {name: best_of_5(name) for name in HEADLINE}
-        e = {name: best_of_5(name) for name in EXTRA}
-        return d, e, start_load
 
     attempt_history: list[dict] = []
     attempts: list[tuple[float, dict, dict, float, bool]] = []
-    for attempt in range(1, max_attempts + 1):
+    for _ in range(max_attempts):
         _wait_for_quiet()
-        d, e, start_load = _run_suite()
+        start_load = os.getloadavg()[0]
+        d = {name: best_of(name) for name in HEADLINE}
+        e = {name: best_of(name) for name in EXTRA}
         tot = round(sum(v["sec"] for v in d.values()), 3)
         suspect = tot > sane_total
         attempt_history.append(
@@ -309,33 +183,19 @@ def main() -> None:
         attempts.append((tot, d, e, start_load, suspect))
         clean = [a for a in attempts if a[3] < quiet_target and not a[4]]
         if len(clean) >= want_quiet:
-            break  # enough quiet, sanity-bounded attempts to publish
+            break
 
-    clean_attempts = [a for a in attempts if a[3] < quiet_target and not a[4]]
     quiet_attempts = [a for a in attempts if a[3] < quiet_target]
-    pool = clean_attempts or quiet_attempts or attempts
-    total, detail, extra_detail, accepted_load, accepted_suspect = min(
-        pool, key=lambda a: a[0]
-    )
-    # median of the published pool alongside the min (VERDICT r12 item 3:
-    # min-of-clean biases slightly low; the median shows the spread the
-    # min was drawn from without changing the headline contract)
+    pool = clean or quiet_attempts or attempts
+    total, detail, extra_detail, accepted_load, accepted_suspect = min(pool, key=lambda a: a[0])
+    # the median of the published pool shows the spread the min came from
     pool_totals = sorted(a[0] for a in pool)
     mid = len(pool_totals) // 2
     median_total = round(
-        pool_totals[mid]
-        if len(pool_totals) % 2
-        else (pool_totals[mid - 1] + pool_totals[mid]) / 2,
-        3,
+        pool_totals[mid] if len(pool_totals) % 2 else (pool_totals[mid - 1] + pool_totals[mid]) / 2, 3
     )
-    times = {name: d["sec"] for name, d in detail.items()}
-    extra = {name: d["sec"] for name, d in extra_detail.items()}
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Two lines by design (VERDICT r6 item 3): the full record first, then
-    # a COMPACT metric line LAST so the driver's bounded tail capture can
-    # never clip the headline value again (BENCH_r06 "parsed": null — the
-    # single line outgrew the tail window as extra_queries grew).
     print(
         json.dumps(
             {
@@ -344,34 +204,30 @@ def main() -> None:
                 "unit": "sec",
                 "query_detail": detail,
                 "extra_query_detail": extra_detail,
-                # start load1 of the PUBLISHED attempt — every number
-                # above came from this one coherent run; quiet_ambient
-                # False is the explicit couldn't-get-quiet marker (no
-                # attempt started strictly below the 1.5 target)
+                # start load1 of the published attempt; quiet_ambient false:
+                # no attempt started below the quiet target
                 "ambient_load1": round(accepted_load, 2),
                 "quiet_ambient": accepted_load < quiet_target,
-                # True only if EVERY candidate exceeded the cross-round
-                # sanity bound — the explicit this-number-is-contaminated
-                # marker (r12; the r11 artifact would have carried it)
+                # true only if every candidate exceeded the sanity bound
                 "suspect": accepted_suspect,
                 "sane_total_bound": None if sane_total == float("inf") else sane_total,
                 "median_total_sec": median_total,
                 "attempt_history": attempt_history,
                 "sf": sf_val,
+                "cpus": cpus,
             }
         )
     )
     print(
         json.dumps(
             {
-                "metric": "headline_suite_wall_sec_sf1"
-                if sf1_mode
-                else "headline_suite_wall_sec",
+                "metric": "headline_suite_wall_sec_sf1" if sf1_mode else "headline_suite_wall_sec",
                 "value": total,
                 "unit": "sec",
-                "queries": times,
-                "extra_queries": extra,
+                "queries": {name: d["sec"] for name, d in detail.items()},
+                "extra_queries": {name: d["sec"] for name, d in extra_detail.items()},
                 "sf": sf_val,
+                "cpus": cpus,
             }
         )
     )

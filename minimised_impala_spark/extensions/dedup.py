@@ -1840,7 +1840,7 @@ def dedup_minhash_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame
     # the whole corpus→shingle→hash→signature pipeline a second time —
     # MinHash mins are insensitive to shingle multiplicity, so the
     # distinct-shingle signature is bit-identical to bands_of's.
-    # Plan: 16 corpus scans → 1 (audit: tools/plan_audit.py).
+    # Plan: 16 corpus scans → 1 (audit: python tools/mis.py audit).
     sh = seam(shingles(spark, sf_dir))
     hashed = sh.select("doc_id", _shingle_hash(F.col("sh")))
     sig = seam(hashed.groupBy("doc_id").agg(

@@ -20,11 +20,13 @@ caller, so it is built outside every scope and its seams are never released.
 
 from __future__ import annotations
 
+import time
 from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
-from minimised_impala_spark.seams import unscoped
+from minimised_impala_spark.seams import query_scope, unscoped
 from minimised_impala_spark.session import session_key
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -45,6 +47,29 @@ def fresh(name: str) -> QueryFn:
     correctness runs, interactive reuse) where it only avoids redundant
     plan construction."""
     return QUERIES[name].__wrapped__
+
+
+class Run(NamedTuple):
+    """One collected run of a registry query."""
+
+    df: DataFrame  # executed: its plan carries the run's operator metrics
+    columns: list[str]
+    rows: list[Row]
+    build_s: float  # driver-side DataFrame construction
+    exec_s: float  # collect()
+
+
+def run(spark: SparkSession, name: str, sf_dir: str) -> Run:
+    """Build ``name`` fresh and collect it inside its own query scope, so
+    its seams are released before it returns and it reads none of an
+    earlier query's. Bench draws and every tool run go through here."""
+    with query_scope():
+        t0 = time.perf_counter()
+        df = fresh(name)(spark, sf_dir)
+        t1 = time.perf_counter()
+        rows = df.collect()
+        t2 = time.perf_counter()
+    return Run(df, df.columns, rows, t1 - t0, t2 - t1)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

@@ -94,15 +94,25 @@ def build_session(
     return spark
 
 
-def local_test_session(app_name: str = "mis-test") -> SparkSession:
-    """Session preset for local[N] correctness/bench runs."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def graft_cpus() -> int:
+    """Cores for a local session: $SPARK_GRAFT_CPUS, else the cores this
+    process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def local_test_session(app_name: str = "mis-test", cpus: int | None = None) -> SparkSession:
+    """Session preset for local[N] correctness/bench runs (N = ``cpus``,
+    else ``graft_cpus()``)."""
+    cpus = cpus or graft_cpus()
     return build_session(
         app_name=app_name,
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
             "spark.ui.enabled": "false",
+            # the \r-refreshed console progress bar interleaves with stdout
+            # and clips a captured log's tail, where the metric line is
+            "spark.ui.showConsoleProgress": "false",
         },
     )

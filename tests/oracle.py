@@ -188,9 +188,14 @@ def canon_rows_strict(columns: list[str], rows: list[tuple]) -> list[tuple]:
 def compare(name: str, spark, sf_dir: str, query_fn, oracle_sql: str) -> dict:
     """Run engine + oracle; return a result dict (ok/counts/diffs)."""
     sdf = query_fn(spark, sf_dir)
+    return compare_rows(name, sdf, sdf.collect(), sf_dir, oracle_sql)
+
+
+def compare_rows(name: str, sdf, rows: list, sf_dir: str, oracle_sql: str) -> dict:
+    """``compare`` over ``rows`` already collected from ``sdf``."""
     s_cols = list(sdf.columns)
     s_types = dict(sdf.dtypes)
-    s_rows = [tuple(r) for r in sdf.collect()]
+    s_rows = [tuple(r) for r in rows]
 
     con = duckdb_connect(sf_dir)
     try:

@@ -3,7 +3,7 @@
 The driver hash is full-precision, so any query whose float output depends
 on Spark's physical plan (partial-agg tree, input splits, shuffle fan-out)
 is one parallelism change away from a red driver row — the class
-tools/invariance_sweep.py sweeps registry-wide and the nested-parity suite
+`python tools/mis.py invariance` sweeps registry-wide and the nested-parity suite
 first caught on tpch_q1's k=6 sum_charge (fixed with isum, tpch.py).
 
 This subset re-runs the float-heaviest headline queries under flipped

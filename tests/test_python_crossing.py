@@ -23,12 +23,12 @@ from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import fresh
 from minimised_impala_spark.seams import query_scope
 from minimised_impala_spark.shipping import drop_zip_finders
-from tools.plan_audit import physical_plan, pysort, python_nodes
+from tools.mis import physical_plan, pysort, python_nodes
 
 load_all()
 
 # Every registry query with a Python evaluation node in its physical plan
-# (tools/plan_audit.py lists them; the test below fails for an entry that
+# (`python tools/mis.py audit` lists them; the test below fails for an entry that
 # stops crossing into Python).
 PYTHON_QUERIES = (
     "dedup_embedding", "dedup_embedding_lsh", "dedup_semdedup",

@@ -6,6 +6,8 @@ reintroduces the old behavior fails here with a named message.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -15,6 +17,8 @@ from minimised_impala_spark.sources.formats import (
     read_mixed_partitions,
     write_parquet,
 )
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # --------------------------------------------------------------------------
@@ -180,7 +184,7 @@ def test_persist_seams_correct_under_cache_eviction(spark, tmp_path):
     script.write_text(
         """
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %r)
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]").appName("mis-evict")
     .config("spark.sql.shuffle.partitions", "2")
@@ -200,7 +204,7 @@ for n in NAMES:
     rows = sorted(map(repr, map(tuple, QUERIES[n](spark, "/root/testdata/sf0.001").collect())))
     out[n] = rows
 print("EVICT_RESULT " + json.dumps(out))
-""" % (_EVICTED,)
+""" % (_REPO, _EVICTED)
     )
     r = subprocess.run(
         [_sys.executable, str(script)], capture_output=True, text=True,

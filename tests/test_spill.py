@@ -8,15 +8,18 @@ small-heap JVM."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_external_sort_spills_and_completes():
     script = textwrap.dedent(
-        """
-        import sys; sys.path.insert(0, "/root/repo")
+        f"""
+        import sys; sys.path.insert(0, {_REPO!r})
         from pyspark.sql import SparkSession, functions as F
         spark = (SparkSession.builder.master("local[4]")
                  .config("spark.driver.memory", "600m")
@@ -61,8 +64,8 @@ def test_hash_aggregate_spills_and_completes():
     heap: HashAggregate must fall back to sort-based aggregation
     (spill size > 0) and still return the exact group count."""
     script = textwrap.dedent(
-        """
-        import sys; sys.path.insert(0, "/root/repo")
+        f"""
+        import sys; sys.path.insert(0, {_REPO!r})
         from pyspark.sql import SparkSession, functions as F
         spark = (SparkSession.builder.master("local[4]")
                  .config("spark.driver.memory", "500m")
@@ -107,8 +110,8 @@ def test_join_with_distinct_agg_spills_and_completes():
     (buffered-block-mgr.cc races were the reference's target; here we pin
     that Spark's external join/agg paths engage and the answer is exact)."""
     script = textwrap.dedent(
-        """
-        import sys; sys.path.insert(0, "/root/repo")
+        f"""
+        import sys; sys.path.insert(0, {_REPO!r})
         from pyspark.sql import SparkSession, functions as F
         spark = (SparkSession.builder.master("local[4]")
                  .config("spark.driver.memory", "600m")

@@ -16,9 +16,12 @@ test_hive_udf.py).
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_compute_stats_flips_join_to_broadcast(tmp_path):
@@ -27,7 +30,7 @@ def test_compute_stats_flips_join_to_broadcast(tmp_path):
         textwrap.dedent(
             f"""
             import sys
-            sys.path.insert(0, "/root/repo")
+            sys.path.insert(0, {_REPO!r})
             from pyspark.sql import SparkSession
 
             spark = (SparkSession.builder.master("local[2]")
