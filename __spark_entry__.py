@@ -31,41 +31,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["tpch_q1"](spark, "/root/testdata/sf0.001")
 
 
-# The driver verifies only the first 50 registry entries per round.
-# Round-12 queue, per the protocol (changed-code rows first, then
-# rotation onto the oldest green rows):
-#   1-26  changed in r12: the SF-proportional dim-broadcast de-hint tier
-#         (VERDICT r11 "What's wrong #1" / directive #1) — every
-#         F.broadcast on part/supplier/customer (and q23's freq/best
-#         data-proportional aggregates) dropped across tpch_q2/q11, the
-#         21 tpcds star rows, and nested_tpch_q18/q20/q21; strategy is
-#         now stats/AQE's choice (broadcast at fixture scale, shuffled
-#         hash at 100x), pinned by
-#         tests/test_plans.py::test_tpc_dim_joins_carry_no_sf_hint and
-#         the invariance sweep;
-#   27    pipeline_near_dedup — rescore reworked to one array_intersect
-#         per candidate pair (directive #5: the shingle-level self-join
-#         materialized k^2 rows per hot shingle — the sf10 worker OOM);
-#   28    dedup_embedding — hard row envelope on the by-design-quadratic
-#         exact path (directive #6); the in-envelope plan is unchanged;
-#   29-30 carried from the r11 queue tail: events_ab_test_report
-#         (hint-only, invariance-proven, four-scale strict in NOTES r11)
-#         and dedup_simhash (plan-BUILD string-expr refactor,
-#         strict-verified at sf0.001/0.01/sf1 in NOTES r11);
-#   31    agg_isum_wide_boundary — NEW this round (directive #8's one
-#         honest gap): pins the DECIMAL(38,0) fallback accumulator
-#         (isum_wide) exact at ~5e19-unit group sums, 5x past the
-#         BIGINT wrap point, via an exact-digit-string compare;
-#   32-35 changed mid-r12: agg_pivot, agg_filter_clause,
-#         ddl_ctas_roundtrip, ddl_bucketed_join — four more sf10-sweep
-#         margin findings (double sums over SF-proportional groups one
-#         rounded digit off at 100x), fixed with the exact accumulators
-#         on both sides and four-scale strict-verified;
-#   36-50 rotation: the 15 OLDEST r5-era rows that still fit (queue-tail
-#         age order) — the remaining 30 r5-era names follow at 51+ for
-#         r13.
+# The driver verifies only the first 50 names, in this order; the rest
+# follow in registration order (_ordered_names).
 _PRIORITY = [
-    # --- changed in round 12: the dim-broadcast de-hint tier ---
     "tpch_q2", "tpch_q11",
     "tpcds_q3_star", "tpcds_q47_monthly_lag", "tpcds_q53_deviation",
     "tpcds_q59_dow_ratio", "tpcds_q61_promo_ratio",
@@ -75,26 +43,17 @@ _PRIORITY = [
     "tpcds_q43", "tpcds_q46", "tpcds_q52", "tpcds_q55", "tpcds_q63",
     "tpcds_q89", "tpcds_q79", "tpcds_q96",
     "nested_tpch_q18", "nested_tpch_q20", "nested_tpch_q21",
-    # --- changed in round 12: dedup scale fixes ---
     "pipeline_near_dedup", "dedup_embedding",
-    # --- carried from the r11 queue tail ---
     "events_ab_test_report", "dedup_simhash",
-    # --- new in round 12: the isum-fallback boundary audit ---
     "agg_isum_wide_boundary",
-    # --- changed mid-r12: four more sf10-sweep margin fixes (exact
-    # split-long / wide-decimal sums on SF-proportional groups) ---
     "agg_pivot", "agg_filter_clause",
     "ddl_ctas_roundtrip", "ddl_bucketed_join",
-    # --- rotation: the 15 oldest r5-era rows that still fit ---
     "dedup_embedding_lsh", "udf_java_jar",
     "agg_boolean_suite", "agg_salted_skew", "agg_unpivot",
     "ddl_alter_truncate", "ddl_insert_partitions", "ddl_load_data",
     "ddl_sql_function", "ddl_view_cte", "dedup_containment",
     "dedup_paragraph", "dedup_semdedup", "dedup_span_ngram",
     "dialect_broadcast_hint",
-    # --- past the 50-cap: the remaining r5-era block, oldest-first,
-    # queued for the r13 rotation (the four youngest rotation rows moved
-    # here when the mid-round margin fixes took their slots) ---
     "events_mad_anomaly", "events_pagerank_transitions",
     "events_pattern_match", "events_scd2_intervals",
     "events_session_window_native", "events_time_decay", "join_lateral", "join_salted_skew",
@@ -108,7 +67,6 @@ _PRIORITY = [
     "text_quality_classifier", "text_token_budget_mix",
     "text_weighted_sample", "udtf_longest_streak",
     "udtf_sentence_split",
-    # remaining greens follow in registration order via _ordered_names
 ]
 
 

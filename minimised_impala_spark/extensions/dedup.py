@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from minimised_impala_spark.queries.registry import fresh, query
+from minimised_impala_spark.queries.registry import QUERIES, query
 from minimised_impala_spark.seams import seam
 from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
@@ -2458,7 +2458,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of duplicate-cluster sizes from the CC collapse, with
     the removable-doc count (size - 1 per cluster under keep-one).
     Output: (cluster_size, n_clusters, n_docs, n_removable)."""
-    labels = fresh("dedup_cluster_cc")(spark, sf_dir)
+    labels = QUERIES["dedup_cluster_cc"](spark, sf_dir)
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )

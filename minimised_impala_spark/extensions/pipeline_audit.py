@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from minimised_impala_spark.extensions import dedup as _dedup  # noqa: F401
 from minimised_impala_spark.extensions import similarity as _similarity  # noqa: F401
 from minimised_impala_spark.queries import aggregates as _aggregates  # noqa: F401
-from minimised_impala_spark.queries.registry import ORACLES, fresh, query
+from minimised_impala_spark.queries.registry import ORACLES, QUERIES, query
 from minimised_impala_spark.seams import seam
 from minimised_impala_spark.streaming import stateful as _stateful  # noqa: F401
 from minimised_impala_spark.tables import load_table
@@ -160,7 +160,7 @@ def _summarize(df: DataFrame, component: str) -> DataFrame:
 def pipeline_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for component, src, budget in _SCORECARD_COMPONENTS:
-        summary = _summarize(fresh(src)(spark, sf_dir), component)
+        summary = _summarize(QUERIES[src](spark, sf_dir), component)
         parts.append(
             summary.select(
                 F.lit(component).alias("component"),

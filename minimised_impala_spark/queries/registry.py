@@ -5,17 +5,11 @@
 semantics aren't SQL-expressible — the driver then records a weaker
 rows-only check).
 
-Registered callables memoize the *logical plan* per (session, sf_dir):
-re-issuing the same query returns the already-analyzed DataFrame, so a
-repeat run pays execution only. Building + analyzing a large DataFrame
-graph (py4j expression construction, Catalyst analysis) costs up to ~1 s
-for the wide ANN/dedup pipelines — measured sim_lsh_ann at sf0.1:
-~1.2 s/call rebuilt vs 0.09 s re-executing the cached plan. This is plan
-caching for a fixed query library (the reference daemon likewise reuses
-compiled fragments/metadata across identical queries,
-be/src/runtime/query-exec-mgr.h) — results are still computed per
-collect(). A memoized DataFrame outlives the query scope of its first
-caller, so it is built outside every scope and its seams are never released.
+Each call builds a new DataFrame, so two calls share no executed state
+(materialized shuffle outputs, seams) and a query's plan does not depend on
+what ran before it. Inside ``query_scope()`` a query's seams are persisted
+until the scope exits; outside every scope, the driver contract's path,
+they are lazy checkpoints freed with the DataFrame (``seams``).
 """
 
 from __future__ import annotations
@@ -26,27 +20,18 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
-from minimised_impala_spark.seams import query_scope, unscoped
-from minimised_impala_spark.session import session_key
+from minimised_impala_spark.seams import query_scope
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
 
 def fresh(name: str) -> QueryFn:
-    """The undecorated builder — constructs a NEW DataFrame per call.
-
-    Benchmarks must use this: re-collecting a cached DataFrame lets Spark
-    reuse materialized shuffle outputs (skipped stages), which measures
-    incremental recomputation, not query execution (observed 10× at
-    sf0.1). The plan cache is for single-issue contexts (driver
-    correctness runs, interactive reuse) where it only avoids redundant
-    plan construction."""
-    return QUERIES[name].__wrapped__
+    """``QUERIES[name]``, under the name perfbench's draws and the tests
+    look builders up by."""
+    return QUERIES[name]
 
 
 class Run(NamedTuple):
@@ -60,12 +45,12 @@ class Run(NamedTuple):
 
 
 def run(spark: SparkSession, name: str, sf_dir: str) -> Run:
-    """Build ``name`` fresh and collect it inside its own query scope, so
+    """Build ``name`` and collect it inside its own query scope, so
     its seams are released before it returns and it reads none of an
     earlier query's. Bench draws and every tool run go through here."""
     with query_scope():
         t0 = time.perf_counter()
-        df = fresh(name)(spark, sf_dir)
+        df = QUERIES[name](spark, sf_dir)
         t1 = time.perf_counter()
         rows = df.collect()
         t2 = time.perf_counter()
@@ -76,19 +61,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query, optionally with its oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = (session_key(spark), sf_dir, name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                with unscoped():
-                    df = fn(spark, sf_dir)
-                _PLAN_CACHE[key] = df
-            return df
-
-        cached.__name__ = fn.__name__
-        cached.__doc__ = fn.__doc__
-        cached.__wrapped__ = fn
-        QUERIES[name] = cached
+        QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle.strip()
         return fn

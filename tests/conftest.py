@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from minimised_impala_spark.seams import query_scope
 from minimised_impala_spark.session import build_session
 
 SF_DIR = os.environ.get("MIS_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -26,6 +27,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def in_query_scope():
+    """Run the test inside a query scope, as ``registry.run`` builds: its
+    seams are persists, whose ``InMemoryTableScan`` prints the sub-plan and
+    keeps its partitioning, and they are released when the test ends."""
+    with query_scope():
+        yield
 
 
 # Columns each fixture table must expose — queries/extensions reference

@@ -18,10 +18,7 @@ import pytest
 from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import fresh
 
-# Plan-shape assertions must inspect FRESHLY BUILT queries: the registry's
-# plan cache returns DataFrames that earlier tests may have executed, and
-# an executed AQE plan prints its finalized form (isFinalPlan=true,
-# runtime-converted joins), not the compile-time shape pinned here.
+pytestmark = pytest.mark.usefixtures("in_query_scope")
 
 load_all()
 
@@ -258,7 +255,6 @@ def test_rollup_hierarchy_reuses_minute_exchange(spark, sf_dir):
     FileScan print carries the same output attributes (cached subtrees
     print once per consumer; distinct attribute ids would mean real
     re-scans)."""
-    spark.catalog.clearCache()
     df = fresh("events_rollup_hierarchy")(spark, sf_dir)
     df.collect()  # cache/reuse finalizes only at execution
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -693,10 +689,6 @@ def test_quality_calibration_uses_prefix_scan(spark, sf_dir):
     two-phase prefix scan (one range exchange), never a partition-less
     sort window over the corpus; the corpus-count join is a one-row
     broadcast."""
-    # earlier tests may have materialized this query's persisted
-    # subtree; a fresh build would cache-substitute it and change the
-    # printed shape — clear first so the pin sees the cold plan
-    spark.catalog.clearCache()
     plan = _physical(fresh("text_quality_calibration")(spark, sf_dir))
     # two distinct range exchanges: the prefix scan's (cached by the
     # operator's persist, printed per consumer branch but computed once)
@@ -812,8 +804,6 @@ def test_shard_assignment_uses_prefix_scan(spark, sf_dir):
     """pipeline_shard_assignment: the running token total is the
     two-phase prefix scan (one range exchange), and the totals/width
     table is a one-row broadcast."""
-    # clear first: see test_quality_calibration_uses_prefix_scan
-    spark.catalog.clearCache()
     plan = _physical(fresh("pipeline_shard_assignment")(spark, sf_dir))
     # TWO distinct range exchanges: the prefix scan's (cached by the
     # operator's persist — printed once per consumer branch, computed

@@ -4,20 +4,24 @@ materialization in the package goes through ``seams.seam``."""
 
 from __future__ import annotations
 
+import gc
 import os
+import random
 import re
 import sys
 import threading
+import time
 from pathlib import Path
 from types import SimpleNamespace
 
+import __spark_entry__ as entry
 import minimised_impala_spark
 from minimised_impala_spark.queries import load_all
-from minimised_impala_spark.queries.registry import _PLAN_CACHE, ORACLES, QUERIES, fresh
+from minimised_impala_spark.queries.registry import ORACLES, QUERIES, fresh
 from minimised_impala_spark.seams import query_scope, seam
-from minimised_impala_spark.session import session_key
 
-from tests.oracle import compare
+from tests.oracle import compare, compare_rows
+from tools.mis import PYTHON_NODE
 
 load_all()
 
@@ -50,9 +54,6 @@ def test_query_does_not_read_previous_querys_seams(spark, sf_dir):
     """dedup_containment and dedup_minhash_accuracy_report seam the same
     shingle relation. After the first query's scope closes, the second
     must compute both of its own seams rather than read the first's."""
-    # drop cache entries other tests' memoized plans left, so only the two
-    # scoped runs below decide what is cached
-    spark.catalog.clearCache()
     with query_scope():
         fresh("dedup_containment")(spark, sf_dir).collect()
     before = _persistent_ids(spark)
@@ -73,26 +74,26 @@ def test_repeated_runs_leave_nothing(spark, sf_dir):
         assert not _persistent_ids(spark) - before
 
 
-def test_unscoped_registry_reads_earlier_querys_seams(spark, sf_dir):
-    """``__spark_entry__.queries()`` hands out the memoized QUERIES, run
-    with no scope, so a query's seams stay cached for the session and a
-    later query with the same sub-plan reads them: sim_lsh_buckets scans the cached LSH
-    signature sim_ann_recall_report built. Both stay oracle-strict."""
-    for name in ("sim_ann_recall_report", "sim_lsh_buckets"):
-        _PLAN_CACHE.pop((session_key(spark), sf_dir, name), None)
-    _strict("sim_ann_recall_report", spark, sf_dir, QUERIES["sim_ann_recall_report"])
-    buckets = QUERIES["sim_lsh_buckets"](spark, sf_dir)
-    plan = buckets._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
+def test_unscoped_registry_shares_no_seams(spark, sf_dir):
+    """``__spark_entry__.queries()`` hands out the builders, run with no
+    scope, where a seam is a lazy checkpoint that no other plan matches:
+    sim_lsh_buckets computes its own LSH signature rather than scan the one
+    sim_ann_recall_report built. Both stay oracle-strict."""
+    builders = entry.queries()
+    _strict("sim_ann_recall_report", spark, sf_dir, builders["sim_ann_recall_report"])
+    buckets = builders["sim_lsh_buckets"](spark, sf_dir)
     _strict("sim_lsh_buckets", spark, sf_dir, lambda *_: buckets)
+    executed = buckets._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in executed, executed
+    assert PYTHON_NODE.search(executed), executed
 
 
 def test_nested_builder_across_scopes(spark, sf_dir):
     """dedup_cluster_size_histogram builds dedup_cluster_cc inside itself;
     the CC query's eager seams (connected-components rounds) belong to
-    whichever scope builds them. A memoized DataFrame is built outside
-    every scope, so a new plan over it, run after the scope that first
-    asked for it closed, still finds its checkpoints."""
+    whichever scope builds them. A DataFrame built outside every scope
+    keeps its checkpoints: a scope that runs it, or a new plan over it,
+    releases none of them."""
     with query_scope():
         _strict("dedup_cluster_cc", spark, sf_dir, fresh("dedup_cluster_cc"))
     with query_scope():
@@ -100,14 +101,50 @@ def test_nested_builder_across_scopes(spark, sf_dir):
             "dedup_cluster_size_histogram", spark, sf_dir,
             fresh("dedup_cluster_size_histogram"),
         )
-    _PLAN_CACHE.pop((session_key(spark), sf_dir, "dedup_cluster_cc"), None)
+    cc = QUERIES["dedup_cluster_cc"](spark, sf_dir)
     with query_scope():
-        _strict("dedup_cluster_cc", spark, sf_dir, QUERIES["dedup_cluster_cc"])
+        _strict("dedup_cluster_cc", spark, sf_dir, lambda *_: cc)
     with query_scope():
-        _strict(
-            "dedup_cluster_cc", spark, sf_dir,
-            lambda s, d: QUERIES["dedup_cluster_cc"](s, d).select("*"),
-        )
+        _strict("dedup_cluster_cc", spark, sf_dir, lambda *_: cc.select("*"))
+
+
+def test_driver_path_shares_nothing(spark, sf_dir):
+    """The driver's path: every registry query once through
+    ``__spark_entry__.queries()``, in a seeded random order, with no scope.
+    No plan reads a cached seam and nothing is left in the CacheManager, so
+    run order cannot change a plan; once the DataFrames are dropped, every
+    checkpoint they made is freed."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = _persistent_ids(spark)
+    builders = entry.queries()
+    names = sorted(builders)
+    random.Random(20261019).shuffle(names)
+    bad = []
+    for name in names:
+        df = builders[name](spark, sf_dir)
+        rows = df.collect()
+        if "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString():
+            bad.append((name, "reads a cached seam"))
+        if not cache.isEmpty():
+            bad.append((name, "left a CacheManager entry"))
+        if name in ORACLES:
+            res = compare_rows(name, df, rows, sf_dir, ORACLES[name])
+            if not (res["ok"] and res["strict_match"]):
+                bad.append((name, res))
+    assert not bad, bad
+    del df, rows
+    # The last job's tasks keep its RDDs reachable until the next job runs
+    # on their slots (a lazy checkpoint outlived 90 s of System.gc() and was
+    # freed by the next job): a job on every slot stands in for the next query.
+    sc = spark.sparkContext
+    slots = 4 * sc.defaultParallelism
+    deadline = time.monotonic() + 120
+    while _persistent_ids(spark) - before and time.monotonic() < deadline:
+        sc.parallelize(range(slots), slots).count()
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(2)
+    assert not _persistent_ids(spark) - before
 
 
 def test_concurrent_scopes_share_cache_entries(spark, sf_dir):

@@ -1,6 +1,6 @@
-"""What one session pays once: dialect-function registration, table and
-plan caches bound to the session that built them, and generated code that
-a warm pass reuses instead of recompiling."""
+"""What one session pays once: dialect-function registration, a table
+cache bound to the session that built it, and generated code that a warm
+pass reuses instead of recompiling."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ from unittest.mock import Mock
 from minimised_impala_spark.engine import Engine
 from minimised_impala_spark.functions.parity import register_sql_functions
 from minimised_impala_spark.queries import load_all
-from minimised_impala_spark.queries.registry import QUERIES, fresh
+from minimised_impala_spark.queries.registry import fresh
 from minimised_impala_spark.session import session_key
 from minimised_impala_spark.tables import load_table
 
@@ -31,14 +31,12 @@ def _bound_to(df, spark) -> bool:
     )
 
 
-def test_table_and_plan_caches_are_per_session(spark, sf_dir):
+def test_table_cache_is_per_session(spark, sf_dir):
     s2 = spark.newSession()
     assert session_key(s2) != session_key(spark)
     for owner in (spark, s2):
         assert _bound_to(load_table(owner, sf_dir, "orders"), owner)
-        assert _bound_to(QUERIES["tpch_q6"](owner, sf_dir), owner)
     assert load_table(s2, sf_dir, "orders") is not load_table(spark, sf_dir, "orders")
-    assert QUERIES["tpch_q6"](s2, sf_dir) is not QUERIES["tpch_q6"](spark, sf_dir)
 
 
 def test_sql_function_registration_is_once_per_session(spark, monkeypatch):
@@ -86,9 +84,7 @@ def _drop_generated_classes(spark) -> None:
 def _run_pass(spark, sf_dir) -> int:
     before = _classes_compiled(spark)
     for name in WARM_SET:
-        spark.catalog.clearCache()
         fresh(name)(spark, sf_dir).collect()
-    spark.catalog.clearCache()
     return _classes_compiled(spark) - before
 
 

@@ -49,7 +49,6 @@ def test_oracle_rejects_unlisted_zero_row_result(spark, sf_dir, tmp_path, capsys
     def mis_test_empty(spark, sf_dir):
         return spark.range(0).selectExpr("CAST(id AS INT) AS x")
 
-    mis_test_empty.__wrapped__ = mis_test_empty
     monkeypatch.setitem(QUERIES, "mis_test_empty", mis_test_empty)
     monkeypatch.setitem(ORACLES, "mis_test_empty", "SELECT 1::INTEGER AS x WHERE 1 = 0")
     done = tmp_path / "done.txt"
@@ -85,9 +84,6 @@ SEAM_HOLDERS = ("sim_ann_recall_report", "sim_lsh_buckets")
 def test_subcommands_release_seams(cmd, spark, sf_dir, capsys):
     """Each query's seams are released when it ends, so no later query in
     the session reads them and no persistent RDD outlives the command."""
-    # drop entries other tests' memoized plans left, which would stand in
-    # for this command's seams
-    spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = _persistent_ids(spark)
     extra = ["--big", sf_dir] if cmd == "scale" else []

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from minimised_impala_spark.engine import render_profile  # noqa: E402
-from minimised_impala_spark.queries.registry import ORACLES, QUERIES, fresh, run  # noqa: E402
+from minimised_impala_spark.queries.registry import ORACLES, QUERIES, run  # noqa: E402
 from minimised_impala_spark.seams import query_scope  # noqa: E402
 from minimised_impala_spark.session import local_test_session  # noqa: E402
 from minimised_impala_spark.tables import ALL_TABLES, load_table  # noqa: E402
@@ -371,7 +371,7 @@ def audit(spark, args) -> int:
         static = not (name.startswith(SKIP_PREFIXES) or name in SKIP_EXACT)
         try:
             with query_scope():
-                plan = physical_plan(fresh(name)(spark, args.sf))
+                plan = physical_plan(QUERIES[name](spark, args.sf))
         except Exception as ex:  # noqa: BLE001 - report it, keep auditing
             flagged.setdefault(name, []).append(f"ERROR {type(ex).__name__}")
             continue
@@ -390,7 +390,7 @@ def explain(spark, args) -> int:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for n in args.names:
         with query_scope():
-            plan = fresh(n)(spark, args.sf)._jdf.queryExecution().explainString(mode)
+            plan = QUERIES[n](spark, args.sf)._jdf.queryExecution().explainString(mode)
         print(f"== {n}\n{plan}")
     return 0
 
