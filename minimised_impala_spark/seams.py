@@ -14,8 +14,10 @@ It lives as long as the query that built it, and no other query reads it.
   would release a persist there, and the CacheManager would hand its
   blocks to any later plan with the same sub-plan. A checkpoint's
   ``LogicalRDD`` matches no other plan, and its blocks are freed once the
-  DataFrame is garbage-collected and a later job has run (Spark holds a
-  finished job's RDDs until the next one). Under AQE its
+  DataFrame is garbage-collected and a later job has run (an RDD the last
+  job ran can stay reachable until then). A seam that a function handed to
+  the JVM closes over (``foreachBatch``) lives until a JVM GC drops py4j's
+  proxy and Python then collects the function. Under AQE its
   ``execute()`` runs the seam's shuffle stages while the query is being
   built. Medians of 4 warm draws at local[4], build time persisted →
   checkpointed: ``sim_lsh_ann`` (1 seam) at sf0.01 0.12 → 0.15 s;
@@ -26,11 +28,16 @@ It lives as long as the query that built it, and no other query reads it.
   would grow every round, or a result read from a scratch directory the
   builder deletes before it returns, needs that.
 
-Evicted blocks are recomputed from lineage, so a seam's lineage must be
-deterministic. Build no plan outside every scope while another thread's
-scope holds a seam it reads: that plan keeps the scope's cache entry, and
-once the scope releases it, the next run rebuilds the blocks outside the
-CacheManager, where nothing releases them.
+A scoped seam's lost blocks are recomputed from lineage, so a seam's
+lineage must be deterministic. A checkpoint has no lineage to fall back on:
+if its blocks are lost, the query fails (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
+Memory pressure does not lose them, since they spill to disk, but losing an
+executor does, so an unscoped seam survives fewer faults than a scoped one.
+
+Build no plan outside every scope while another thread's scope holds a seam
+it reads: that plan keeps the scope's cache entry, and once the scope
+releases it, the next run rebuilds the blocks outside the CacheManager,
+where nothing releases them.
 """
 
 from __future__ import annotations

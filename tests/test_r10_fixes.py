@@ -149,16 +149,19 @@ def test_decimal_to_double_cast_parity_past_2_53(spark):
 
 
 # --------------------------------------------------------------------------
-# New audit class for the r10 persist seams: a persist()ed seam must stay
-# CORRECT when its cached blocks are evicted (Spark recomputes evicted
-# partitions from lineage — safe only because the seam builds are
-# deterministic). Run the seamed queries in a SUBPROCESS JVM whose
-# unified memory is squeezed (tiny heap, minimal storage protection) so
-# cached blocks evict under execution pressure, and pin bit-identical
-# results vs the suite session. (A second in-process SparkSession would
-# silently reuse the existing JVM and its memory config.) The last six
-# had lazy-checkpoint seams, whose blocks were never recomputed, before
-# every lazy seam became a persist.
+# A persisted seam must stay CORRECT when its cached blocks are lost: Spark
+# recomputes a missing partition from lineage, which is safe only because
+# the seam builds are deterministic. Seams are persists only inside
+# query_scope(), so the probe builds each query in a scope, as registry.run
+# does. It runs in a SUBPROCESS JVM whose unified memory is squeezed (tiny
+# heap, minimal storage protection); at sf0.001 that alone evicts no block
+# (every seam stays whole in memory), so after the first collect the probe
+# also removes every block of the query's persisted seams, builds the query
+# again in the same scope (its plan reads the same cache entries) and
+# collects it. Both results must be bit-identical to the suite session's.
+# (A second in-process SparkSession would silently reuse the existing JVM
+# and its memory config.) Eager checkpoints (seam(df, now=True)) have no
+# lineage to recompute from and are left alone.
 _EVICTED = (
     "events_triangle_count", "dedup_threshold_sweep", "text_ngram_novelty",
     "multimodal_phash_neardup", "sim_ann_recall_report", "events_link_prediction",
@@ -173,13 +176,14 @@ def test_persist_seams_correct_under_cache_eviction(spark, tmp_path):
 
     from minimised_impala_spark.queries import load_all
     from minimised_impala_spark.queries.registry import QUERIES
+    from minimised_impala_spark.seams import query_scope
 
     load_all()
     sf = "/root/testdata/sf0.001"
-    want = {
-        n: sorted(map(repr, map(tuple, QUERIES[n](spark, sf).collect())))
-        for n in _EVICTED
-    }
+    want = {}
+    for n in _EVICTED:
+        with query_scope():
+            want[n] = sorted(map(repr, map(tuple, QUERIES[n](spark, sf).collect())))
     script = tmp_path / "evict_probe.py"
     script.write_text(
         """
@@ -197,12 +201,32 @@ spark = (SparkSession.builder.master("local[2]").appName("mis-evict")
 spark.sparkContext.setLogLevel("ERROR")
 from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import QUERIES
+from minimised_impala_spark.seams import query_scope
 load_all()
 NAMES = %r
+jsc = spark.sparkContext._jsc
+blocks = jsc.sc().env().blockManager().master()
+block = spark._jvm.org.apache.spark.storage.RDDBlockId
+def held(rdds, i):
+    return sum(blocks.contains(block(i, p)) for p in range(rdds.get(i).getNumPartitions()))
+def run(n):
+    return sorted(map(repr, map(tuple, QUERIES[n](spark, "/root/testdata/sf0.001").collect())))
 out = {}
 for n in NAMES:
-    rows = sorted(map(repr, map(tuple, QUERIES[n](spark, "/root/testdata/sf0.001").collect())))
-    out[n] = rows
+    with query_scope():
+        before = set(jsc.getPersistentRDDs().keySet())
+        first = run(n)
+        rdds = jsc.getPersistentRDDs()
+        seams = [i for i in rdds.keySet()
+                 if i not in before and not rdds.get(i).rdd().isLocallyCheckpointed()]
+        cached = sum(held(rdds, i) for i in seams)
+        for i in seams:
+            blocks.removeRdd(i, True)
+        lost = sum(held(rdds, i) for i in seams)
+        again = run(n)
+        recomputed = sum(held(rdds, i) for i in seams)
+    out[n] = {"first": first, "again": again, "seams": len(seams),
+              "cached": cached, "lost": lost, "recomputed": recomputed}
 print("EVICT_RESULT " + json.dumps(out))
 """ % (_REPO, _EVICTED)
     )
@@ -214,4 +238,9 @@ print("EVICT_RESULT " + json.dumps(out))
     assert line, f"probe failed: {r.stderr[-1500:]}"
     got = json.loads(line[0][len("EVICT_RESULT "):])
     for n, w in want.items():
-        assert got[n] == w, f"{n} diverged under cache eviction"
+        g = got[n]
+        assert g["seams"] and g["cached"], f"{n}: no persisted seam was cached"
+        assert g["lost"] == 0, f"{n}: {g['lost']} seam blocks survived removal"
+        assert g["recomputed"], f"{n}: no lost seam block was recomputed"
+        assert g["first"] == w, f"{n} diverged under memory pressure"
+        assert g["again"] == w, f"{n} diverged after its seam blocks were lost"

@@ -11,6 +11,7 @@ import re
 import sys
 import threading
 import time
+import weakref
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -112,17 +113,19 @@ def test_driver_path_shares_nothing(spark, sf_dir):
     """The driver's path: every registry query once through
     ``__spark_entry__.queries()``, in a seeded random order, with no scope.
     No plan reads a cached seam and nothing is left in the CacheManager, so
-    run order cannot change a plan; once the DataFrames are dropped, every
-    checkpoint they made is freed."""
+    run order cannot change a plan. Nothing in the package keeps a query's
+    DataFrame, and once it is dropped Spark frees every checkpoint it made."""
     cache = spark._jsparkSession.sharedState().cacheManager()
-    before = _persistent_ids(spark)
     builders = entry.queries()
     names = sorted(builders)
     random.Random(20261019).shuffle(names)
-    bad = []
+    bad, made, dfs = [], set(), []
     for name in names:
+        before = _persistent_ids(spark)
         df = builders[name](spark, sf_dir)
         rows = df.collect()
+        made |= _persistent_ids(spark) - before  # this query's checkpoints
+        dfs.append(weakref.ref(df))
         if "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString():
             bad.append((name, "reads a cached seam"))
         if not cache.isEmpty():
@@ -132,19 +135,30 @@ def test_driver_path_shares_nothing(spark, sf_dir):
             if not (res["ok"] and res["strict_match"]):
                 bad.append((name, res))
     assert not bad, bad
+    assert made, "no query made a checkpoint: the release check below is vacuous"
     del df, rows
-    # The last job's tasks keep its RDDs reachable until the next job runs
-    # on their slots (a lazy checkpoint outlived 90 s of System.gc() and was
-    # freed by the next job): a job on every slot stands in for the next query.
+    gc.collect()
+    assert not [ref for ref in dfs if ref() is not None]
+    # The JVM side is Spark's: its ContextCleaner unpersists a checkpoint
+    # once a JVM GC finds the RDD unreachable. A reference can cross the
+    # VMs: streaming_dedup_lsh's foreachBatch function closes over two
+    # seams, py4j holds it for the JVM until a JVM GC drops the proxy, and
+    # the seams went only with a Python collection after that (they
+    # outlived five minutes of JVM GCs alone). An RDD the last job ran has
+    # also been seen to stay reachable until another job runs. So each
+    # round collects Python garbage, runs a job on every slot and a
+    # System.gc(), then gives the cleaner's thread up to 5 s.
     sc = spark.sparkContext
     slots = 4 * sc.defaultParallelism
-    deadline = time.monotonic() + 120
-    while _persistent_ids(spark) - before and time.monotonic() < deadline:
-        sc.parallelize(range(slots), slots).count()
+    for _ in range(60):
         gc.collect()
+        sc.parallelize(range(slots), slots).count()
         spark._jvm.System.gc()
-        time.sleep(2)
-    assert not _persistent_ids(spark) - before
+        for _ in range(50):
+            if not made & _persistent_ids(spark):
+                return
+            time.sleep(0.1)
+    assert not made & _persistent_ids(spark)
 
 
 def test_concurrent_scopes_share_cache_entries(spark, sf_dir):
