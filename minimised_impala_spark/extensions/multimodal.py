@@ -594,6 +594,8 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity hash chunks from an Arrow kernel, 4-way 16-bit band join,
     exact Hamming <= 3 on collisions. Output: (doc_a, doc_b,
     hamming)."""
+    # Candidates come from the (chunk_idx, chunk_val) self-equi-join, never
+    # a cartesian pairing of payloads.
     from pyspark.sql import functions as SF
 
     phash_udf = SF.pandas_udf(_phash_chunks_kernel, "array<bigint>")

@@ -374,8 +374,8 @@ def pipeline_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     # posting table where distinct + groupBy paid two), and the posting
     # table is persisted so the per-source totals come from an explode
     # of the postings instead of a second corpus scan (2 scans / 5
-    # exchanges → 1 scan / 3). Plan diff:
-    # plans/r12/pipeline_source_overlap_matrix_{before,after}.txt.
+    # exchanges → 1 scan / 3): at scale the corpus is read and shuffled
+    # once.
     posting = seam(
         grams.groupBy("sh")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
@@ -488,6 +488,8 @@ def pipeline_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically perturbed successor (1/17 deleted, 1/5 lossily
     re-encoded). Output: (label, n_a, n_b, row_delta_permille,
     centroid_cos)."""
+    # One (label, dim) component aggregate feeds the cosine; the per-label
+    # counts broadcast (|labels| rows).
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
@@ -690,6 +692,8 @@ def pipeline_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     into N shards by exact integer division of each doc's start offset
     by the shard width. Output: (shard_id, n_docs, n_tokens,
     min_doc_id, max_doc_id, share_permille)."""
+    # The running token total is the two-phase prefix scan (one range
+    # exchange); the one-row totals broadcast.
     from minimised_impala_spark.operators.prefix import distributed_cumsum
 
     docs = load_table(spark, sf_dir, "documents")

@@ -1233,6 +1233,8 @@ ORDER BY doc_id, chunk_id
 
 @query("text_chunk_overlap", oracle=_CHUNK_ORACLE)
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Chunking is narrow (split, sequence, explode, slice): an exchange here
+    # would repartition the whole token stream for a map-only transform.
     docs = load_table(spark, sf_dir, "documents")
     w, s = _CHUNK_W, _CHUNK_S
     toks = F.split("text", " ")
@@ -1916,6 +1918,8 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering): score = sigmoid(w·x + b) over (n_tokens, avg token
     length, stopword ratio, punctuation per token), thresholded at 0.5.
     Output: (doc_id, score, passes) for every document."""
+    # The model is constants in codegen'd Column arithmetic: no Python UDF,
+    # join or aggregate, just a narrow map over the scan.
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     nt = F.size(toks)
@@ -2539,6 +2543,8 @@ ORDER BY doc_id
 """,
 )
 def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Encode DISTINCT words in the Arrow UDF and broadcast the small
+    # encoding table back: never a shuffle join on the occurrence stream.
     docs = load_table(spark, sf_dir, "documents")
     occ = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
@@ -3739,6 +3745,8 @@ ORDER BY lang, band
 
 @query("text_readability_scores", oracle=_READABILITY_ORACLE)
 def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The regexp counts are per-row expressions, so the (lang, band)
+    # rollup's is the only hash exchange.
     docs = load_table(spark, sf_dir, "documents")
     words = F.regexp_count("text", F.lit(r"\S+"))
     sents = F.greatest(F.regexp_count("text", F.lit("[.!?]+")), F.lit(1))
@@ -3828,6 +3836,8 @@ def text_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens) the padding waste vs a single-max-length strategy.
     Output: (strategy, bucket_cap, n_docs, sum_tokens, padded_tokens,
     waste_permille)."""
+    # Both strategy arms are map-side-combined aggregates over one narrow
+    # scan: one hash exchange (the bucket groupBy).
     docs = load_table(spark, sf_dir, "documents")
     n = F.least(F.size(F.split("text", " ")), F.lit(_PAD_MAX))
     cap = (
@@ -3935,6 +3945,8 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration of the logistic quality classifier against the
     independent Flesch readability gate, by score decile. Output:
     (decile, n_docs, avg_score_e6, n_gold, gold_permille)."""
+    # The global score rank is the two-phase prefix scan (one range
+    # exchange), never a partition-less sort window over the corpus.
     from minimised_impala_spark.operators.prefix import distributed_cumsum
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4098,10 +4110,9 @@ def text_kneser_ney_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # c1(w1) = Σ_w2 c12(w1,w2) exactly (each occurrence of context w1 is
     # counted once in some bigram type), and n1h(w1) is the type count of
     # the same grouping, so both come out of ONE vocab-sized aggregate.
-    # (r12 optimization, guide §2.3/§2.4: the previous form re-grouped the
-    # corpus-sized bigram stream a second time just to count contexts —
-    # one full Exchange of corpus-scale data, deleted here; plan diff in
-    # plans/r12/text_kneser_ney_lm_{before,after}.txt.)
+    # Re-grouping the corpus-sized bigram stream just to count contexts
+    # would cost one more full Exchange of corpus-scale data, where this
+    # aggregate shuffles only vocab-sized types.
     per_w1 = (
         c12.groupBy(w1_of.alias("w1"))
         .agg(
@@ -4299,6 +4310,8 @@ def text_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law exponent per source: regr fit of ln(cumulative vocab)
     on ln(cumulative tokens) sampled at every doc boundary in doc_id
     order. Output: (source, n_docs, beta_e4, r2_e4)."""
+    # The running sums are per-source windows, never a partition-less
+    # corpus-wide sort.
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4407,6 +4420,8 @@ def text_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bits/token), plus the conditioning information gain. Output:
     (source, n_tokens, n_bigrams, unigram_bits_e4, cond_bits_e4,
     info_gain_e4)."""
+    # The unigram-total and bigram-head tables are vocab-bounded and
+    # broadcast; the corpus-sized streams only feed aggregates.
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("source", F.split("text", " ").alias("toks")).withColumn(
         "n", F.size("toks")
@@ -4546,6 +4561,8 @@ def text_jsd_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram distributions; disjoint-support mass handled in closed form
     so the pair join stays inner/posting-bounded. Output: (source_a,
     source_b, n_common_types, jsd_bits_e4)."""
+    # Source totals broadcast into both probability sides; the pair join
+    # runs on the (source, tok) census, never a cartesian product.
     docs = load_table(spark, sf_dir, "documents")
     # persist: three consumers (the totals and both pair-join sides)
     # each re-ran the corpus census uncached (r12, guide §5)

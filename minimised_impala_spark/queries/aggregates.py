@@ -1208,7 +1208,6 @@ def agg_kll_accuracy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global bottom-k identical (every global bottom-k row is
     # necessarily in its salt group's bottom-k), and pri/x/g values are
     # untouched.
-    # Plan diff: plans/r12/agg_kll_accuracy_report_{before,after}.txt.
     kk = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("kk")
     pre = seam(
         li.select(F.col("l_returnflag").alias("g"),

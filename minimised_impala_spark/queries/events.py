@@ -97,9 +97,8 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per user always flags, lag IS NULL), so count(DISTINCT session_id)
     # == sum(new_session). This drops the second full window pass AND the
     # countDistinct two-phase expansion — ONE window + ONE plain aggregate
-    # over the same user_id partitioning (r12 optimization, guide §2.4:
-    # window and groupBy share the exchange; plan diff in
-    # plans/r12/events_sessionize_{before,after}.txt). The oracle keeps
+    # over the same user_id partitioning, so the window and the groupBy
+    # share one exchange of the events. The oracle keeps
     # the session_id/count-distinct formulation — a structurally
     # different evaluation of the same quantity.
     return (
@@ -2739,6 +2738,8 @@ def events_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     resurrected, and churned users (churn lands the week after the last
     active week, capped at the observed horizon). Output: (week, n_new,
     n_retained, n_resurrected, n_churned)."""
+    # lag/lead run over user-keyed windows on the distinct user-week
+    # relation; the horizon cap is a one-row broadcast.
     ev = load_table(spark, sf_dir, "events")
     # persist both shared seams: uw feeds the horizon max AND the
     # lag/lead window; seq feeds the state tallies AND the churn stream
@@ -2908,6 +2909,8 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
     the window's distinct channels in proportion to exp(-Δt/2d) of each
     channel's last touch. Output: (channel, n_purchases,
     attributed_e2)."""
+    # The share denominator's window is keyed by the purchase event, never
+    # partition-less.
     ev = load_table(spark, sf_dir, "events")
     # persist: the purchase set has two consumers (the touch band-join
     # and the value fan-out) — uncached both re-ran the filtered events

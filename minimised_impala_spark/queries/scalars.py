@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
-from minimised_impala_spark.tables import load_table
+from minimised_impala_spark.tables import load_table, staging_dir
 
 
 # --------------------------------------------------------------------------
@@ -464,14 +464,9 @@ ORDER BY s_nationkey
 
 @query("source_text_scan", oracle=_TEXT_SCAN_ORACLE)
 def source_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     from minimised_impala_spark.sources.formats import read_text, write_text
-    from minimised_impala_spark.tables import load_table
 
-    src = os.path.realpath(f"{sf_dir}/supplier.parquet")
-    stage = f"/tmp/mis_textscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("textscan", sf_dir, "supplier")
     write_text(
         load_table(spark, sf_dir, "supplier"), stage, sep="|", compression="gzip"
     )
@@ -512,14 +507,9 @@ ORDER BY s_nationkey
 
 @query("source_avro_scan", oracle=_AVRO_SCAN_ORACLE)
 def source_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     from minimised_impala_spark.sources.formats import read_avro, write_avro
-    from minimised_impala_spark.tables import load_table
 
-    src = os.path.realpath(f"{sf_dir}/supplier.parquet")
-    stage = f"/tmp/mis_avroscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("avroscan", sf_dir, "supplier")
     write_avro(
         load_table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
@@ -558,20 +548,15 @@ ORDER BY s_nationkey
 
 @query("source_sequencefile_scan", oracle=_SEQ_SCAN_ORACLE)
 def source_sequencefile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
 
     from minimised_impala_spark.sources.formats import (
         read_sequencefile,
         write_sequencefile,
     )
-    from minimised_impala_spark.tables import load_table
 
-    src = os.path.realpath(f"{sf_dir}/supplier.parquet")
-    stage = f"/tmp/mis_seqscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
+    stage = staging_dir("seqscan", sf_dir, "supplier")
+    shutil.rmtree(stage, ignore_errors=True)
     write_sequencefile(
         load_table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
@@ -659,14 +644,9 @@ ORDER BY c_mktsegment
 
 @query("source_json_scan", oracle=_JSON_SCAN_ORACLE)
 def source_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     from minimised_impala_spark.sources.formats import read_json, write_json
-    from minimised_impala_spark.tables import load_table
 
-    src = os.path.realpath(f"{sf_dir}/customer.parquet")
-    stage = f"/tmp/mis_jsonscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("jsonscan", sf_dir, "customer")
     write_json(load_table(spark, sf_dir, "customer"), stage, compression="gzip")
     js = read_json(
         spark,
@@ -705,14 +685,9 @@ ORDER BY p_brand
 
 @query("source_orc_scan", oracle=_ORC_SCAN_ORACLE)
 def source_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
     from minimised_impala_spark.sources.formats import read_orc, write_orc
-    from minimised_impala_spark.tables import load_table
 
-    src = os.path.realpath(f"{sf_dir}/part.parquet")
-    stage = f"/tmp/mis_orcscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("orcscan", sf_dir, "part")
     write_orc(load_table(spark, sf_dir, "part"), stage)
     orc = read_orc(spark, stage)
     return (
@@ -750,15 +725,10 @@ ORDER BY lang_slot
 """,
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import shutil
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    base = (
-        f"{tempfile.gettempdir()}/mis_evolve_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
+    base = staging_dir("evolve", sf_dir, "documents")
     shutil.rmtree(base, ignore_errors=True)
     (
         docs.filter(F.col("doc_id") < 200)
@@ -811,13 +781,7 @@ ORDER BY n_regionkey
 
 @query("source_xml_scan", oracle=_XML_SCAN_ORACLE)
 def source_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    from minimised_impala_spark.tables import load_table
-
-    src = os.path.realpath(f"{sf_dir}/nation.parquet")
-    stage = f"/tmp/mis_xmlscan_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("xmlscan", sf_dir, "nation")
     (
         load_table(spark, sf_dir, "nation")
         .write.format("xml")

@@ -1135,6 +1135,8 @@ LIMIT 100
 # engines. Reference: tpcds-q43.test.
 @query("tpcds_q43", oracle=_Q43_ORACLE)
 def tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The 7 day columns are conditional sums in ONE aggregate: one hash
+    # exchange, not a scan per pivot column.
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")

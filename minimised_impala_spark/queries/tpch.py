@@ -797,6 +797,8 @@ LIMIT 100
 """,
 )
 def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # ORDER BY + LIMIT plans as TakeOrderedAndProject (per-partition top-k
+    # heaps), never a global sort of the result.
     cust, orders, li = _t(spark, sf_dir, "customer", "orders", "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -1122,8 +1124,8 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The spec's correlated scalar subquery decorrelates to min-cost per
     # part; a ps_partkey-keyed WINDOW computes it in the SAME shuffle
     # that would feed a groupBy+self-join (one exchange on the big
-    # relation instead of two plus a sort-merge join — the plan test
-    # pins zero SortMergeJoin). nation/region broadcast (constant dims);
+    # relation instead of two plus a sort-merge join; its PLANSHAPES.tsv
+    # row pins zero SortMergeJoin). nation/region broadcast (constant dims);
     # the TopN is TakeOrderedAndProject.
     part, supplier, nation, region = _t(
         spark, sf_dir, "part", "supplier", "nation", "region"

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.seams import seam
+from minimised_impala_spark.tables import staging_dir
 
 
 def _reconcile_stage_links(stage: str, expected: dict[str, str]) -> None:
@@ -67,13 +68,11 @@ def _events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
     # a *directory*, so stage a symlink dir (fixture dirs are read-only).
     # copies > 1 stages the same file multiple times — the at-least-once
     # replay scenario streaming dedup exists for.
-    import hashlib
     import os
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = os.path.realpath(f"{sf_dir}/events.parquet")
-    suffix = "" if copies == 1 else f"_x{copies}"
-    stage = f"/tmp/mis_stream_{hashlib.md5(src.encode()).hexdigest()[:10]}{suffix}"
+    stage = staging_dir("stream" if copies == 1 else f"stream_x{copies}", sf_dir, "events")
     os.makedirs(stage, exist_ok=True)
     # The table may be a single parquet FILE (driver fixtures) or a
     # Spark-written DIRECTORY of part files (tools/make_sf1.py). The file
@@ -538,11 +537,7 @@ ORDER BY window_start, event_type
 """,
 )
 def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    out = f"/tmp/mis_fbsink_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    out = staging_dir("fbsink", sf_dir, "events")
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -811,11 +806,10 @@ def streaming_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collisions, never corpus size; the index is the thing a real pipeline
 # persists and reloads.
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
 
     src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    stage = f"/tmp/mis_docstream_{hashlib.md5(src.encode()).hexdigest()[:10]}"
+    stage = staging_dir("docstream", sf_dir, "documents")
     os.makedirs(stage, exist_ok=True)
     # single file or Spark directory-of-parts (see _events_stream note)
     if os.path.isdir(src):
@@ -883,17 +877,22 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = D.corpus(spark, sf_dir)
     is_new = F.col("doc_id") % 10 == 7
     static_docs = full.filter(~is_new)
-    # the landed index: built once, probed per batch
-    static_bands = seam(
-        D.bands_of(static_docs)
-        .select(F.col("doc_id").alias("corpus_id"), "band", "bsig")
-    )
-    static_sets = seam(
-        D.shingles_of(static_docs)
-        .groupBy("doc_id")
-        .agg(F.collect_set("sh").alias("s2"))
-        .select(F.col("doc_id").alias("corpus_id"), "s2")
-    )
+    # the landed index: built once, probed per batch. py4j keeps
+    # probe_batch alive for the JVM long after the query stops, so it
+    # reads the index through this holder, emptied after q.stop(), and
+    # the two seams go when the build returns.
+    index = {
+        "bands": seam(
+            D.bands_of(static_docs)
+            .select(F.col("doc_id").alias("corpus_id"), "band", "bsig")
+        ),
+        "sets": seam(
+            D.shingles_of(static_docs)
+            .groupBy("doc_id")
+            .agg(F.collect_set("sh").alias("s2"))
+            .select(F.col("doc_id").alias("corpus_id"), "s2")
+        ),
+    }
 
     out = f"/tmp/mis_sdlsh_{uuid.uuid4().hex[:12]}"
 
@@ -910,7 +909,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("new_id"), "band", "bsig"
         )
         cand = (
-            nb.join(static_bands, ["band", "bsig"])
+            nb.join(index["bands"], ["band", "bsig"])
             .select("new_id", "corpus_id")
             .distinct()
         )
@@ -925,7 +924,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = W.partitionBy("new_id").orderBy(F.desc("jac"), F.asc("corpus_id"))
         (
             cand.join(s1, "new_id")
-            .join(static_sets, "corpus_id")
+            .join(index["sets"], "corpus_id")
             .select("new_id", "corpus_id", jac.alias("jac"))
             .filter(F.col("jac") >= 0.6)
             .withColumn("r", F.row_number().over(w))
@@ -948,6 +947,7 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
+        index.clear()
     res = (
         seam(spark.read.parquet(out).orderBy("new_id"), now=True)
         if os.path.exists(out)

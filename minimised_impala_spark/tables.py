@@ -12,6 +12,12 @@ reads single parquet files because that is what the driver fixture provides.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 
 from minimised_impala_spark.session import session_key
@@ -31,6 +37,20 @@ ALL_TABLES = TPCH_TABLES + EXTRA_TABLES
 # Dimension tables small enough to broadcast at ANY scale factor (region=5,
 # nation=25 rows always; TPC-H dims scale slower than fact tables).
 BROADCASTABLE = {"region", "nation"}
+
+
+def staging_dir(kind: str, sf_dir: str, table: str) -> str:
+    """Scratch directory for a query that stages ``table`` of ``sf_dir``
+    (a format round trip, a stream's input links, a sink). Named per
+    source and per process, since another process staging the same source
+    would overwrite or delete the files mid-scan; removed when this
+    process exits."""
+    src = os.path.realpath(f"{sf_dir}/{table}.parquet")
+    digest = hashlib.md5(src.encode()).hexdigest()[:10]
+    path = os.path.join(tempfile.gettempdir(), f"mis_{kind}_{digest}_{os.getpid()}")
+    if not os.path.exists(path):  # first use in this process
+        atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def ensure_engine_semantics(spark: SparkSession) -> None:

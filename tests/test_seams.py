@@ -141,11 +141,13 @@ def test_driver_path_shares_nothing(spark, sf_dir):
     assert not [ref for ref in dfs if ref() is not None]
     # The JVM side is Spark's: its ContextCleaner unpersists a checkpoint
     # once a JVM GC finds the RDD unreachable. A reference can cross the
-    # VMs: streaming_dedup_lsh's foreachBatch function closes over two
-    # seams, py4j holds it for the JVM until a JVM GC drops the proxy, and
-    # the seams went only with a Python collection after that (they
-    # outlived five minutes of JVM GCs alone). An RDD the last job ran has
-    # also been seen to stay reachable until another job runs. So each
+    # VMs: py4j holds a foreachBatch function for the JVM until a JVM GC
+    # drops the proxy, and what the function closes over goes only with a
+    # Python collection after that (streaming_dedup_lsh's two seams once
+    # outlived five minutes of JVM GCs alone; its function now reads them
+    # through a holder it empties, see
+    # test_streaming_dedup_lsh_drops_its_index). An RDD the last job ran
+    # has also been seen to stay reachable until another job runs. So each
     # round collects Python garbage, runs a job on every slot and a
     # System.gc(), then gives the cleaner's thread up to 5 s.
     sc = spark.sparkContext
@@ -159,6 +161,27 @@ def test_driver_path_shares_nothing(spark, sf_dir):
                 return
             time.sleep(0.1)
     assert not made & _persistent_ids(spark)
+
+
+def test_streaming_dedup_lsh_drops_its_index(spark, sf_dir, monkeypatch):
+    """py4j keeps streaming_dedup_lsh's foreachBatch function for the JVM
+    long after the query stops. The two index seams it probes must not
+    live that long: once the build returns they are garbage, so their
+    checkpoints can be freed."""
+    from minimised_impala_spark.streaming import windows
+
+    made = []
+
+    def tracked(df, **kw):
+        made.append(seam(df, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(windows, "seam", tracked)
+    QUERIES["streaming_dedup_lsh"](spark, sf_dir)
+    index = [weakref.ref(df) for df in made[:2]]
+    del made[:]
+    gc.collect()
+    assert len(index) == 2 and not [ref for ref in index if ref() is not None]
 
 
 def test_concurrent_scopes_share_cache_entries(spark, sf_dir):

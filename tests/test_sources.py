@@ -4,6 +4,12 @@ execution of the same queries; SURVEY §5.1)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import subprocess
+import sys
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -232,3 +238,22 @@ def test_parquet_compression_codecs(spark, sample, tmp_path):
         got = meta.row_group(0).column(0).compression.lower()
         want = {"none": "uncompressed"}.get(codec, codec)
         assert got == want, (codec, got)
+
+
+def test_staging_is_private_to_each_process(sf_dir):
+    """Queries that stage a fixture table (a format round trip, a stream's
+    input links) write under a directory of their own process: two
+    processes running them over one fixture at once neither overwrite nor
+    delete each other's files, both stay oracle-strict, and each removes
+    its directories when it exits."""
+    from tools import mis
+
+    cmd = [sys.executable, mis.__file__, "oracle", "source_avro_scan", "source_text_scan",
+           "streaming_window_counts", "--sf", sf_dir, "--cpus", "2"]
+    procs = [subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
+             for _ in range(2)]
+    for p in procs:
+        out, err = p.communicate(timeout=600)
+        assert p.returncode == 0, out + err[-2000:]
+        assert "BAD: []" in out, out
+        assert not glob.glob(os.path.join(tempfile.gettempdir(), f"mis_*_{p.pid}"))

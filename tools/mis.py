@@ -8,12 +8,15 @@
     python tools/mis.py invariance --driver 0:50 --sf DIR
     python tools/mis.py scale q [q ...] --sf SMALL --big LARGE
     python tools/mis.py profile --sf DIR > PROFILES.md
-    python tools/mis.py audit [filter] --sf DIR
+    python tools/mis.py audit [filter] --sf DIR           # plan-shape rows
+    python tools/mis.py audit --sf perfbench/fixtures/sf0.001 > PLANSHAPES.tsv
     python tools/mis.py explain q [q ...] --sf DIR
 
 Every query runs through ``registry.run``: built fresh, collected and its
 seams released inside its own query scope, so no query reads an earlier
 one's seams. ``audit`` and ``explain`` only build, each inside a scope.
+``audit`` prints one tab-separated row of operator counts per query, the
+table tests/test_plans.py diffs against the committed PLANSHAPES.tsv.
 ``oracle`` and ``invariance`` run on the plain session the driver grades
 with (no engine preset); the others on ``session.local_test_session``.
 Every session is local[--cpus], which defaults to the cores this process
@@ -27,10 +30,12 @@ import json
 import os
 import re
 import sys
+import time
 
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from minimised_impala_spark.engine import render_profile  # noqa: E402
@@ -260,10 +265,14 @@ def profile(spark, args) -> int:
     return 0
 
 
-# audit: the rescan/pyrow/cartesian/globalwin rules skip builders that run
-# jobs at build time by design (training collects, iterative algorithms,
-# physical state round trips): their plans are execution artifacts, pinned
-# elsewhere. pysort checks every builder.
+# audit's flags, derived from a row's counts: rescan, more scans of one
+# fixture table than two consumers need (a shared seam recomputed); pyrow,
+# row-at-a-time Python; cartesian; globalwin, a Window with an empty
+# partition spec (a single-task sort). They skip builders that run jobs at
+# build time by design (training collects, iterative algorithms, physical
+# state round trips): their plans are execution artifacts.
+FLAGS = (("pyrow", "python", "BatchEvalPython"), ("cartesian", "join", "CartesianProduct"),
+         ("globalwin", "window", "Window[global]"))
 SKIP_PREFIXES = ("streaming_", "ddl_", "source_", "udf_", "uda_", "udtf_",
                  "dialect_", "shell_", "hs2_")
 SKIP_EXACT = {
@@ -279,6 +288,18 @@ PYTHON_NODE = re.compile(
     r"(Arrow|Batch)\w*Python\w*|MapInPandas|FlatMap\w*InPandas|\w*InArrow"
     r"|AggregateInPandas|WindowInPandas"
 )
+# The column each counted operator goes to; scans, exchanges and Python
+# nodes are matched apart, every other operator is not counted.
+FAMILY = {
+    "BroadcastHashJoin": "join", "SortMergeJoin": "join", "ShuffledHashJoin": "join",
+    "BroadcastNestedLoopJoin": "join", "CartesianProduct": "join",
+    "HashAggregate": "agg", "ObjectHashAggregate": "agg", "SortAggregate": "agg",
+    "Window": "window", "WindowGroupLimit": "window",
+    "TakeOrderedAndProject": "ops", "Expand": "ops", "Generate": "ops", "Range": "ops",
+    "InMemoryTableScan": "reuse", "ReusedExchange": "reuse", "ReusedSubquery": "reuse",
+}
+COLUMNS = ("query", "scan", "exchange", "join", "agg", "window", "ops", "python",
+           "reuse", "pysort", "flags")
 
 
 def physical_plan(df):
@@ -295,93 +316,130 @@ def physical_plan(df):
         spark.conf.set(key, old)
 
 
-def _children(node) -> list:
-    seq = node.children()
+def _seq(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
 
 
-def python_nodes(plan) -> list[str]:
-    """Names of every Python evaluation node in ``plan``."""
-    found = [plan.nodeName()] if PYTHON_NODE.fullmatch(plan.nodeName()) else []
-    for c in _children(plan):
-        found += python_nodes(c)
-    return found
+def _nodes(plan, jvm):
+    """Every operator ``plan`` runs: children, subquery plans, each
+    AdaptiveSparkPlan's initial plan, and each distinct cached plan once
+    (however many InMemoryTableScans read it)."""
+    seen, todo = set(), [plan]
+    while todo:
+        node = todo.pop()
+        yield node
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.initialPlan())
+        elif name == "InMemoryTableScan":
+            cache = node.relation().cacheBuilder()
+            key = jvm.System.identityHashCode(cache)
+            if key not in seen:
+                seen.add(key)
+                todo.append(cache.cachedPlan())
+        todo += _seq(node.children()) + _seq(node.subqueries())
 
 
-def pysort(plan) -> list[str]:
+def _scan(node) -> str:
+    """A fixture table's name, else the source's format."""
+    cls = node.getClass().getSimpleName()
+    if cls == "FileSourceScanExec":
+        relation = node.relation()
+        roots = _seq(relation.location().rootPaths())
+        table = roots[0].getName().removesuffix(".parquet") if len(roots) == 1 else ""
+        return table if table in ALL_TABLES else relation.fileFormat().toString().lower()
+    return {"RDDScanExec": "rdd", "LocalTableScanExec": "local"}.get(cls, cls)
+
+
+def _exchange(node) -> str:
+    """Partitioning kind; a hint's exchange (repartition, rebalance) apart."""
+    if node.nodeName() == "BroadcastExchange":
+        return "broadcast"
+    kind = node.outputPartitioning().getClass().getSimpleName().rstrip("$")
+    kind = kind.replace("Partitioning", "").replace("Partition", "").lower()
+    origin = node.shuffleOrigin().toString()
+    return kind if origin == "ENSURE_REQUIREMENTS" else f"{kind}/{origin.split('_')[0].lower()}"
+
+
+def pysort(plan) -> int:
     """Python nodes in a stage that feeds a range-partitioning Exchange:
     the range partitioner samples its input by running that stage, so the
     Python stage runs twice (fix: shipping.order_after_python). The walk
     down from each such Exchange stops at the stage boundary: another
     Exchange or an InMemoryTableScan."""
-    hits: list[str] = []
-
-    def stage(node) -> None:
-        for c in _children(node):
-            name = c.nodeName()
-            if "Exchange" in name or name == "InMemoryTableScan":
-                continue
-            if PYTHON_NODE.fullmatch(name):
-                hits.append(name)
-            stage(c)
-
-    def walk(node) -> None:
-        if node.nodeName() == "Exchange" and (
-            node.outputPartitioning().getClass().getSimpleName() == "RangePartitioning"
-        ):
-            stage(node)
-        for c in _children(node):
-            walk(c)
-
-    walk(plan)
+    hits = 0
+    todo = _seq(plan.children())
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if "Exchange" in name or name == "InMemoryTableScan":
+            continue
+        hits += bool(PYTHON_NODE.fullmatch(name))
+        todo += _seq(node.children())
     return hits
 
 
-def static_flags(plan: str) -> list[str]:
-    """rescan: more parquet scans of one table than two consumers need (a
-    shared seam recomputed); pyrow: row-at-a-time Python; cartesian; and
-    globalwin: a Window with an empty partition spec (a single-task sort)."""
-    flags = []
-    # A persisted subtree is printed once per consuming InMemoryTableScan,
-    # with the same expression ids; separate scans get fresh ids. So count
-    # distinct (output attributes, table) pairs.
-    scans: dict[str, int] = {}
-    for cols, tbl in set(re.findall(
-        r"FileScan parquet (\[[^\]]*\])[^\n]*file:[^\]\n]*/(\w+)\.parquet", plan
-    )):
-        scans[tbl] = scans.get(tbl, 0) + 1
-    flags += [f"rescan:{tbl}x{cnt}" for tbl, cnt in scans.items() if cnt > 2]
-    if "BatchEvalPython" in plan:
-        flags.append("pyrow")
-    if "CartesianProduct" in plan:
-        flags.append("cartesian")
-    if re.search(r"windowspecdefinition\(spec", plan):
-        flags.append("globalwin")
-    return flags
+def shape(name: str, plan, jvm) -> str:
+    """One PLANSHAPES.tsv row: per column, the sorted ``label:count`` pairs
+    of the operators ``plan`` runs, then the pysort count and the flags."""
+    cols = {c: {} for c in COLUMNS[1:-2]}
+    hits = 0
+    for node in _nodes(plan, jvm):
+        op = node.nodeName()
+        if op.startswith("Scan ") or op in ("LocalTableScan", "BatchScan"):
+            col, label = "scan", _scan(node)
+        elif op in ("Exchange", "BroadcastExchange"):
+            col, label = "exchange", _exchange(node)
+            if label == "range":
+                hits += pysort(node)
+        elif PYTHON_NODE.fullmatch(op):
+            col, label = "python", op
+        elif op == "Window" and node.partitionSpec().isEmpty():
+            col, label = "window", "Window[global]"
+        elif op in FAMILY:
+            col, label = FAMILY[op], op
+        else:
+            continue
+        cols[col][label] = cols[col].get(label, 0) + 1
+    flags = [] if name.startswith(SKIP_PREFIXES) or name in SKIP_EXACT else [
+        *(f"rescan:{t}x{n}" for t, n in sorted(cols["scan"].items()) if t in ALL_TABLES and n > 2),
+        *(flag for flag, col, op in FLAGS if op in cols[col]),
+    ]
+    cells = [" ".join(f"{k}:{v}" for k, v in sorted(c.items())) or "-" for c in cols.values()]
+    return "\t".join([name, *cells, str(hits), " ".join(flags) or "-"])
+
+
+def shapes(spark, sf: str, names):
+    """(name, row, build seconds) per query, each built in its own scope;
+    a query whose build fails gets an ERROR row."""
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            with query_scope():
+                df = QUERIES[name](spark, sf)
+                build_s = time.perf_counter() - t0
+                row = shape(name, physical_plan(df), spark._jvm)
+        except Exception as ex:  # noqa: BLE001 - report it, keep auditing
+            build_s = time.perf_counter() - t0
+            row = "\t".join([name, *["-"] * (len(COLUMNS) - 2), f"ERROR {type(ex).__name__}"])
+        yield name, row, build_s
+
+
+def committed_shapes() -> tuple[str, list[str]]:
+    """The fixture PLANSHAPES.tsv was built at (its first line's command
+    names it, relative to the repository root), and the table's lines."""
+    with open(os.path.join(ROOT, "PLANSHAPES.tsv")) as f:
+        lines = f.read().splitlines()
+    return os.path.join(ROOT, lines[0].split(" --sf ")[1].split()[0]), lines
 
 
 def audit(spark, args) -> int:
-    """Static plan audit (no execution) of every query whose name contains
-    ``filter``: the hazard flags above, one row per flagged query."""
-    flagged: dict[str, list[str]] = {}
-    n_checked = 0
-    for name in QUERIES:
-        if args.filter not in name:
-            continue
-        static = not (name.startswith(SKIP_PREFIXES) or name in SKIP_EXACT)
-        try:
-            with query_scope():
-                plan = physical_plan(QUERIES[name](spark, args.sf))
-        except Exception as ex:  # noqa: BLE001 - report it, keep auditing
-            flagged.setdefault(name, []).append(f"ERROR {type(ex).__name__}")
-            continue
-        n_checked += 1
-        flags = (static_flags(plan.toString()) if static else []) + (["pysort"] if pysort(plan) else [])
-        if flags:
-            flagged[name] = flags
-    print(f"checked {n_checked} plans")
-    for name, flags in sorted(flagged.items()):
-        print(f"{name:40s} {' '.join(flags)}")
+    """PLANSHAPES.tsv on stdout: one row of operator counts per query whose
+    name contains ``filter``, built, not run."""
+    print(f"# python tools/mis.py audit{' ' + args.filter if args.filter else ''} --sf {args.sf}")
+    print("\t".join(COLUMNS))
+    for _, row, _ in shapes(spark, args.sf, [n for n in QUERIES if args.filter in n]):
+        print(row, flush=True)
     return 0
 
 
@@ -421,7 +479,7 @@ def parser() -> argparse.ArgumentParser:
     cmd("scale", scale, "+", "collect time at --sf against --big").add_argument(
         "--big", required=True, help="the larger fixture directory")
     cmd("profile", profile, "*", "PROFILES.md on stdout (default: one query per family)")
-    cmd("audit", audit, None, "static plan hazards, no execution").add_argument(
+    cmd("audit", audit, None, "plan-shape rows (PLANSHAPES.tsv), no execution").add_argument(
         "filter", nargs="?", default="", help="audit only names containing this")
     cmd("explain", explain, "+", "formatted physical plans on stdout")
     return p
