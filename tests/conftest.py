@@ -29,6 +29,24 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def live_shapes(spark):
+    """``live_shapes(names)``: {name: (PLANSHAPES.tsv row, build seconds)}
+    of the live registry at the table's fixture. Each query is built once
+    per session, by whichever test asks for it first."""
+    from tools import mis
+
+    sf, _ = mis.committed_shapes()
+    built: dict[str, tuple[str, float]] = {}
+
+    def rows(names) -> dict[str, tuple[str, float]]:
+        todo = [n for n in names if n not in built]
+        built.update((n, (row, build_s)) for n, row, build_s in mis.shapes(spark, sf, todo))
+        return {n: built[n] for n in names}
+
+    return rows
+
+
 @pytest.fixture
 def in_query_scope():
     """Run the test inside a query scope, as ``registry.run`` builds: its

@@ -1,8 +1,6 @@
-"""The JVM↔Python crossing: a reused worker's import set-up and the int8
-rescore kernels the Python stages run (evaluated in-process through each
-UDF's ``.func``). Which queries cross into Python, and that no global sort
-re-runs a Python stage, is pinned per query by PLANSHAPES.tsv's python and
-pysort columns (tests/test_plans.py)."""
+"""The JVM↔Python crossing: a reused worker's import set-up, Python stages
+that run once under a global sort, and the int8 rescore kernels those
+stages run (evaluated in-process through each UDF's ``.func``)."""
 
 from __future__ import annotations
 
@@ -22,6 +20,36 @@ from hypothesis import strategies as st
 
 from minimised_impala_spark.extensions import vector_kernels as VK
 from minimised_impala_spark.shipping import drop_zip_finders
+from tools.mis import COLUMNS
+
+# Every registry query with a Python evaluation node in its physical plan
+# (the python column of PLANSHAPES.tsv; the test below fails for an entry
+# that stops crossing into Python).
+PYTHON_QUERIES = (
+    "dedup_embedding", "dedup_embedding_lsh", "dedup_semdedup",
+    "dedup_threshold_sweep", "multimodal_audio_chunks",
+    "multimodal_decode_stub", "multimodal_features",
+    "multimodal_frame_sample", "multimodal_pair_clip_filter",
+    "multimodal_resize_stub", "pipeline_quality_scorecard",
+    "sim_ann_recall_report", "sim_binary_quant_topk", "sim_cosine_topk",
+    "sim_filtered_ann", "sim_ivf_ann", "sim_ivfpq_ann", "sim_kmeans_cluster",
+    "sim_knn_classify", "sim_lsh_ann", "sim_lsh_buckets",
+    "sim_lsh_multiprobe", "sim_matryoshka_topk", "sim_mmr_rerank",
+    "sim_pq_ann", "sim_quantized_topk", "sim_range_search", "sim_rrf_hybrid",
+    "source_avro_scan", "text_wordpiece_encode", "uda_grouped_pandas",
+    "udf_pandas_scalar", "udtf_longest_streak", "udtf_sentence_split",
+)
+
+
+@pytest.mark.parametrize("name", PYTHON_QUERIES)
+def test_python_stage_not_resampled_by_sort(name, live_shapes):
+    """No Python stage feeds a global sort's range partitioner directly:
+    the partitioner samples its input by running it, so that stage would
+    run twice (shipping.order_after_python puts an exchange between).
+    Read off the query's live PLANSHAPES.tsv row, built in its own scope."""
+    row = dict(zip(COLUMNS, live_shapes([name])[name][0].split("\t")))
+    assert row["python"] != "-", f"{name} has no Python stage; drop it from the list: {row}"
+    assert row["pysort"] == "0", row
 
 
 def test_drop_zip_finders_stops_zip_rereads(tmp_path, monkeypatch):
