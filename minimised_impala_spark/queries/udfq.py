@@ -26,6 +26,7 @@ from pyspark.sql.functions import pandas_udf
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.queries.tpch import isum
 from minimised_impala_spark.serde import pickle_module_by_value
+from minimised_impala_spark.session import thread_class_loader_kept
 from minimised_impala_spark.shipping import order_after_python
 from minimised_impala_spark.tables import load_table
 
@@ -455,8 +456,9 @@ ORDER BY o_orderkey
 )
 def udf_java_jar(spark: SparkSession, sf_dir: str) -> DataFrame:
     jar = _compiled_java_udf_jar()
-    spark.sql(f"ADD JAR '{jar}'")
-    spark.udf.registerJavaFunction("mis_java_scale", "MisScaleUdf", T.LongType())
+    with thread_class_loader_kept(spark):
+        spark.sql(f"ADD JAR '{jar}'")
+        spark.udf.registerJavaFunction("mis_java_scale", "MisScaleUdf", T.LongType())
     o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(F.col("o_orderkey") < 200)

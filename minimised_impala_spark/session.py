@@ -21,6 +21,8 @@ from data volume, and maxPartitionBytes controls scan split sizing.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -92,6 +94,22 @@ def build_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def thread_class_loader_kept(spark: SparkSession) -> Iterator[None]:
+    """Restore the calling thread's context class loader on exit. ``ADD
+    JAR`` sets the session's jar loader as the caller's loader and leaves
+    it there; the driver's broadcast and query-stage pool threads inherit
+    the loader of the thread that starts them, and Spark keys generated
+    classes by loader as well as by code, so a second loader on the
+    driver makes a warm query recompile classes it already holds."""
+    thread = spark._jvm.java.lang.Thread.currentThread()
+    loader = thread.getContextClassLoader()
+    try:
+        yield
+    finally:
+        thread.setContextClassLoader(loader)
 
 
 def graft_cpus() -> int:

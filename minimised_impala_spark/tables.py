@@ -13,6 +13,7 @@ reads single parquet files because that is what the driver fixture provides.
 from __future__ import annotations
 
 import atexit
+import functools
 import hashlib
 import os
 import shutil
@@ -39,18 +40,21 @@ ALL_TABLES = TPCH_TABLES + EXTRA_TABLES
 BROADCASTABLE = {"region", "nation"}
 
 
+@functools.cache
+def _staging_root() -> str:
+    root = tempfile.mkdtemp(prefix=f"mis_{os.getpid()}_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
 def staging_dir(kind: str, sf_dir: str, table: str) -> str:
     """Scratch directory for a query that stages ``table`` of ``sf_dir``
-    (a format round trip, a stream's input links, a sink). Named per
-    source and per process, since another process staging the same source
-    would overwrite or delete the files mid-scan; removed when this
-    process exits."""
+    (a format round trip, a stream's input links, a sink). It lives under
+    one directory per process, removed when the process exits, since
+    another process staging the same source would overwrite or delete the
+    files mid-scan."""
     src = os.path.realpath(f"{sf_dir}/{table}.parquet")
-    digest = hashlib.md5(src.encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"mis_{kind}_{digest}_{os.getpid()}")
-    if not os.path.exists(path):  # first use in this process
-        atexit.register(shutil.rmtree, path, True)
-    return path
+    return os.path.join(_staging_root(), f"{kind}_{hashlib.md5(src.encode()).hexdigest()[:10]}")
 
 
 def ensure_engine_semantics(spark: SparkSession) -> None:

@@ -23,6 +23,8 @@ import pytest
 
 import pyspark
 
+from minimised_impala_spark.session import thread_class_loader_kept
+
 JARS = os.path.join(os.path.dirname(pyspark.__file__), "jars")
 
 
@@ -137,8 +139,9 @@ def test_java_udf_register_from_jar(spark, tmp_path):
     subprocess.run(
         ["jar", "cf", str(jar), "MisLevenshtein.class"], check=True, cwd=tmp_path
     )
-    spark.sql(f"ADD JAR '{jar}'")
-    spark.udf.registerJavaFunction("mis_lev", "MisLevenshtein", "int")
+    with thread_class_loader_kept(spark):
+        spark.sql(f"ADD JAR '{jar}'")
+        spark.udf.registerJavaFunction("mis_lev", "MisLevenshtein", "int")
     row = spark.sql(
         "SELECT mis_lev('kitten', 'sitting') AS d, mis_lev('abc', NULL) AS n"
     ).collect()[0]

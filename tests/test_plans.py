@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import difflib
 import re
-from collections import Counter
 
 import pytest
 
@@ -52,509 +51,194 @@ def test_plan_shapes_match_table(live_shapes):
 
 # --------------------------------------------------------------------------
 # Named plan properties, read off each query's live row. The table pins
-# every count exactly; these state, per query, the counts that decide its
-# cost at scale, so regenerating the table cannot hide their loss.
+# every count exactly; a named test states, next to its query, the counts
+# that decide its cost at scale, so regenerating the table cannot hide
+# their loss. A check reads ``column labels op n``: the count of
+# ``labels`` (``+`` sums labels, ``*`` is the whole column, an exchange
+# kind such as ``hash`` counts its hint-made ``hash/rebalance`` too)
+# compared with ``n``.
 
-def _row(live_shapes, name: str) -> dict[str, Counter]:
-    """``name``'s live row: per operator column, the count of each label
-    (0 when absent)."""
+_OPS = {"==": int.__eq__, ">=": int.__ge__, "<=": int.__le__}
+_EQUIJOIN = ("join BroadcastNestedLoopJoin+CartesianProduct == 0",
+             "join SortMergeJoin+BroadcastHashJoin+ShuffledHashJoin >= 1")
+
+
+def _row(live_shapes, name: str) -> dict[str, dict[str, int]]:
+    """``name``'s live row: per operator column, the count of each label."""
     cells = dict(zip(mis.COLUMNS, live_shapes([name])[name][0].split("\t")))
     assert not cells["flags"].startswith("ERROR"), f"{name}: {cells['flags']}"
     return {
-        col: Counter({k: int(n) for k, n in (p.rsplit(":", 1) for p in cells[col].split() if p != "-")})
+        col: {k: int(n) for k, n in (p.rsplit(":", 1) for p in cells[col].split() if p != "-")}
         for col in mis.COLUMNS[1:-2]
     }
 
 
-def _exchanges(row: dict[str, Counter], kind: str) -> int:
-    """Exchanges of one partitioning kind, hint-made ones included."""
-    return sum(n for label, n in row["exchange"].items() if label.split("/")[0] == kind)
-
-
-def test_small_dims_broadcast(live_shapes):
-    """nation/region joins must broadcast, not shuffle (reference
-    cost-based choice: fe/.../planner/DistributedPlanner.java:303)."""
-    assert _row(live_shapes, "tpch_q5")["join"]["BroadcastHashJoin"] >= 1
-
-
-def test_topk_uses_take_ordered(live_shapes):
-    """ORDER BY + LIMIT compiles to TakeOrderedAndProject — Spark's
-    TopNNode (be/src/exec/topn-node.h:33)."""
-    assert _row(live_shapes, "tpch_q18")["ops"]["TakeOrderedAndProject"] >= 1
-
-
-def test_partial_final_aggregation(live_shapes):
-    """Aggregates run map-side partial then final after the shuffle —
-    the reference's two-phase agg (fe/.../analysis/AggregateInfo.java:33)."""
-    assert _row(live_shapes, "tpch_q1")["agg"]["HashAggregate"] >= 2
-
-
-def test_tpcds_star_broadcasts_dims(live_shapes):
-    """tpcds_q3_star: both dim sides broadcast; exactly one shuffle (the
-    groupBy) — the star-join shape that holds at 100 TB with runtime
-    filters on the fact scan."""
-    row = _row(live_shapes, "tpcds_q3_star")
-    assert row["join"]["BroadcastHashJoin"] >= 1
-    assert row["join"]["SortMergeJoin"] == 0
-    assert _exchanges(row, "hash") == 1
-
-
-def test_tpcds_scalar_counts_single_partition(live_shapes):
-    """tpcds_q88_band_counts: all eight banded counts come out of ONE
-    conditional aggregation over ONE fact scan (one single-partition
-    exchange) — no per-band scans and no joins of any kind."""
-    row = _row(live_shapes, "tpcds_q88_band_counts")
-    assert _exchanges(row, "single") == 1
-    assert sum(row["scan"].values()) == 1
-    assert not row["join"]
-
-
-def test_dedup_embedding_no_broadcast_nested_loop(live_shapes):
-    """dedup_embedding must stay the blocked tile computation — the r3
-    all-pairs form planned a BroadcastNestedLoopJoin over the corpus,
-    which never finishes at 100 TB. The tile groupBy feeds
-    applyInPandas."""
-    row = _row(live_shapes, "dedup_embedding")
-    assert row["join"]["BroadcastNestedLoopJoin"] == 0
-    assert row["join"]["CartesianProduct"] == 0
-    assert row["python"]["FlatMapGroupsInPandas"] >= 1
-
-
-def test_rollup_hierarchy_reuses_minute_exchange(live_shapes):
-    """The rollup cascade computes the minute aggregate ONCE and feeds
-    the hour/day grains from it, not rescanning raw events per grain:
-    the lower grains are persisted, and events is scanned once."""
-    row = _row(live_shapes, "events_rollup_hierarchy")
-    assert row["reuse"]["InMemoryTableScan"] >= 2
-    assert row["scan"] == Counter(events=1)
-
-
-def test_heavy_hitters_broadcasts_candidates(live_shapes):
-    """The exact recount joins the token stream against the BROADCAST
-    candidate set (threshold-pruned) — never a shuffle of the full token
-    stream against itself."""
-    join = _row(live_shapes, "text_heavy_hitters")["join"]
-    assert join["BroadcastHashJoin"] >= 1
-    assert join["BroadcastNestedLoopJoin"] == 0
-    assert join["CartesianProduct"] == 0
-
-
-def test_bloom_decontamination_no_cartesian(live_shapes):
-    """Bloom prefilter + rescore stays on broadcast equi-joins (positions,
-    then candidate strings) — no all-pairs operator anywhere."""
-    join = _row(live_shapes, "pipeline_decontaminate_bloom")["join"]
-    assert join["BroadcastNestedLoopJoin"] == 0
-    assert join["CartesianProduct"] == 0
-    assert join["BroadcastHashJoin"] >= 2
-
-
-def test_chunk_overlap_no_shuffle(live_shapes):
-    """Context-window chunking is split→sequence→explode→slice — pure
-    narrow ops. A hash exchange in this plan would mean an accidental
-    repartition of the full token stream (catastrophic at 100 TB for a
-    map-only transform); the one range exchange is the presentation
-    sort the oracle compares against."""
-    row = _row(live_shapes, "text_chunk_overlap")
-    assert _exchanges(row, "hash") == 0
-    assert row["ops"]["Generate"] >= 1
-
-
-def test_temperature_resample_broadcasts_thresholds(live_shapes):
-    """The per-language census/threshold side is 5 rows — it must reach
-    the corpus via BroadcastHashJoin, never a shuffled join of the full
-    documents table against a 5-row dim."""
-    assert _row(live_shapes, "text_temperature_resample")["join"]["BroadcastHashJoin"] >= 1
-
-
-def test_pq_ann_broadcasts_queries(live_shapes):
-    """PQ ADC scan: the bounded query set must broadcast over the coded
-    corpus (a shuffle of the corpus keyed by query would be quadratic
-    traffic at scale)."""
-    join = _row(live_shapes, "sim_pq_ann")["join"]
-    assert join["BroadcastNestedLoopJoin"] + join["BroadcastHashJoin"] >= 1
-
-
-def test_ivfpq_probe_is_equijoin(live_shapes):
-    """IVF-PQ candidate generation must be a hash EQUI-join on list_id
-    (broadcast of the bounded query set) — the list pruning is the whole
-    point; a nested-loop over the full coded corpus would defeat it.
-    (Its BroadcastNestedLoopJoins belong to the ground-truth side.)"""
-    assert _row(live_shapes, "sim_ivfpq_ann")["join"]["BroadcastHashJoin"] >= 1
-
-
-def _equijoin_only(join: Counter) -> None:
-    assert join["BroadcastNestedLoopJoin"] == 0, join
-    assert join["CartesianProduct"] == 0, join
-    assert join["SortMergeJoin"] + join["BroadcastHashJoin"] + join["ShuffledHashJoin"] >= 1, join
-
-
-def test_dedup_embedding_lsh_no_allpairs_join(live_shapes):
-    """dedup_embedding_lsh's candidates must come from the (band, bucket)
-    EQUI-join, and the rescore joins back to the vectors by id: the
-    whole point of the banded default is that all-pairs never appears in
-    the plan, only collision candidates."""
-    _equijoin_only(_row(live_shapes, "dedup_embedding_lsh")["join"])
-
-
-def test_bm25_broadcasts_query_terms_and_takeordered(live_shapes):
-    """BM25 scoring must touch only postings of queried terms (broadcast
-    of the bounded query-term set → BroadcastHashJoin on term) and the
-    top-k must be TakeOrderedAndProject, never a global sort of the
-    scored corpus."""
-    row = _row(live_shapes, "text_bm25_topk")
-    assert row["join"]["BroadcastHashJoin"] >= 1
-    assert row["ops"]["TakeOrderedAndProject"] >= 1
-
-
-def test_semdedup_pairs_are_cluster_equijoin(live_shapes):
-    """dedup_semdedup's pairwise stage must be an EQUI-join on the
-    cluster id (pairs ∝ Σ|cluster|², the SemDeDup bound) — an all-pairs
-    join would defeat the clustering entirely."""
-    _equijoin_only(_row(live_shapes, "dedup_semdedup")["join"])
-
-
-def test_kmeans_assignment_is_narrow_map(live_shapes):
-    """sim_kmeans_cluster's final assignment must be a narrow map over
-    the embeddings scan (centroids closure-captured) — no join and no
-    aggregate in the returned plan; the Lloyd's reduce runs at
-    plan-build time."""
-    row = _row(live_shapes, "sim_kmeans_cluster")
-    assert not row["join"] and not row["agg"], row
-
-
-def test_quality_classifier_is_codegen_map(live_shapes):
-    """text_quality_classifier must be pure Column arithmetic — no
-    Python UDF in the plan (the 'model' is constants in codegen'd
-    expressions) and no aggregate/join: a narrow map over the scan."""
-    row = _row(live_shapes, "text_quality_classifier")
-    assert not row["python"] and not row["join"] and not row["agg"], row
-
-
-def test_qualify_single_window_with_group_limit(live_shapes):
-    """The QUALIFY rewrite inlines the rn alias into the predicate, so the
-    plan must carry exactly ONE Window operator (Catalyst de-duplicates
-    the identical window spec) and — because the predicate is rn <= k —
-    Spark's rank-limit pushdown inserts WindowGroupLimit, the optimal
-    top-k-per-group shape (partial limit before the exchange)."""
-    window = _row(live_shapes, "dialect_qualify")["window"]
-    assert window["Window"] + window["Window[global]"] == 1, window
-    assert window["WindowGroupLimit"] >= 1
-
-
-def test_bpe_merge_is_takeordered_partial_agg(live_shapes):
-    """text_bpe_merge: top-20 must be TakeOrderedAndProject (never a global
-    sort) over a partial/final hash aggregation of pair counts."""
-    row = _row(live_shapes, "text_bpe_merge")
-    assert row["ops"]["TakeOrderedAndProject"] >= 1
-    assert row["agg"]["HashAggregate"] >= 2
-
-
-def test_wordpiece_dictionary_encode_broadcasts(live_shapes):
-    """text_wordpiece_encode must encode DISTINCT words in the Arrow UDF
-    (MapInPandas over the deduped word set) and broadcast the tiny
-    encoding table back to occurrences — never a shuffle join on the
-    occurrence stream."""
-    row = _row(live_shapes, "text_wordpiece_encode")
-    assert row["python"]["MapInPandas"] >= 1
-    assert row["join"]["BroadcastHashJoin"] >= 1
-    assert row["join"]["SortMergeJoin"] == 0
-
-
-def test_span_corruption_is_shuffle_free_map(live_shapes):
-    """text_span_corruption is embarrassingly parallel per-row prep: the
-    only exchange allowed is the final presentation sort's range
-    partitioning — no aggregate, no join."""
-    row = _row(live_shapes, "text_span_corruption")
-    assert not row["agg"] and not row["join"], row
-    assert sum(row["exchange"].values()) <= 1
-
-
-def test_domain_cap_uses_window_group_limit(live_shapes):
-    """text_domain_cap's rank <= CAP predicate must be recognized as a
-    WindowGroupLimit (map-side partial top-CAP per source before the
-    shuffle) — the plan property that makes capping a hot domain cheap
-    instead of shipping the whole skewed partition."""
-    assert _row(live_shapes, "text_domain_cap")["window"]["WindowGroupLimit"] >= 1
-
-
-def test_diverse_sample_broadcasts_centroids(live_shapes):
-    """sim_diverse_sample's centroid and centroid-norm relations are
-    |labels|-bounded — both joins back to the component/member tables
-    must broadcast, never shuffle the corpus against a 640-row dim; the
-    per-label top-3 is a partial limit."""
-    row = _row(live_shapes, "sim_diverse_sample")
-    assert row["join"]["BroadcastHashJoin"] >= 2
-    assert row["window"]["WindowGroupLimit"] >= 1
-
-
-def test_tfidf_keywords_group_limit_and_broadcast_df(live_shapes):
-    """text_tfidf_keywords: the |vocab|-bounded document-frequency table
-    must broadcast against the postings, and the per-doc top-3 must be a
-    WindowGroupLimit (map-side partial top-k per doc)."""
-    row = _row(live_shapes, "text_tfidf_keywords")
-    assert row["join"]["BroadcastHashJoin"] >= 1
-    assert row["window"]["WindowGroupLimit"] >= 1
-
-
-def test_range_search_is_shuffle_free_before_sort(live_shapes):
-    """sim_range_search: queries broadcast (BroadcastNestedLoopJoin on
-    the not-equal condition) and the tau predicate applies map-side —
-    no Window operator and no aggregate before the final presentation
-    sort. The one hash exchange is the rebalance that keeps the kernel
-    stage from being re-run by the sort's range sampling."""
-    row = _row(live_shapes, "sim_range_search")
-    assert row["join"]["BroadcastNestedLoopJoin"] >= 1
-    assert row["window"]["Window"] + row["window"]["Window[global]"] == 0
-    assert not row["agg"], row
-    assert _exchanges(row, "hash") == row["exchange"]["hash/rebalance"] == 1, row
-
-
-def test_stopword_profile_single_shuffle(live_shapes):
-    """text_stopword_profile: the token/stopword HOF counts are per-row
-    expressions, so the only hash exchange in the plan is the final
-    (lang, source) aggregate's — one shuffle total (plus the sort)."""
-    assert _exchanges(_row(live_shapes, "text_stopword_profile"), "hash") == 1
-
-
-def test_markov_top3_is_window_group_limit(live_shapes):
-    """events_markov_next_event: the per-state top-3 rank must be a
-    WindowGroupLimit over the |types|²-bounded transition counts."""
-    assert _row(live_shapes, "events_markov_next_event")["window"]["WindowGroupLimit"] >= 1
-
-
-def test_rolling_active_broadcast_range_join_single_expand(live_shapes):
-    """events_rolling_active: the |days|-bounded anchor list must
-    broadcast into the range join (BroadcastNestedLoopJoin on the
-    BETWEEN condition — never a shuffled/sort-merge join of user-days),
-    and all three horizons (DAU/WAU/MAU) must compile into ONE Expand
-    (a single multi-distinct aggregate pass), not three separate
-    aggregations of the expanded table."""
-    row = _row(live_shapes, "events_rolling_active")
-    assert row["join"]["BroadcastNestedLoopJoin"] >= 1
-    assert row["join"]["SortMergeJoin"] == 0
-    assert row["ops"]["Expand"] == 1
-
-
-def test_readability_single_shuffle(live_shapes):
-    """text_readability_scores: the three regexp counts are per-row
-    expressions; the only hash exchange in the plan is the final
-    (lang, band) rollup's — one shuffle total (plus the sort)."""
-    assert _exchanges(_row(live_shapes, "text_readability_scores"), "hash") == 1
-
-
-def test_padding_efficiency_single_hash_shuffle(live_shapes):
-    """text_padding_efficiency: both strategy arms are map-side-combined
-    aggregates over the same narrow scan — exactly one hash exchange
-    (the bucket groupBy; the single_max arm's global agg uses a
-    single-partition exchange, not a hash one)."""
-    row = _row(live_shapes, "text_padding_efficiency")
-    assert _exchanges(row, "hash") == 1
-    assert not row["join"], row
-
-
-def test_quality_calibration_uses_prefix_scan(live_shapes):
-    """text_quality_calibration: the global score rank must be the
-    two-phase prefix scan (one range exchange, its result persisted),
-    never a partition-less sort window over the corpus; the corpus-count
-    join is a one-row broadcast."""
-    row = _row(live_shapes, "text_quality_calibration")
-    # the prefix scan's range exchange and the final output sort's
-    assert _exchanges(row, "range") == 2, row
-    assert row["reuse"]["InMemoryTableScan"] == 2
-    assert row["join"]["SortMergeJoin"] == 0
-    assert row["join"]["BroadcastNestedLoopJoin"] == 1
-
-
-def test_kneser_ney_model_tables_broadcast(live_shapes):
-    """text_kneser_ney_lm: every model table broadcasts into the scoring
-    joins — the corpus-sized bigram stream is never the build side of a
-    shuffle join. The per-type NLL is precomputed on the vocab-sized
-    bigram-type table, so scoring is ONE broadcast join."""
-    join = _row(live_shapes, "text_kneser_ney_lm")["join"]
-    assert join["BroadcastHashJoin"] >= 3
-    assert join["SortMergeJoin"] == 0
-
-
-def test_source_overlap_joins_distinct_grams(live_shapes):
-    """pipeline_source_overlap_matrix: the self-join runs on DISTINCT
-    (source, gram) rows and the |sources|-row totals join by broadcast;
-    no cartesian product anywhere."""
-    join = _row(live_shapes, "pipeline_source_overlap_matrix")["join"]
-    assert join["CartesianProduct"] == 0
-    assert join["BroadcastHashJoin"] >= 2
-
-
-def test_embedding_drift_single_component_agg(live_shapes):
-    """pipeline_embedding_drift: one (label, dim) component aggregate
-    feeds the cosine; the per-label counts join is a broadcast of
-    |labels| rows; nothing shuffles the exploded components more than
-    once."""
-    row = _row(live_shapes, "pipeline_embedding_drift")
-    assert row["join"]["BroadcastHashJoin"] == 1
-    assert row["join"]["SortMergeJoin"] == 0
-    assert _exchanges(row, "hash") <= 3
-
-
-def test_vocab_coverage_take_ordered_bounds_frame(live_shapes):
-    """text_vocab_coverage_curve: the top-max(K) frame must come from
-    TakeOrderedAndProject (per-partition heaps), so the rank window and
-    the K join run on a K-bounded frame, never the full census."""
-    row = _row(live_shapes, "text_vocab_coverage_curve")
-    assert row["ops"]["TakeOrderedAndProject"] >= 1
-    assert row["join"]["SortMergeJoin"] == 0
-
-
-def test_heaps_fit_windows_partition_by_source(live_shapes):
-    """text_heaps_fit: the running sums are per-source windows — the
-    only range exchange in the plan is the presentation sort, never a
-    partition-less corpus-wide window sort."""
-    row = _row(live_shapes, "text_heaps_fit")
-    assert _exchanges(row, "range") == 1
-    assert row["window"]["Window[global]"] == 0
-
-
-def test_lifecycle_states_user_keyed_windows(live_shapes):
-    """events_lifecycle_states: lag/lead run over user-keyed windows on
-    the DISTINCT user-week relation — no partition-less window, and the
-    horizon cap is a one-row broadcast (BroadcastNestedLoopJoin)."""
-    row = _row(live_shapes, "events_lifecycle_states")
-    assert row["join"]["BroadcastNestedLoopJoin"] >= 1
-    assert _exchanges(row, "range") == 1  # the presentation sort
-    assert row["window"]["Window[global]"] == 0
-
-
-def test_engagement_histogram_bounded_window(live_shapes):
-    """events_engagement_histogram: the cumulative at-least share's
-    global window is legal ONLY because it runs on the calendar-bounded
-    histogram (<= 31 rows) — the corpus-sized stages are the
-    two-level distinct (user, day), per-user count and histogram rollup
-    before it."""
-    row = _row(live_shapes, "events_engagement_histogram")
-    assert _exchanges(row, "hash") <= 4
-    assert set(row["join"]) <= {"BroadcastNestedLoopJoin"}, row
-
-
-def test_shard_assignment_uses_prefix_scan(live_shapes):
-    """pipeline_shard_assignment: the running token total is the
-    two-phase prefix scan (one range exchange, its result persisted),
-    and the totals/width table is a one-row broadcast."""
-    row = _row(live_shapes, "pipeline_shard_assignment")
-    # the prefix scan's range exchange and the final output sort's
-    assert _exchanges(row, "range") == 2, row
-    assert row["reuse"]["InMemoryTableScan"] == 2
-    assert row["join"]["BroadcastNestedLoopJoin"] >= 1
-    assert row["join"]["SortMergeJoin"] == 0
-
-
-def test_time_decay_attribution_band_join_and_bounded_window(live_shapes):
-    """events_attribution_time_decay: same time-band join shape as the
-    linear model; the share-denominator window is keyed by purchase
-    event_id (never partition-less), and nothing cartesian slips in."""
-    row = _row(live_shapes, "events_attribution_time_decay")
-    assert row["window"]["Window"] >= 1
-    assert row["window"]["Window[global]"] == 0
-    assert row["join"]["CartesianProduct"] == 0
-
-
-def test_entropy_rate_count_tables_broadcast(live_shapes):
-    """text_entropy_rate: the per-source unigram total and bigram head
-    tables broadcast into the entropy sums (they are vocab-bounded);
-    the corpus-sized token/bigram streams only ever feed aggregates."""
-    join = _row(live_shapes, "text_entropy_rate")["join"]
-    assert join["BroadcastHashJoin"] >= 2
-    assert join["CartesianProduct"] == 0
-
-
-def test_benford_audit_single_shuffle_family(live_shapes):
-    """pipeline_benford_audit: a narrow digit map + one 9-row group —
-    no joins except the one-row total broadcast."""
-    join = _row(live_shapes, "pipeline_benford_audit")["join"]
-    assert join == Counter(BroadcastNestedLoopJoin=1), join
-
-
-def test_k_anonymity_single_shuffle(live_shapes):
-    """pipeline_k_anonymity_audit: one QI-keyed count, one band rollup
-    — two hash exchanges, no joins."""
-    row = _row(live_shapes, "pipeline_k_anonymity_audit")
-    assert _exchanges(row, "hash") == 2
-    assert not row["join"], row
-
-
-def test_jsd_joins_posting_lists_with_broadcast_totals(live_shapes):
-    """text_jsd_source_divergence: source totals broadcast into both
-    probability sides; the pair join runs on the (source, tok) census
-    (posting lists bounded by |sources|); no cartesian product."""
-    join = _row(live_shapes, "text_jsd_source_divergence")["join"]
-    assert join["BroadcastHashJoin"] >= 2
-    assert join["CartesianProduct"] == 0
-
-
-def test_phash_neardup_band_join_shape(live_shapes):
-    """multimodal_phash_neardup: candidates come from the (chunk_idx,
-    chunk_val) self-equi-join over the Arrow-kernel hash table — never
-    a cartesian pairing of payloads; the Hamming rescore is a bounded
-    fold on collision pairs."""
-    row = _row(live_shapes, "multimodal_phash_neardup")
-    assert row["join"]["CartesianProduct"] == 0
-    assert row["python"]["ArrowEvalPython"] + row["scan"]["rdd"] >= 1  # kernel stage
-
-
-def test_simhash_columnar_bit_sums(live_shapes):
-    """dedup_simhash: the 64 bit sums are columnar aggregates in ONE
-    doc-keyed groupBy — the plan must not contain the 64x-row bit
-    explosion (a join against a 64-row range before the signature
-    aggregate; the exploded form measured ~3x slower)."""
-    ops = _row(live_shapes, "dedup_simhash")["ops"]
-    assert ops["Generate"] >= 1  # 4-chunk fan-out only
-    assert ops["Range"] == 0
-
-
-def test_tpch_q2_single_shuffle_window_min(live_shapes):
-    """tpch_q2: the decorrelated min-cost-per-part must come from a
-    ps_partkey window sharing ONE exchange with the filter — never a
-    groupBy + self-join (which re-shuffles the derived partsupp and
-    sort-merges it against itself). Dims broadcast; TopN is top-k."""
-    row = _row(live_shapes, "tpch_q2")
-    assert row["join"]["SortMergeJoin"] == 0
-    assert _exchanges(row, "hash") == 1
-    assert row["ops"]["TakeOrderedAndProject"] >= 1
-    assert row["join"]["BroadcastHashJoin"] >= 3
-
-
-def test_tpch_q11_broadcast_total(live_shapes):
-    """tpch_q11: the global total must reach the per-part HAVING as a
-    one-row broadcast (BroadcastNestedLoopJoin), never a shuffled join;
-    supplier/nation dims broadcast."""
-    join = _row(live_shapes, "tpch_q11")["join"]
-    assert join["BroadcastNestedLoopJoin"] >= 1
-    assert join["SortMergeJoin"] == 0
-
-
-def test_nested_topn_no_partitionless_window(live_shapes):
-    """nested_tpch_order_topn: the per-customer top-k comes from
-    sort_array/slice kernels on the nested collection — the plan must
-    not contain a window at all (the oracle's row_number is DuckDB's
-    replay, not the engine's plan), and the only range exchange is the
-    presentation sort."""
-    row = _row(live_shapes, "nested_tpch_order_topn")
-    assert not row["window"], row
-    assert _exchanges(row, "range") == 1
-
-
-def test_nested_q20_demand_joined_not_recomputed(live_shapes):
-    """nested_tpch_q20: part dim broadcasts; the element-vs-demand
-    comparison is an equi-join on partkey (candidate-bounded), with no
-    cartesian stage."""
-    join = _row(live_shapes, "nested_tpch_q20")["join"]
-    assert join["CartesianProduct"] == 0
-    assert join["BroadcastHashJoin"] >= 2
-
-
-def test_tpcds_q43_pivot_is_single_aggregate_pass(live_shapes):
-    """q43's 7 day-of-week columns are conditional sums in ONE aggregate —
-    the plan must contain exactly one hash-partitioned exchange (the
-    groupBy), not one scan/agg per pivot column."""
-    assert _exchanges(_row(live_shapes, "tpcds_q43"), "hash") == 1
+def _check(live_shapes, name: str, *checks: str) -> None:
+    row = _row(live_shapes, name)
+    for check in checks:
+        col, labels, op, n = check.split()
+        got = sum(k for label, k in row[col].items()
+                  if labels == "*" or {label, label.split("/")[0]} & set(labels.split("+")))
+        assert _OPS[op](got, int(n)), f"{name}: {check}, got {got}: {dict(row[col])}"
+
+
+def _pin(name: str, *checks: str):
+    """A named test of ``checks`` on ``name``'s live row."""
+    return lambda live_shapes: _check(live_shapes, name, *checks)
+
+
+# nation/region join broadcast (the reference's cost-based choice, DistributedPlanner.java:303)
+test_small_dims_broadcast = _pin("tpch_q5", "join BroadcastHashJoin >= 1")
+# ORDER BY + LIMIT is a top-k, Spark's TopNNode (be/src/exec/topn-node.h:33)
+test_topk_uses_take_ordered = _pin("tpch_q18", "ops TakeOrderedAndProject >= 1")
+# map-side partial then final aggregate (the reference's two-phase agg, AggregateInfo.java:33)
+test_partial_final_aggregation = _pin("tpch_q1", "agg HashAggregate >= 2")
+# star join: dims broadcast, the one shuffle is the groupBy
+test_tpcds_star_broadcasts_dims = _pin(
+    "tpcds_q3_star", "join BroadcastHashJoin >= 1", "join SortMergeJoin == 0", "exchange hash == 1")
+# eight banded counts from one conditional aggregate over one fact scan
+test_tpcds_scalar_counts_single_partition = _pin(
+    "tpcds_q88_band_counts", "exchange single == 1", "scan * == 1", "join * == 0")
+# blocked tiles into applyInPandas; an all-pairs join over the corpus never finishes at 100 TB
+test_dedup_embedding_no_broadcast_nested_loop = _pin(
+    "dedup_embedding", "join BroadcastNestedLoopJoin+CartesianProduct == 0",
+    "python FlatMapGroupsInPandas >= 1")
+# coarser grains read the persisted minute aggregate; events is scanned once
+test_rollup_hierarchy_reuses_minute_exchange = _pin(
+    "events_rollup_hierarchy", "reuse InMemoryTableScan >= 2", "scan * == 1", "scan events == 1")
+# the exact recount joins the broadcast candidate set, not the token stream with itself
+test_heavy_hitters_broadcasts_candidates = _pin(
+    "text_heavy_hitters", "join BroadcastHashJoin >= 1", "join BroadcastNestedLoopJoin+CartesianProduct == 0")
+# bloom prefilter and rescore stay on broadcast equi-joins
+test_bloom_decontamination_no_cartesian = _pin(
+    "pipeline_decontaminate_bloom", "join BroadcastNestedLoopJoin+CartesianProduct == 0",
+    "join BroadcastHashJoin >= 2")
+# chunking is narrow; a hash exchange would reshuffle the token stream
+test_chunk_overlap_no_shuffle = _pin("text_chunk_overlap", "exchange hash == 0", "ops Generate >= 1")
+# the 5-row per-language threshold table reaches the corpus by broadcast
+test_temperature_resample_broadcasts_thresholds = _pin(
+    "text_temperature_resample", "join BroadcastHashJoin >= 1")
+# the bounded query set broadcasts over the coded corpus
+test_pq_ann_broadcasts_queries = _pin("sim_pq_ann", "join BroadcastNestedLoopJoin+BroadcastHashJoin >= 1")
+# IVF probing is an equi-join on list_id (its nested loops are the ground-truth side)
+test_ivfpq_probe_is_equijoin = _pin("sim_ivfpq_ann", "join BroadcastHashJoin >= 1")
+# candidates come from the (band, bucket) equi-join, never all pairs
+test_dedup_embedding_lsh_no_allpairs_join = _pin("dedup_embedding_lsh", *_EQUIJOIN)
+# postings of queried terms only (broadcast), and a top-k, not a global sort
+test_bm25_broadcasts_query_terms_and_takeordered = _pin(
+    "text_bm25_topk", "join BroadcastHashJoin >= 1", "ops TakeOrderedAndProject >= 1")
+# pairs are an equi-join on the cluster id (the SemDeDup bound)
+test_semdedup_pairs_are_cluster_equijoin = _pin("dedup_semdedup", *_EQUIJOIN)
+# the final assignment is a narrow map; Lloyd's reduce runs at build time
+test_kmeans_assignment_is_narrow_map = _pin("sim_kmeans_cluster", "join * == 0", "agg * == 0")
+# the classifier is codegen'd column arithmetic over the scan
+test_quality_classifier_is_codegen_map = _pin(
+    "text_quality_classifier", "python * == 0", "join * == 0", "agg * == 0")
+# QUALIFY rn <= k: one window, with the rank limit pushed below the exchange
+test_qualify_single_window_with_group_limit = _pin(
+    "dialect_qualify", "window Window+Window[global] == 1", "window WindowGroupLimit >= 1")
+# top-20 pairs: a top-k over a partial/final aggregate
+test_bpe_merge_is_takeordered_partial_agg = _pin(
+    "text_bpe_merge", "ops TakeOrderedAndProject >= 1", "agg HashAggregate >= 2")
+# distinct words encode in the Arrow UDF; the encoding table broadcasts back
+test_wordpiece_dictionary_encode_broadcasts = _pin(
+    "text_wordpiece_encode", "python MapInPandas >= 1", "join BroadcastHashJoin >= 1",
+    "join SortMergeJoin == 0")
+# per-row prep: at most the presentation sort's exchange
+test_span_corruption_is_shuffle_free_map = _pin(
+    "text_span_corruption", "agg * == 0", "join * == 0", "exchange * <= 1")
+# rank <= CAP is a partial top-CAP per source before the shuffle
+test_domain_cap_uses_window_group_limit = _pin("text_domain_cap", "window WindowGroupLimit >= 1")
+# |labels|-bounded centroid tables broadcast; per-label top-3 is a partial limit
+test_diverse_sample_broadcasts_centroids = _pin(
+    "sim_diverse_sample", "join BroadcastHashJoin >= 2", "window WindowGroupLimit >= 1")
+# the vocab-bounded df table broadcasts; per-doc top-3 is a partial limit
+test_tfidf_keywords_group_limit_and_broadcast_df = _pin(
+    "text_tfidf_keywords", "join BroadcastHashJoin >= 1", "window WindowGroupLimit >= 1")
+# queries broadcast, tau applies map-side; the one hash exchange is order_after_python's rebalance
+test_range_search_is_shuffle_free_before_sort = _pin(
+    "sim_range_search", "join BroadcastNestedLoopJoin >= 1", "window Window+Window[global] == 0",
+    "agg * == 0", "exchange hash == 1", "exchange hash/rebalance == 1")
+# the HOF counts are per-row; one shuffle, the final aggregate's
+test_stopword_profile_single_shuffle = _pin("text_stopword_profile", "exchange hash == 1")
+# per-state top-3 over the |types|^2 transition counts is a partial limit
+test_markov_top3_is_window_group_limit = _pin("events_markov_next_event", "window WindowGroupLimit >= 1")
+# the day anchors broadcast into the range join; DAU/WAU/MAU share one Expand
+test_rolling_active_broadcast_range_join_single_expand = _pin(
+    "events_rolling_active", "join BroadcastNestedLoopJoin >= 1", "join SortMergeJoin == 0",
+    "ops Expand == 1")
+# the regexp counts are per-row; one shuffle, the rollup's
+test_readability_single_shuffle = _pin("text_readability_scores", "exchange hash == 1")
+# both strategy arms aggregate the same narrow scan; one hash shuffle
+test_padding_efficiency_single_hash_shuffle = _pin(
+    "text_padding_efficiency", "exchange hash == 1", "join * == 0")
+# the global rank is the persisted prefix scan, not a partition-less window
+test_quality_calibration_uses_prefix_scan = _pin(
+    "text_quality_calibration", "exchange range == 2", "reuse InMemoryTableScan == 2",
+    "join SortMergeJoin == 0", "join BroadcastNestedLoopJoin == 1")
+# every model table broadcasts; the bigram stream is never a shuffle-join side
+test_kneser_ney_model_tables_broadcast = _pin(
+    "text_kneser_ney_lm", "join BroadcastHashJoin >= 3", "join SortMergeJoin == 0")
+# the self-join runs on distinct (source, gram) rows; totals broadcast
+test_source_overlap_joins_distinct_grams = _pin(
+    "pipeline_source_overlap_matrix", "join CartesianProduct == 0", "join BroadcastHashJoin >= 2")
+# one (label, dim) component aggregate; the |labels| counts broadcast
+test_embedding_drift_single_component_agg = _pin(
+    "pipeline_embedding_drift", "join BroadcastHashJoin == 1", "join SortMergeJoin == 0",
+    "exchange hash <= 3")
+# the top-max(K) frame is a top-k, so the rank window and the K join stay K-bounded
+test_vocab_coverage_take_ordered_bounds_frame = _pin(
+    "text_vocab_coverage_curve", "ops TakeOrderedAndProject >= 1", "join SortMergeJoin == 0")
+# running sums are per-source windows; the range exchange is the presentation sort
+test_heaps_fit_windows_partition_by_source = _pin(
+    "text_heaps_fit", "exchange range == 1", "window Window[global] == 0")
+# lag/lead over user-keyed windows; the horizon cap is a one-row broadcast
+test_lifecycle_states_user_keyed_windows = _pin(
+    "events_lifecycle_states", "join BroadcastNestedLoopJoin >= 1", "exchange range == 1",
+    "window Window[global] == 0")
+# the global window runs on the <= 31-row histogram, after the corpus-sized stages
+test_engagement_histogram_bounded_window = _pin(
+    "events_engagement_histogram", "exchange hash <= 4",
+    "join BroadcastHashJoin+SortMergeJoin+ShuffledHashJoin+CartesianProduct == 0")
+# the running token total is the persisted prefix scan; totals are a one-row broadcast
+test_shard_assignment_uses_prefix_scan = _pin(
+    "pipeline_shard_assignment", "exchange range == 2", "reuse InMemoryTableScan == 2",
+    "join BroadcastNestedLoopJoin >= 1", "join SortMergeJoin == 0")
+# the share window is keyed by purchase, never partition-less
+test_time_decay_attribution_band_join_and_bounded_window = _pin(
+    "events_attribution_time_decay", "window Window >= 1", "window Window[global] == 0",
+    "join CartesianProduct == 0")
+# vocab-bounded count tables broadcast into the entropy sums
+test_entropy_rate_count_tables_broadcast = _pin(
+    "text_entropy_rate", "join BroadcastHashJoin >= 2", "join CartesianProduct == 0")
+# a narrow digit map and one 9-row group; the only join is the one-row total
+test_benford_audit_single_shuffle_family = _pin(
+    "pipeline_benford_audit", "join * == 1", "join BroadcastNestedLoopJoin == 1")
+# one QI-keyed count and one band rollup; no joins
+test_k_anonymity_single_shuffle = _pin("pipeline_k_anonymity_audit", "exchange hash == 2", "join * == 0")
+# source totals broadcast into both sides; the pair join runs on the census
+test_jsd_joins_posting_lists_with_broadcast_totals = _pin(
+    "text_jsd_source_divergence", "join BroadcastHashJoin >= 2", "join CartesianProduct == 0")
+# candidates from the chunk self-equi-join over the Arrow kernel's hashes
+test_phash_neardup_band_join_shape = _pin(
+    "multimodal_phash_neardup", "join CartesianProduct == 0", "python ArrowEvalPython >= 1")
+# 64 columnar bit sums in one groupBy, not a 64x bit explosion against a range
+test_simhash_columnar_bit_sums = _pin("dedup_simhash", "ops Generate >= 1", "ops Range == 0")
+# min cost per part is a window sharing one exchange, not a groupBy self-join
+test_tpch_q2_single_shuffle_window_min = _pin(
+    "tpch_q2", "join SortMergeJoin == 0", "exchange hash == 1", "ops TakeOrderedAndProject >= 1",
+    "join BroadcastHashJoin >= 3")
+# the global total reaches the HAVING as a one-row broadcast
+test_tpch_q11_broadcast_total = _pin(
+    "tpch_q11", "join BroadcastNestedLoopJoin >= 1", "join SortMergeJoin == 0")
+# per-customer top-k from collection kernels, no window at all
+test_nested_topn_no_partitionless_window = _pin(
+    "nested_tpch_order_topn", "window * == 0", "exchange range == 1")
+# the part dim broadcasts; demand joins on partkey, no cartesian stage
+test_nested_q20_demand_joined_not_recomputed = _pin(
+    "nested_tpch_q20", "join CartesianProduct == 0", "join BroadcastHashJoin >= 2")
+# 7 day-of-week sums in one aggregate: one hash exchange
+test_tpcds_q43_pivot_is_single_aggregate_pass = _pin("tpcds_q43", "exchange hash == 1")
 
 
 def _physical(df) -> str:
@@ -757,10 +441,12 @@ def test_bucketed_join_no_shuffle(spark, sf_dir):
     assert "SelectedBucketsCount" in plan
 
 
-def test_filtered_ann_pushes_label_predicate(spark, sf_dir):
+def test_filtered_ann_pushes_label_predicate(spark, sf_dir, live_shapes):
     """sim_filtered_ann is the PRE-filter regime: the label predicate
     must reach the parquet scan (PushedFilters In(label, ...)) so
-    non-matching vectors are pruned before any vector math."""
+    non-matching vectors are pruned before any vector math, and the
+    bounded query panel must broadcast."""
+    _check(live_shapes, "sim_filtered_ann", "join BroadcastNestedLoopJoin+BroadcastHashJoin >= 1")
     plan = _physical(fresh("sim_filtered_ann")(spark, sf_dir))
     pushed = plan.split("PushedFilters:")
     assert any("label" in p[:400] for p in pushed[1:]), plan[:2000]
@@ -791,18 +477,22 @@ def test_triangle_count_cell_cap_is_group_limit(spark, sf_dir):
     assert oplan.count("BroadcastHashJoin") >= 2, oplan[:2000]
 
 
-def test_cohort_ltv_broadcasts_cohort_dim(spark, sf_dir):
-    """events_cohort_ltv: the cohort join broadcasts by stats/AQE, with
-    no hint, because the per-user table is data-proportional; only
-    cohort_size keeps its hint, being calendar-week-bounded."""
+def test_cohort_ltv_broadcasts_cohort_dim(spark, sf_dir, live_shapes):
+    """events_cohort_ltv: at fixture scale both joins broadcast, the
+    cohort join by stats/AQE, with no hint, because the per-user table is
+    data-proportional; only cohort_size keeps its hint, being
+    calendar-week-bounded."""
+    _check(live_shapes, "events_cohort_ltv", "join BroadcastHashJoin >= 2")
     opt = _optimized(fresh("events_cohort_ltv")(spark, sf_dir))
     assert opt.count("strategy=broadcast") <= 1
 
 
-def test_kll_report_two_stage_bottom_k(spark, sf_dir):
+def test_kll_report_two_stage_bottom_k(spark, sf_dir, live_shapes):
     """agg_kll_accuracy_report: the bottom-k sample must run as TWO
     window stages (per-(group, salt) then global) so no task sorts a
-    whole group."""
+    whole group, and the 12-row estimate frame must broadcast back for
+    the true-rank pass."""
+    _check(live_shapes, "agg_kll_accuracy_report", "join BroadcastHashJoin+BroadcastNestedLoopJoin >= 1")
     plan = _physical(fresh("agg_kll_accuracy_report")(spark, sf_dir))
     # stage 1: rank within (group, salt) — a WindowGroupLimit keyed on
     # BOTH columns above an exchange hash-partitioned on both
@@ -916,20 +606,23 @@ def test_nested_q21_existence_fused_to_hofs(spark, sf_dir):
 # TPC-DS rows: pushdown into the dim scans and the window's place above
 # the aggregate.
 
-def test_tpcds_star_twins_push_dim_filter_and_broadcast(spark, sf_dir):
+def test_tpcds_star_twins_push_dim_filter_and_broadcast(spark, sf_dir, live_shapes):
     """q42/q52/q55 (q3's twins): the p_size dim filter must reach the part
-    parquet scan (PushedFilters), so the dim is small before it joins."""
+    parquet scan (PushedFilters), and the filtered part dim must broadcast
+    — at 100 TB the fact side never shuffles for a dim join."""
     for name in ("tpcds_q42", "tpcds_q52", "tpcds_q55"):
+        _check(live_shapes, name, "join BroadcastHashJoin >= 1")
         plan = _physical(fresh(name)(spark, sf_dir))
         m = re.search(r"PushedFilters: \[[^\]]*p_size[^\]]*\]", plan)
         assert m, f"{name}: p_size not pushed to part scan\n{plan[:1500]}"
 
 
-def test_tpcds_deviation_twins_window_over_agg_frame(spark, sf_dir):
-    """q63/q89 (q53's twins): the Window runs over the |brand x month|
-    AGGREGATED frame (never over the base fact), so its exchange moves
-    group rows, not fact rows."""
+def test_tpcds_deviation_twins_window_over_agg_frame(spark, sf_dir, live_shapes):
+    """q63/q89 (q53's twins): one lineitem scan, the Window runs over the
+    |brand x month| AGGREGATED frame (never over the base fact), so its
+    exchange moves group rows, not fact rows."""
     for name in ("tpcds_q63", "tpcds_q89"):
+        _check(live_shapes, name, "scan lineitem == 1", "window Window+Window[global] >= 1")
         plan = _physical(fresh(name)(spark, sf_dir))
         # the plan tree prints top-down (consumers first): the Window
         # node sits ABOVE the HashAggregate whose output it consumes —
@@ -937,17 +630,20 @@ def test_tpcds_deviation_twins_window_over_agg_frame(spark, sf_dir):
         assert plan.index("Window") < plan.index("HashAggregate"), name
 
 
-def test_tpcds_q96_dims_broadcast(spark, sf_dir):
-    """q96's count chain: the acctbal band reaches the customer scan as a
-    pushed filter."""
+def test_tpcds_q96_dims_broadcast(spark, sf_dir, live_shapes):
+    """q96's count chain: supplier and the filtered nation broadcast; the
+    acctbal band reaches the customer scan as a pushed filter."""
+    _check(live_shapes, "tpcds_q96", "join BroadcastHashJoin >= 2")
     plan = _physical(fresh("tpcds_q96")(spark, sf_dir))
     assert re.search(r"PushedFilters: \[[^\]]*c_acctbal[^\]]*\]", plan), plan[:2000]
 
 
-def test_tpcds_q34_band_filter_after_single_agg(spark, sf_dir):
+def test_tpcds_q34_band_filter_after_single_agg(spark, sf_dir, live_shapes):
     """q34: the 8-12 lines-per-ticket band applies to the count AGGREGATE
-    (one (orderkey, custkey) agg pass), and the day-of-month disjunction
-    is pushed down to the orders side, not evaluated post-join."""
+    (one (orderkey, custkey) agg pass over one lineitem scan), and the
+    day-of-month disjunction is pushed down to the orders side, not
+    evaluated post-join."""
+    _check(live_shapes, "tpcds_q34", "scan lineitem == 1")
     plan = _physical(fresh("tpcds_q34")(spark, sf_dir))
     # count band appears as a Filter on an aggregate output column (cnt)
     assert re.search(r"Filter [^\n]*cnt", plan) or re.search(

@@ -17,10 +17,11 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.functions import pandas_udf
 
 from minimised_impala_spark.extensions import vector_kernels as VK
-from minimised_impala_spark.shipping import drop_zip_finders
-from tools.mis import COLUMNS
+from minimised_impala_spark.shipping import drop_zip_finders, order_after_python
+from tools.mis import COLUMNS, physical_plan, shape
 
 # Every registry query with a Python evaluation node in its physical plan
 # (the python column of PLANSHAPES.tsv; the test below fails for an entry
@@ -50,6 +51,25 @@ def test_python_stage_not_resampled_by_sort(name, live_shapes):
     row = dict(zip(COLUMNS, live_shapes([name])[name][0].split("\t")))
     assert row["python"] != "-", f"{name} has no Python stage; drop it from the list: {row}"
     assert row["pysort"] == "0", row
+
+
+def test_pysort_counts_every_range_partitioner(spark):
+    """A range exchange samples its input by running the stage below it,
+    whether a sort or repartitionByRange made it: a Python node there
+    counts in pysort, and not once order_after_python puts a hash
+    exchange in between."""
+
+    @pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    def pysort(df) -> int:
+        return int(dict(zip(COLUMNS, shape("q", physical_plan(df), spark._jvm).split("\t")))["pysort"])
+
+    df = spark.range(100).select(plus_one("id").alias("v"))
+    assert pysort(df.orderBy("v")) == 1
+    assert pysort(df.repartitionByRange(4, "v")) == 1
+    assert pysort(order_after_python(df, "v")) == 0
 
 
 def test_drop_zip_finders_stops_zip_rereads(tmp_path, monkeypatch):

@@ -4,21 +4,16 @@ pass reuses instead of recompiling."""
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
 from unittest.mock import Mock
 
 from minimised_impala_spark.engine import Engine
 from minimised_impala_spark.functions.parity import register_sql_functions
 from minimised_impala_spark.queries import load_all
 from minimised_impala_spark.queries.registry import fresh
-from minimised_impala_spark.session import build_session, session_key
+from minimised_impala_spark.session import session_key
 from minimised_impala_spark.tables import load_table
 
 load_all()
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Queries whose plans do not vary between runs; together they generate
 # well over Spark's default of 100 cached classes. nested_tpch_q20 is left
@@ -75,6 +70,17 @@ def _classes_compiled(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
+def _drop_generated_classes(spark) -> None:
+    # Empty the (private) class cache, so the first pass below compiles
+    # the set's whole working set whatever ran earlier in this JVM.
+    cls = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = cls.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+
+
 def _run_pass(spark, sf_dir) -> int:
     before = _classes_compiled(spark)
     for name in WARM_SET:
@@ -82,35 +88,24 @@ def _run_pass(spark, sf_dir) -> int:
     return _classes_compiled(spark) - before
 
 
-def warm_passes(sf_dir: str) -> tuple[int, int]:
-    """Classes compiled by two passes over fresh plans of the set, in a
-    new session of the suite's shape (the JVM's class cache starts empty)."""
-    spark = build_session(
-        app_name="mis-warm-pass", master="local[8]", shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "false"},
-    )
-    try:
-        return _run_pass(spark, sf_dir), _run_pass(spark, sf_dir)
-    finally:
-        spark.stop()
+def test_add_jar_keeps_caller_class_loader(spark, sf_dir):
+    """udf_java_jar's ADD JAR leaves the calling thread's context class
+    loader as it was. Spark keys generated classes by loader too, and the
+    driver's pool threads inherit the loader of the thread that starts
+    them: a second loader makes a warm pass recompile (the test below)."""
+    thread = spark._jvm.java.lang.Thread.currentThread()
+    before = thread.getContextClassLoader()
+    fresh("udf_java_jar")(spark, sf_dir).collect()
+    after = thread.getContextClassLoader()
+    assert after.equals(before)
+    assert not after.equals(spark._jsparkSession.sharedState().jarClassLoader())
 
 
-def test_warm_pass_compiles_no_class(sf_dir):
+def test_warm_pass_compiles_no_class(spark, sf_dir):
     """The codegen cache (session.ENGINE_CONF) holds the set's working set:
-    a second pass over fresh plans reuses every generated class.
-
-    Measured in a JVM of its own. The cache is keyed by the compiling
-    thread's class loader as well as the code, and the driver compiles a
-    broadcast's or a query stage's classes on a thread of a shared pool,
-    which keeps the loader of the thread that started it. After the rest
-    of the suite those pools hold threads of two loaders, so a warm pass
-    in the suite's JVM recompiles whatever lands on the other loader."""
-    r = subprocess.run(
-        [sys.executable, "-c",
-         f"from tests.test_session_reuse import warm_passes; print(*warm_passes({sf_dir!r}))"],
-        cwd=ROOT, capture_output=True, text=True, timeout=600,
-    )
-    assert r.returncode == 0, r.stderr[-2000:]
-    first, second = map(int, r.stdout.splitlines()[-1].split())
+    a second pass over fresh plans reuses every generated class, in the
+    suite's session, warm from every query the tests before it ran."""
+    _drop_generated_classes(spark)
+    first = _run_pass(spark, sf_dir)
     assert first > 100, f"the set compiled only {first} classes; it no longer tests eviction"
-    assert second == 0
+    assert _run_pass(spark, sf_dir) == 0

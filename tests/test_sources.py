@@ -256,4 +256,4 @@ def test_staging_is_private_to_each_process(sf_dir):
         out, err = p.communicate(timeout=600)
         assert p.returncode == 0, out + err[-2000:]
         assert "BAD: []" in out, out
-        assert not glob.glob(os.path.join(tempfile.gettempdir(), f"mis_*_{p.pid}"))
+        assert not glob.glob(os.path.join(tempfile.gettempdir(), f"mis_{p.pid}_*"))

@@ -390,7 +390,7 @@ def shape(name: str, plan, jvm) -> str:
             col, label = "scan", _scan(node)
         elif op in ("Exchange", "BroadcastExchange"):
             col, label = "exchange", _exchange(node)
-            if label == "range":
+            if label.split("/")[0] == "range":  # a sort's or repartitionByRange's
                 hits += pysort(node)
         elif PYTHON_NODE.fullmatch(op):
             col, label = "python", op
