@@ -29,7 +29,12 @@ class Engine:
     ``newSession()`` sibling registers its own. A session built outside
     ``build_session`` keeps Spark's default whole-stage-codegen cache (100
     classes, smaller than this engine's working set), because that conf
-    is static and cannot be changed once the session exists.
+    is static and cannot be changed once the session exists. Such a
+    session also keeps PySpark's DataFrame call-site capture on, which
+    adds about nine py4j round trips to every `Column` call; PySpark
+    reads that setting once per Python process, from the first active
+    session, so a later ``build_session`` in the same process does not
+    turn it off.
     """
 
     def __init__(self, spark: SparkSession):

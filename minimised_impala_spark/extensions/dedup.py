@@ -778,7 +778,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_df = base.unionByName(pert)
 
     prep = VK.make_lsh_prep_udf(
-        _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND, with_norm_vec=True
+        spark, _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND, with_norm_vec=True
     )
     # ONE persisted index carrying the banded signatures, the normalized
     # vector AND the int8 proxy codes for the rescore pre-filter, all
@@ -2154,7 +2154,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("e"),
     )
     corpus_df = base.unionByName(pert)
-    prep = VK.make_lsh_prep_udf(_EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
+    prep = VK.make_lsh_prep_udf(spark, _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
     # ONE persisted index carries the raw vector, the banded signatures
     # AND the int8 proxy codes for the rescore pre-filter, all from a
     # single Arrow crossing (r12 + r13, guide §4.1: previously the

@@ -325,7 +325,7 @@ def sim_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _vecd("embedding").alias("e")
     )
-    bucket1 = VK.make_bucket_udf(N_PLANES)
+    bucket1 = VK.make_bucket_udf(spark, N_PLANES)
     # persist: four consumers (each probe's query and candidate sides)
     # re-ran the norm+bucket ArrowEvalPython stage over the parquet scan
     # uncached (r12, guide §4.1/§5)

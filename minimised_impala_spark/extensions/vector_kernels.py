@@ -229,6 +229,37 @@ def qcosine_pair(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(num / den)
 
 
+# Kernel UDFs built by the factories below, per session (session_key)
+# and parameters. A pandas UDF pickles its function and creates its JVM
+# SimplePythonFunction on first use and then keeps both, so a memoized
+# UDF pays that once per session instead of at every plan build (16 of
+# the 509 round trips of a dedup_embedding_lsh build, and the pickling of
+# its plane table). Keyed by session, as
+# tables.load_table's DataFrames are, so a UDF never outlives the
+# SparkContext its JVM function lives in. Two threads that miss at once
+# each build one; either UDF is correct.
+_SESSION_UDFS: dict[tuple, object] = {}
+
+
+def per_session(factory):
+    """``factory(*params)`` becomes ``factory(spark, *params)``, built
+    once per session and parameter set; ``factory.__wrapped__`` is the
+    unmemoized factory."""
+
+    @functools.wraps(factory)
+    def memoized(spark, *args, **kwargs):
+        from minimised_impala_spark.session import session_key
+
+        key = (session_key(spark), factory.__name__, args, tuple(sorted(kwargs.items())))
+        udf = _SESSION_UDFS.get(key)
+        if udf is None:
+            udf = _SESSION_UDFS[key] = factory(*args, **kwargs)
+        return udf
+
+    return memoized
+
+
+@per_session
 def make_bucket_udf(plane_offset: int, n_planes: int = N_PLANES):
     """UDF factory: hyperplane signature over planes
     [plane_offset, plane_offset + n_planes) — the SAME md5-derived plane
@@ -247,6 +278,7 @@ def make_bucket_udf(plane_offset: int, n_planes: int = N_PLANES):
     return bucket_of
 
 
+@per_session
 def make_band_sig_udf(n_bands: int, band_planes: int):
     """UDF factory: banded LSH signatures — one ``band_planes``-bit bucket
     per band, band k over planes [k·band_planes, (k+1)·band_planes), all
@@ -273,6 +305,7 @@ def make_band_sig_udf(n_bands: int, band_planes: int):
     return band_sigs
 
 
+@per_session
 def make_lsh_prep_udf(n_bands: int, band_planes: int, with_norm_vec: bool = False):
     """UDF factory: ONE Arrow crossing per corpus row computes everything
     the banded-LSH dedup pipeline needs — the banded signatures (same

@@ -262,7 +262,7 @@ def ddl_insert_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 from pyspark.sql.functions import udtf
 
 
-@udtf(returnType="pos int, sentence string, n_tokens int")
+@udtf(returnType="pos int, sentence string, n_tokens int", useArrow=True)
 class _SentenceSplit:
     def eval(self, doc_id: int, text: str):
         if text is None:
@@ -316,7 +316,7 @@ def udtf_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row_number difference → island id → max run, first-reaching wins) —
 # proving the procedural and relational formulations agree. Scale: one
 # shuffle on the partition key, Python sees Arrow-batched rows.
-@udtf(returnType="user_id bigint, longest_streak int, streak_type string")
+@udtf(returnType="user_id bigint, longest_streak int, streak_type string", useArrow=True)
 class _LongestStreak:
     def __init__(self):
         self.user = None

@@ -55,6 +55,19 @@ ENGINE_CONF: dict[str, str] = {
     # +22 MB JIT code heap. 8192 holds the whole working set, and the LRU
     # still bounds memory under ad-hoc queries.
     "spark.sql.codegen.cache.maxEntries": "8192",
+    # DataFrame call-site capture. On (PySpark's default), every `Column`
+    # method and `F.col` call also reads the active session and a conf,
+    # looks up `PySparkCurrentOrigin` by name, sets and clears it, and
+    # walks the Python stack: about nine py4j round trips added to each
+    # call. Off, a runtime error loses its "== DataFrame == ... was called
+    # from file:line" context; plans are unchanged. Measured at sf0.001,
+    # round trips per steady-state build (GC releases excluded), this line
+    # alone: tpch_q1 1027 -> 237, nested_tpch_q20 1032 -> 392,
+    # dedup_embedding_lsh 1028 -> 509; summed over perfbench's 14 queries
+    # 7226 -> 2721 with the per-session kernel UDFs (vector_kernels).
+    # PySpark reads this once per Python process, from the first active
+    # session (`pyspark.errors.utils.is_debugging_enabled`).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -41,9 +41,10 @@ def test_plan_shapes_match_table(live_shapes):
     _, table = mis.committed_shapes()
     rows = {ln.split("\t")[0]: dict(zip(mis.COLUMNS, ln.split("\t"))) for ln in table[2:]}
     # invariants of the committed table, so regenerating it cannot hide
-    # a Python stage re-run by a sort or a row-at-a-time Python UDF
+    # a Python stage re-run by a sort or a row-at-a-time Python UDF or
+    # UDTF (BatchEvalPython, BatchEvalPythonUDTF)
     assert [q for q, r in rows.items() if r["pysort"] != "0"] == []
-    assert [q for q, r in rows.items() if "BatchEvalPython:" in r["python"]] == []
+    assert [q for q, r in rows.items() if "BatchEvalPython" in r["python"]] == []
     live = [table[0], "\t".join(mis.COLUMNS), *(row for row, _ in live_shapes(QUERIES).values())]
     diff = "\n".join(difflib.unified_diff(table, live, "PLANSHAPES.tsv", "registry", lineterm="", n=0))
     assert not diff, f"plan shapes changed; if on purpose, regenerate the table:\n{diff}"

@@ -125,12 +125,12 @@ _vector = st.one_of(
 
 @functools.cache
 def _prep(n_bands: int, band_planes: int):
-    return VK.make_lsh_prep_udf(n_bands, band_planes).func
+    return VK.make_lsh_prep_udf.__wrapped__(n_bands, band_planes).func
 
 
 @functools.cache
 def _band_sigs(n_bands: int, band_planes: int):
-    return VK.make_band_sig_udf(n_bands, band_planes).func
+    return VK.make_band_sig_udf.__wrapped__(n_bands, band_planes).func
 
 
 def _exact_cosine(a: np.ndarray, b: np.ndarray) -> float:

@@ -1,15 +1,19 @@
 """What one session pays once: dialect-function registration, a table
-cache bound to the session that built it, and generated code that a warm
-pass reuses instead of recompiling."""
+cache bound to the session that built it, generated code that a warm
+pass reuses instead of recompiling, and the kernel UDFs a plan build
+would otherwise pickle again; and what a build pays in py4j round trips."""
 
 from __future__ import annotations
 
 from unittest.mock import Mock
 
+from pyspark.errors.utils import is_debugging_enabled
+
 from minimised_impala_spark.engine import Engine
 from minimised_impala_spark.functions.parity import register_sql_functions
 from minimised_impala_spark.queries import load_all
-from minimised_impala_spark.queries.registry import fresh
+from minimised_impala_spark.queries.registry import fresh, py4j_sent
+from minimised_impala_spark.seams import query_scope
 from minimised_impala_spark.session import session_key
 from minimised_impala_spark.tables import load_table
 
@@ -109,3 +113,28 @@ def test_warm_pass_compiles_no_class(spark, sf_dir):
     first = _run_pass(spark, sf_dir)
     assert first > 100, f"the set compiled only {first} classes; it no longer tests eviction"
     assert _run_pass(spark, sf_dir) == 0
+
+
+# py4j round trips of a steady-state build, GC releases excluded. With
+# PySpark's DataFrame call-site capture on, each took over 1000 (1027,
+# 1032, 1028 at sf0.001), about nine more per Column call.
+BUILD_ROUND_TRIPS = {"tpch_q1": 300, "nested_tpch_q20": 450, "dedup_embedding_lsh": 520}
+
+
+def test_build_round_trips(spark, sf_dir):
+    """A build costs its Column calls, not the call-site capture around
+    each (session.ENGINE_CONF), and a repeat build of the LSH dedup
+    reuses the session's kernel UDF (vector_kernels.per_session): it
+    creates no JVM SimplePythonFunction."""
+    assert not is_debugging_enabled(), (
+        "DataFrame call-site capture is on: session.ENGINE_CONF does not "
+        "turn it off, or this process's first active session was not built "
+        "by build_session"
+    )
+    for name, ceiling in BUILD_ROUND_TRIPS.items():
+        with query_scope():
+            fresh(name)(spark, sf_dir)
+        with query_scope(), py4j_sent(spark) as sent:
+            fresh(name)(spark, sf_dir)
+        assert len(sent) <= ceiling, f"{name}: {len(sent)} round trips, ceiling {ceiling}"
+        assert not [c for c in sent if "SimplePythonFunction" in c], name

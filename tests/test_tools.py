@@ -60,10 +60,10 @@ def test_oracle_rejects_unlisted_zero_row_result(spark, sf_dir, tmp_path, capsys
 
 def test_time_reports_build_collect_split(spark, sf_dir, capsys):
     assert mis.time_(spark, _args("time", "tpch_q1", "--draws", "2", "--sf", sf_dir)) == 0
-    m = re.search(r"tpch_q1\s+sec=([\d.]+) plan=([\d.]+) exec=([\d.]+) compiled=\d+",
+    m = re.search(r"tpch_q1\s+sec=([\d.]+) plan=([\d.]+) exec=([\d.]+) compiled=\d+ py4j=(\d+)",
                   capsys.readouterr().out)
-    sec, build, exe = map(float, m.groups())
-    assert build > 0 and exe > 0
+    sec, build, exe, py4j = map(float, m.groups())
+    assert build > 0 and exe > 0 and py4j > 0
     assert abs(sec - (build + exe)) <= 0.002
 
 

@@ -100,7 +100,8 @@ def _done(args) -> set[str]:
 def time_(spark, args) -> int:
     """Best-of-N draws. ``compiled`` counts the classes Janino compiled
     during the best draw: above 0 on a warm draw, the plan generates code
-    the codegen cache does not hold."""
+    the codegen cache does not hold. ``py4j`` counts the round trips of
+    the best draw's build, GC releases excluded (``registry.py4j_sent``)."""
     compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     for t in ALL_TABLES:
         load_table(spark, args.sf, t)
@@ -111,9 +112,10 @@ def time_(spark, args) -> int:
         for _ in range(args.draws):
             c0 = compilations.getCount()
             r = run(spark, n, args.sf)
-            draws.append((r.build_s + r.exec_s, r.build_s, r.exec_s, compilations.getCount() - c0))
-        sec, build, exe, compiled = min(draws)
-        print(f"{n:34s} sec={sec:.3f} plan={build:.3f} exec={exe:.3f} compiled={compiled}")
+            draws.append((r.build_s + r.exec_s, r.build_s, r.exec_s,
+                          compilations.getCount() - c0, r.build_py4j))
+        sec, build, exe, compiled, py4j = min(draws)
+        print(f"{n:34s} sec={sec:.3f} plan={build:.3f} exec={exe:.3f} compiled={compiled} py4j={py4j}")
     return 0
 
 
@@ -267,13 +269,15 @@ def profile(spark, args) -> int:
 
 # audit's flags, derived from a row's counts: rescan, more scans of one
 # fixture table than two consumers need (a shared seam recomputed); pyrow,
-# row-at-a-time Python; cartesian; globalwin, a Window with an empty
-# partition spec (a single-task sort). They skip builders that run jobs at
-# build time by design (training collects, iterative algorithms, physical
-# state round trips): their plans are execution artifacts.
+# row-at-a-time Python (any BatchEvalPython* node, UDTFs included);
+# cartesian; globalwin, a Window with an empty partition spec (a
+# single-task sort). A flag's operator matches every label it prefixes.
+# They skip builders that run jobs at build time by design (training
+# collects, iterative algorithms, physical state round trips): their plans
+# are execution artifacts.
 FLAGS = (("pyrow", "python", "BatchEvalPython"), ("cartesian", "join", "CartesianProduct"),
          ("globalwin", "window", "Window[global]"))
-SKIP_PREFIXES = ("streaming_", "ddl_", "source_", "udf_", "uda_", "udtf_",
+SKIP_PREFIXES = ("streaming_", "ddl_", "source_", "udf_", "uda_",
                  "dialect_", "shell_", "hs2_")
 SKIP_EXACT = {
     "sim_kmeans_cluster", "sim_pq_ann", "sim_ivfpq_ann", "sim_ivf_ann",
@@ -403,7 +407,7 @@ def shape(name: str, plan, jvm) -> str:
         cols[col][label] = cols[col].get(label, 0) + 1
     flags = [] if name.startswith(SKIP_PREFIXES) or name in SKIP_EXACT else [
         *(f"rescan:{t}x{n}" for t, n in sorted(cols["scan"].items()) if t in ALL_TABLES and n > 2),
-        *(flag for flag, col, op in FLAGS if op in cols[col]),
+        *(flag for flag, col, op in FLAGS if any(label.startswith(op) for label in cols[col])),
     ]
     cells = [" ".join(f"{k}:{v}" for k, v in sorted(c.items())) or "-" for c in cols.values()]
     return "\t".join([name, *cells, str(hits), " ".join(flags) or "-"])
