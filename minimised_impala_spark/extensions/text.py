@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.seams import seam
 from minimised_impala_spark.serde import pickle_module_by_value
-from minimised_impala_spark.tables import load_table
+from minimised_impala_spark.tables import load_table, scratch_dir
 
 # mapInPandas kernels below (_wp_encode_batches) must serialize by VALUE:
 # the driver process may not have this package importable on executors'
@@ -1819,7 +1819,7 @@ ORDER BY source
 
 @query("pipeline_incremental_stats", oracle=_INCR_STATS_ORACLE)
 def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
+    import os
     import shutil
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1834,37 +1834,28 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.filter(F.col("doc_id") % 4 != 0)   # standing corpus
     delta = docs.filter(F.col("doc_id") % 4 == 0)  # this refresh's batch
 
-    # Per-run unique scratch dir (uuid, not a fixture-keyed fixed path):
-    # two concurrent sessions on the same sf_dir raced on the old
-    # /tmp/mis_incrstats_<md5(sf_dir)> path — one could rmtree the state
-    # while the other's read resolved it — and stale state leaked between
-    # runs (ADVICE r4). The final read is localCheckpoint-materialized so
-    # the scratch dirs can be removed before returning.
-    import uuid
-
-    del hashlib  # path no longer keyed on sf_dir
-    state = f"/tmp/mis_incrstats_{uuid.uuid4().hex[:12]}"
-    partial(base).write.parquet(state)  # the landed standing state
-
-    merged = (
-        spark.read.parquet(state)
-        .unionByName(partial(delta))
-        .groupBy("source")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_tokens").alias("total_tokens"),
-            F.sum("n_quality").alias("n_quality"),
+    scratch = scratch_dir("incrstats")
+    state = os.path.join(scratch, "state")
+    try:
+        partial(base).write.parquet(state)  # the landed standing state
+        merged = (
+            spark.read.parquet(state)
+            .unionByName(partial(delta))
+            .groupBy("source")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("total_tokens").alias("total_tokens"),
+                F.sum("n_quality").alias("n_quality"),
+            )
         )
-    )
-    staging = f"{state}.next"
-    merged.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(state, ignore_errors=True)
-    import os
-
-    os.rename(staging, state)
-    out = seam(spark.read.parquet(state).orderBy("source"), now=True)
-    shutil.rmtree(state, ignore_errors=True)
-    return out
+        staging = f"{state}.next"
+        merged.write.mode("overwrite").parquet(staging)
+        shutil.rmtree(state)
+        os.rename(staging, state)
+        # materialized now, so the scratch directory can go before returning
+        return seam(spark.read.parquet(state).orderBy("source"), now=True)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # ------------------------------------------------- quality classifier --

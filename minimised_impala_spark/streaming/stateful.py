@@ -21,7 +21,6 @@ custom stateful logic.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable
 
 import pandas as pd
@@ -38,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from minimised_impala_spark.queries.registry import query
-from minimised_impala_spark.streaming.windows import _events_stream
+from minimised_impala_spark.streaming.windows import _events_stream, drain
 
 # _sessionize_group ships to workers — see serde module docstring
 from minimised_impala_spark.serde import pickle_module_by_value
@@ -143,13 +142,7 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"sess_out_{uuid.uuid4().hex[:8]}"
-    q = sessions.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("user_id", "session_start")
+    return drain(sessions, "append").orderBy("user_id", "session_start")
 
 
 # --------------------------------------------------------------------------
@@ -293,15 +286,9 @@ def run_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"sketch_out_{uuid.uuid4().hex[:8]}"
-    q = sk.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     w = W.partitionBy("event_type").orderBy(F.desc("n"))
     return (
-        spark.table(name)
+        drain(sk, "append")
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .drop("rnk")
@@ -424,15 +411,9 @@ def streaming_cm_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"cm_out_{uuid.uuid4().hex[:8]}"
-    q = sk.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     w = W.partitionBy("event_type").orderBy(F.desc("n"))
     final = (
-        spark.table(name)
+        drain(sk, "append")
         .withColumn("rnk_", F.row_number().over(w))
         .filter(F.col("rnk_") == 1)
         .select("event_type", "cells")

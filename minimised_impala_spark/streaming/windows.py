@@ -6,6 +6,18 @@ runs the same aggregations through readStream → writeStream so the engine
 covers the streaming entry point: tumbling-window counts with a watermark,
 driven to completion over the parquet fixture via the memory sink.
 
+How a streaming query is driven. ``_stage_stream`` turns a fixture table
+into a file-stream source: the file source lists a directory, so each
+part file is linked into a stage directory, built once per process.
+``drain(stream, mode)`` runs a stream into a memory sink and returns the
+sink's rows as a batch DataFrame; ``run_to_end(writer)`` drives a writer
+with its own sink (``foreachBatch``). Both stop the stream before they
+return, and ``drain`` drops the sink's temp view: the rows live in the
+returned DataFrame's plan for as long as that DataFrame does. A finished
+build leaves no view, stream or scratch directory in the session; only
+the per-process stages remain (the input links, reused by the next
+build, and the table ``streaming_foreach_batch_sink`` reads back).
+
 ``streaming_window_counts`` is registered with a full SQL oracle: in
 "complete" output mode every window is emitted once the (single) batch is
 processed, so the result equals the batch aggregation.
@@ -18,86 +30,78 @@ executors — identical shuffle shape to the batch plan.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.seams import seam
-from minimised_impala_spark.tables import staging_dir
+from minimised_impala_spark.tables import fix_events_ts, scratch_dir, staging_dir
 
 
-def _reconcile_stage_links(stage: str, expected: dict[str, str]) -> None:
-    """Make the stage dir contain EXACTLY the symlinks in `expected`
-    (name -> target), each pointing at its current target.
+def run_to_end(writer: DataStreamWriter) -> None:
+    """Start ``writer``, run it until its input is processed, stop it."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    A fixture regeneration changes Spark part filenames, so an old
-    link's target vanishes: os.path.exists(link) FOLLOWS the link and
-    returns False, a blind re-symlink raises FileExistsError, and the
-    dangling link persists — the stream then reads missing/partial
-    input, the silent-empty-input class the r10 sf1 sweep caught.
-    lexists sees the link itself; a link whose realpath no longer
-    matches the (realpath'd) target is removed and re-created."""
-    import os
 
-    for name in os.listdir(stage):
-        if name not in expected:
-            os.remove(os.path.join(stage, name))
-    for name, target in expected.items():
-        link = os.path.join(stage, name)
-        want = os.path.realpath(target)
-        if os.path.lexists(link) and os.path.realpath(link) == want:
-            continue
-        # Create-or-repair ATOMICALLY: symlink at a pid-unique temp name,
-        # then rename over the link path. os.replace is a single rename
-        # syscall, so two sessions repairing the same stale link can no
-        # longer interleave remove/symlink and crash on FileExistsError
-        # (the r11 ADVICE TOCTOU) — last writer wins, and every writer
-        # writes the same realpath'd target.
-        tmp = f"{link}.tmp.{os.getpid()}"
-        if os.path.lexists(tmp):  # leftover from a crashed same-pid run
-            os.remove(tmp)
-        os.symlink(target, tmp)
-        os.replace(tmp, link)
+def drain(stream: DataFrame, mode: str) -> DataFrame:
+    """Run ``stream`` into a memory sink in output ``mode`` and return the
+    sink's rows. The DataFrame's plan holds the sink, so the sink's temp
+    view is dropped here and the rows go with the DataFrame."""
+    spark = stream.sparkSession
+    name = f"stream_{uuid.uuid4().hex}"
+    try:
+        run_to_end(stream.writeStream.outputMode(mode).format("memory").queryName(name))
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _stage_stream(spark: SparkSession, sf_dir: str, table: str, copies: int = 1) -> DataFrame:
+    """A file stream over ``table`` of ``sf_dir``; ``copies`` > 1 stages
+    every file that many times, the at-least-once replay that streaming
+    dedup exists for. The table may be one parquet file or a directory of
+    part files, and the file source lists its directory non-recursively,
+    so each part file gets its own link. The stage is built once per
+    process, in a fresh directory renamed into place; if another thread's
+    stage landed first, that one is used. Fixtures do not change under a
+    running process (as for ``tables.load_table``), so a stage never goes
+    stale."""
+    src = os.path.realpath(f"{sf_dir}/{table}.parquet")
+    stage = staging_dir(f"stream_x{copies}", sf_dir, table)
+    if not os.path.isdir(stage):
+        if os.path.isdir(src):
+            parts = sorted(os.path.join(src, p) for p in os.listdir(src) if p.endswith(".parquet"))
+        else:
+            parts = [src]
+        tmp = tempfile.mkdtemp(prefix=f"{os.path.basename(stage)}.", dir=os.path.dirname(stage))
+        for i in range(copies):
+            for j, part in enumerate(parts):
+                os.symlink(part, os.path.join(tmp, f"{table}_{i}_{j}.parquet"))
+        try:
+            os.rename(tmp, stage)
+        except OSError:  # another thread's stage landed first
+            shutil.rmtree(tmp)
+            if not os.path.isdir(stage):
+                raise
+    schema = spark.read.parquet(src).schema
+    return spark.readStream.schema(schema).format("parquet").load(stage)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
     # ts encoding varies by fixture vintage — the shared tables.fix_events_ts
-    # helper dispatches on the loaded dtype. The file stream source requires
-    # a *directory*, so stage a symlink dir (fixture dirs are read-only).
-    # copies > 1 stages the same file multiple times — the at-least-once
-    # replay scenario streaming dedup exists for.
-    import os
-
+    # helper dispatches on the loaded dtype.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    stage = staging_dir("stream" if copies == 1 else f"stream_x{copies}", sf_dir, "events")
-    os.makedirs(stage, exist_ok=True)
-    # The table may be a single parquet FILE (driver fixtures) or a
-    # Spark-written DIRECTORY of part files (tools/make_sf1.py). The file
-    # stream source lists the stage dir non-recursively, so a symlink to
-    # a directory stages ZERO files (caught by the r10 sf1 oracle sweep:
-    # every streaming query read 0 rows at sf1) — link each part file.
-    if os.path.isdir(src):
-        parts = sorted(
-            os.path.join(src, p)
-            for p in os.listdir(src)
-            if p.endswith(".parquet")
-        )
-    else:
-        parts = [src]
-    expected = {
-        f"events_{i}_{j}.parquet": parts[j]
-        for i in range(copies)
-        for j in range(len(parts))
-    }
-    _reconcile_stage_links(stage, expected)
-    from minimised_impala_spark.tables import fix_events_ts
-
-    schema = spark.read.parquet(src).schema
-    raw = spark.readStream.schema(schema).format("parquet").load(stage)
-    return fix_events_ts(raw)
+    return fix_events_ts(_stage_stream(spark, sf_dir, "events", copies))
 
 
 @query(
@@ -120,19 +124,8 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
         .orderBy("window_start", "event_type")
     )
@@ -165,19 +158,8 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
         .orderBy("window_start", "event_type")
     )
@@ -217,19 +199,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(F.col("w.start").alias("session_start"), "user_id", "n_events")
         .select("user_id", "session_start", "n_events")
         .orderBy("user_id", "session_start")
@@ -261,18 +232,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     deduped = _events_stream(spark, sf_dir, copies=2).dropDuplicates(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("event_type", "n").orderBy("event_type")
+    return drain(agg, "complete").select("event_type", "n").orderBy("event_type")
 
 
 @query(
@@ -306,18 +266,7 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("event_type", "n").orderBy("event_type")
+    return drain(agg, "complete").select("event_type", "n").orderBy("event_type")
 
 
 @query(
@@ -389,14 +338,8 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 15 MINUTES")),
         "leftOuter",
     )
-    name = f"stream_oj_{uuid.uuid4().hex[:8]}"
-    q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(pairs, "append")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count("click_id").alias("n_matched"),
@@ -455,14 +398,8 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("v_ts"))
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 15 MINUTES")),
     )
-    name = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    q = pairs.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(pairs, "append")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -502,18 +439,7 @@ def streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         (F.round(F.sum("value") * 100, 0) / 100).alias("sum_value"),
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("segment", "n", "sum_value").orderBy("segment")
+    return drain(agg, "complete").select("segment", "n", "sum_value").orderBy("segment")
 
 
 # --------------------------------------------------------------------------
@@ -552,11 +478,7 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out)
 
-    q = agg.writeStream.outputMode("complete").foreachBatch(write_batch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run_to_end(agg.writeStream.outputMode("complete").foreachBatch(write_batch))
     return spark.read.parquet(out).orderBy("window_start", "event_type")
 
 
@@ -598,20 +520,9 @@ def streaming_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     wr = W.partitionBy("window_start").orderBy(F.desc("n"), F.asc("event_type"))
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
         .withColumn("rk", F.row_number().over(wr).cast("int"))
         .filter(F.col("rk") <= 2)
@@ -645,17 +556,10 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the merge is one shuffle on the key per batch; on a
     partitioned target use dynamic partition overwrite so only touched
     key ranges rewrite (same seam as pipeline_merge_upsert)."""
-    import os
-    import shutil
-    import uuid
-
     from pyspark.sql import Window as W
 
-    # Per-run unique target (uuid, not fixture-keyed): a fixed path raced
-    # under concurrent sessions on the same fixture and leaked stale state
-    # between runs (ADVICE r4). localCheckpoint at the end lets the
-    # scratch dir be removed before returning.
-    out = f"/tmp/mis_upsert_{uuid.uuid4().hex[:12]}"
+    scratch = scratch_dir("upsert")
+    out = os.path.join(scratch, "out")
 
     stream = _events_stream(spark, sf_dir, copies=2).filter(F.col("user_id") < 80)
     rk = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
@@ -693,14 +597,12 @@ def streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(out, ignore_errors=True)
         os.rename(staging, out)
 
-    q = stream.writeStream.outputMode("append").foreachBatch(upsert_batch).start()
     try:
-        q.processAllAvailable()
+        run_to_end(stream.writeStream.outputMode("append").foreachBatch(upsert_batch))
+        # materialized now, so the scratch directory can go before returning
+        return seam(spark.read.parquet(out).orderBy("user_id"), now=True)
     finally:
-        q.stop()
-    res = seam(spark.read.parquet(out).orderBy("user_id"), now=True)
-    shutil.rmtree(out, ignore_errors=True)
-    return res
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -752,18 +654,7 @@ def streaming_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    counts = spark.table(name).select(
+    counts = drain(agg, "complete").select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
     wt = counts.groupBy("window_start").agg(
@@ -805,27 +696,6 @@ def streaming_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # answer exactly. At 100 TB/day: per-batch cost ∝ batch bands + band
 # collisions, never corpus size; the index is the thing a real pipeline
 # persists and reloads.
-def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    src = os.path.realpath(f"{sf_dir}/documents.parquet")
-    stage = staging_dir("docstream", sf_dir, "documents")
-    os.makedirs(stage, exist_ok=True)
-    # single file or Spark directory-of-parts (see _events_stream note)
-    if os.path.isdir(src):
-        parts = sorted(
-            os.path.join(src, p)
-            for p in os.listdir(src)
-            if p.endswith(".parquet")
-        )
-    else:
-        parts = [src]
-    expected = {f"documents_{j}.parquet": parts[j] for j in range(len(parts))}
-    _reconcile_stage_links(stage, expected)
-    schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(schema).format("parquet").load(stage)
-
-
 def _stream_lsh_oracle() -> str:
     from minimised_impala_spark.extensions.dedup import _minhash_bands_cte
 
@@ -867,9 +737,6 @@ ORDER BY new_id
 
 @query("streaming_dedup_lsh", oracle=_stream_lsh_oracle())
 def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from pyspark.sql import Window as W
 
     from minimised_impala_spark.extensions import dedup as D
@@ -879,8 +746,8 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     static_docs = full.filter(~is_new)
     # the landed index: built once, probed per batch. py4j keeps
     # probe_batch alive for the JVM long after the query stops, so it
-    # reads the index through this holder, emptied after q.stop(), and
-    # the two seams go when the build returns.
+    # reads the index through this holder, emptied once the stream has
+    # stopped, and the two seams go when the build returns.
     index = {
         "bands": seam(
             D.bands_of(static_docs)
@@ -894,7 +761,8 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     }
 
-    out = f"/tmp/mis_sdlsh_{uuid.uuid4().hex[:12]}"
+    scratch = scratch_dir("sdlsh")
+    out = os.path.join(scratch, "out")
 
     def probe_batch(bdf: DataFrame, batch_id: int) -> None:
         docs = bdf.select("doc_id", "text")
@@ -937,26 +805,15 @@ def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("append").parquet(out)
         )
 
-    q = (
-        _docs_stream(spark, sf_dir)
-        .writeStream.outputMode("append")
-        .foreachBatch(probe_batch)
-        .start()
-    )
+    docs = _stage_stream(spark, sf_dir, "documents")
     try:
-        q.processAllAvailable()
+        run_to_end(docs.writeStream.outputMode("append").foreachBatch(probe_batch))
+        if not os.path.exists(out):
+            return spark.createDataFrame([], "new_id bigint, match_id bigint, jaccard double")
+        return seam(spark.read.parquet(out).orderBy("new_id"), now=True)
     finally:
-        q.stop()
         index.clear()
-    res = (
-        seam(spark.read.parquet(out).orderBy("new_id"), now=True)
-        if os.path.exists(out)
-        else spark.createDataFrame(
-            [], "new_id bigint, match_id bigint, jaccard double"
-        )
-    )
-    shutil.rmtree(out, ignore_errors=True)
-    return res
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -992,19 +849,8 @@ def streaming_window_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["user_id", "wstart"])
     )
     agg = deduped.groupBy("wstart").agg(F.count(F.lit(1)).alias("n_unique"))
-    name = f"stream_uniq_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(agg, "complete")
         .select(F.col("wstart").alias("window_start"), "n_unique")
         .orderBy("window_start")
     )

@@ -57,6 +57,12 @@ def staging_dir(kind: str, sf_dir: str, table: str) -> str:
     return os.path.join(_staging_root(), f"{kind}_{hashlib.md5(src.encode()).hexdigest()[:10]}")
 
 
+def scratch_dir(kind: str) -> str:
+    """A fresh directory, under the same per-process root, for one build's
+    scratch files; the build removes it before it returns."""
+    return tempfile.mkdtemp(prefix=f"{kind}_", dir=_staging_root())
+
+
 def ensure_engine_semantics(spark: SparkSession) -> None:
     """Pin the session semantics the engine is specified against, even when
     running on a caller-provided session: the reference returns NULL on

@@ -45,7 +45,12 @@ def test_plan_shapes_match_table(live_shapes):
     # UDTF (BatchEvalPython, BatchEvalPythonUDTF)
     assert [q for q, r in rows.items() if r["pysort"] != "0"] == []
     assert [q for q, r in rows.items() if "BatchEvalPython" in r["python"]] == []
-    live = [table[0], "\t".join(mis.COLUMNS), *(row for row, _ in live_shapes(QUERIES).values())]
+    # the registry's order is import order, which an earlier test module
+    # can change, so the live rows are compared in the table's order
+    assert sorted(set(QUERIES) - set(rows)) == [], "queries missing from PLANSHAPES.tsv"
+    assert sorted(set(rows) - set(QUERIES)) == [], "PLANSHAPES.tsv rows for no registered query"
+    live_rows = live_shapes(rows)
+    live = [table[0], "\t".join(mis.COLUMNS), *(live_rows[q][0] for q in rows)]
     diff = "\n".join(difflib.unified_diff(table, live, "PLANSHAPES.tsv", "registry", lineterm="", n=0))
     assert not diff, f"plan shapes changed; if on purpose, regenerate the table:\n{diff}"
 

@@ -7,9 +7,6 @@
 2. pipeline_near_dedup's rescore (directive #5) is one array_intersect
    per candidate pair — the shingle-level self-join (k² rows per hot
    shingle, the sf10 worker OOM) must not reappear in the plan.
-3. The streaming stage-dir symlink repair is atomic (r11 ADVICE TOCTOU):
-   a stale wrong-target link is repaired via symlink-to-temp + rename,
-   never remove-then-create.
 """
 
 from __future__ import annotations
@@ -60,27 +57,6 @@ def test_near_dedup_rescore_is_per_pair_array_intersect(spark, sf_dir):
     # blowup; its signature column must be gone from the plan
     assert "sh2" not in opt
     assert dups.columns == ["d1", "d2"]
-
-
-def test_stage_link_repair_is_atomic(tmp_path):
-    from minimised_impala_spark.streaming.windows import _reconcile_stage_links
-
-    stage = tmp_path / "stage"
-    stage.mkdir()
-    right = tmp_path / "right.parquet"
-    wrong = tmp_path / "wrong.parquet"
-    right.write_bytes(b"r")
-    wrong.write_bytes(b"w")
-    link = stage / "events.parquet"
-    link.symlink_to(wrong)  # stale link from a previous fixture vintage
-
-    _reconcile_stage_links(str(stage), {"events.parquet": str(right)})
-    assert os.path.realpath(link) == os.path.realpath(right)
-    # no temp residue
-    assert sorted(os.listdir(stage)) == ["events.parquet"]
-    # idempotent (the already-correct fast path)
-    _reconcile_stage_links(str(stage), {"events.parquet": str(right)})
-    assert os.path.realpath(link) == os.path.realpath(right)
 
 
 def test_isum_wide_agrees_with_isum_in_envelope(spark, sf_dir):

@@ -58,3 +58,71 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     assert out.select("event_id").distinct().count() == total
     # transformation applied on both runs
     assert out.filter("event_type != upper(event_type)").count() == 0
+
+
+def test_streaming_builds_leave_nothing_in_the_session(spark, sf_dir):
+    # a long-lived session runs every streaming query again and again: a
+    # second pass must add no temp view (a memory sink's view holds all
+    # of its rows) and leave no stream running
+    from minimised_impala_spark.queries import load_all
+    from minimised_impala_spark.queries.registry import QUERIES, run
+
+    load_all()
+    names = [n for n in QUERIES if n.startswith("streaming_")]
+    names.append("pipeline_quality_scorecard")  # embeds a streaming build
+
+    def views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    passes = []
+    for _ in range(2):
+        for name in names:
+            run(spark, name, sf_dir)
+        passes.append(views())
+    assert passes[1] == passes[0]
+    assert spark.streams.active == []
+
+
+def test_stage_stream_is_built_once_under_racing_threads(spark, tmp_path):
+    import os
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from minimised_impala_spark.streaming.windows import _stage_stream
+    from minimised_impala_spark.tables import staging_dir
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    parts = [str(table / f"part-{i}.parquet") for i in range(2)]
+    for i, part in enumerate(parts):
+        pq.write_table(pa.table({"x": [i]}), part)
+
+    start = threading.Barrier(4)
+    errors = []
+
+    def stage() -> None:
+        try:
+            start.wait(timeout=30)
+            _stage_stream(spark, str(tmp_path), "t", copies=2)
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=stage) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+    stage_dir = staging_dir("stream_x2", str(tmp_path), "t")
+    links = [os.path.join(stage_dir, n) for n in os.listdir(stage_dir)]
+    assert len(links) == 4
+    assert all(os.path.islink(ln) for ln in links)
+    targets = sorted(os.path.realpath(ln) for ln in links)
+    assert targets == sorted(os.path.realpath(p) for p in parts * 2)
+    # the losers' temp directories are gone
+    root, name = os.path.split(stage_dir)
+    assert [n for n in os.listdir(root) if n.startswith(name)] == [name]
