@@ -172,9 +172,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
+# Exact trigram Jaccard >= 0.6 over the planted-twin corpus: the answer
+# of both dedup_ngram_jaccard and dedup_prefix_filter.
+_JACCARD_ORACLE = f"""
 WITH {CORPUS_SQL.strip()},
 {SHINGLES_SQL.strip().lstrip(',').strip()},
 sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
@@ -191,8 +191,10 @@ JOIN sizes z1 ON z1.doc_id = d1
 JOIN sizes z2 ON z2.doc_id = d2
 WHERE c * 1.0 / (z1.sz + z2.sz - c) >= 0.6
 ORDER BY d1, d2
-""",
-)
+"""
+
+
+@query("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact trigram Jaccard join — the correctness baseline for near-dup
     detection. Scale note: cost ∝ Σ (docs per shingle)²; fine when shingles
@@ -346,27 +348,36 @@ def lsh_candidate_pairs_of(docs: DataFrame) -> DataFrame:
 
 
 def _pairs_from_bands(bands: DataFrame) -> DataFrame:
-    """Distinct candidate pairs from a (doc_id, band, bsig) band frame.
+    """Distinct candidate pairs (d1, d2) from a (doc_id, band, bsig) band
+    frame."""
+    return _bucket_pairs(bands, ("band", "bsig"), "doc_id", "d1", "d2")
 
-    Candidate pairs per bucket via groupBy + in-bucket pair expansion:
-    ONE exchange on the bucket key, instead of a self-join's two (and the
-    self-join would execute the signature lineage twice). Pair count per
-    bucket is k², bounded by near-dup cluster size — the same bound the
-    self-join has; a giant bucket means a degenerate band either way.
-    Two chained Generate nodes, not a flatten/transform lambda tree:
-    generators stay in whole-stage codegen while nested lambdas run
-    interpreted per element and allocate a struct per pair (same r12
-    rewrite as the embedding-LSH candidate stages; measured ~40%
-    faster on the candidate stage at sf0.1, identical pairs)."""
-    ids = F.sort_array(F.collect_list("doc_id"))
+
+def _bucket_pairs(
+    rows: DataFrame, bucket: tuple[str, str], id_col: str, left: str, right: str
+) -> DataFrame:
+    """Distinct (left, right) pairs, left < right, of the ``id_col`` values
+    that share a ``bucket`` key.
+
+    groupBy + in-bucket pair expansion: ONE exchange on the bucket key,
+    instead of a self-join's two (and the self-join would execute the
+    signature lineage twice). Pair count per bucket is k², bounded by
+    near-dup cluster size — the same bound the self-join has; a giant
+    bucket means a degenerate band either way. Two chained Generate
+    nodes, not a flatten/transform lambda tree: generators stay in
+    whole-stage codegen while nested lambdas run interpreted per element
+    and allocate a struct per pair (measured 1.54 s vs 1.12 s for the
+    embedding-LSH candidate stage at sf0.1, identical pairs). A pair
+    colliding in several buckets comes out once."""
+    ids = F.sort_array(F.collect_list(id_col))
     return (
-        bands.groupBy("band", "bsig")
+        rows.groupBy(*bucket)
         .agg(ids.alias("ids"))
         .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "d1"))
+        .select("ids", F.posexplode("ids").alias("i", left))
         .select(
-            "d1",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias("d2"),
+            left,
+            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias(right),
         )
         .distinct()
     )
@@ -584,14 +595,11 @@ _EMB_BLOCKS = 8  # B(B+1)/2 = 36 tiles; raise with corpus size (see above)
 # recipe is bounded-corpus BY DESIGN — the sf10 sweep (200k vectors =
 # 2·10¹⁰ pairs) proved the failure mode when nothing enforced it.  The
 # bound is checked from parquet FOOTER metadata (no Spark job — plan-build
-# stays inside the 1.0 s budget) and is a documented knob, not a guess:
-# 50k vectors ≈ 1.25·10⁹ pairs ≈ the sf1 fixture (20k, swept strict-green
-# in r11) with 6× headroom.  Above it, callers are redirected to the
-# sub-quadratic recipes (dedup_embedding_lsh at dedup-strength thresholds,
-# sim_ivf_ann/semdedup for retrieval) — raising the knob is an explicit
-# opt-in to quadratic cost.
-_EMB_EXACT_MAX_ROWS_ENV = "MIS_EMB_EXACT_MAX_ROWS"
-_EMB_EXACT_MAX_ROWS_DEFAULT = 50_000
+# stays inside the 1.0 s budget): 50k vectors ≈ 1.25·10⁹ pairs ≈ the sf1
+# fixture (20k, swept strict-green in r11) with 6× headroom.  Above it,
+# callers are redirected to the sub-quadratic recipes (dedup_embedding_lsh
+# at dedup-strength thresholds, sim_ivf_ann/semdedup for retrieval).
+_EMB_EXACT_MAX_ROWS = 50_000
 
 
 def _parquet_footer_rows(path: str) -> int | None:
@@ -616,24 +624,18 @@ def _parquet_footer_rows(path: str) -> int | None:
 
 @query("dedup_embedding", oracle=_EMB_ORACLE)
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     import numpy as np
     import pandas as pd
 
-    max_rows = int(
-        os.environ.get(_EMB_EXACT_MAX_ROWS_ENV, _EMB_EXACT_MAX_ROWS_DEFAULT)
-    )
     n_rows = _parquet_footer_rows(f"{sf_dir}/embeddings.parquet")
-    if n_rows is not None and n_rows > max_rows:
+    if n_rows is not None and n_rows > _EMB_EXACT_MAX_ROWS:
         raise ValueError(
             f"dedup_embedding is the EXACT all-pairs recipe — Θ(n²) cosine "
             f"work by design — and the corpus at {sf_dir} has {n_rows:,} "
-            f"vectors (> {max_rows:,} = ${_EMB_EXACT_MAX_ROWS_ENV}). "
+            f"vectors (> {_EMB_EXACT_MAX_ROWS:,}). "
             f"Use dedup_embedding_lsh (banded hyperplane LSH, recall→1 at "
             f"dedup-strength thresholds) or the IVF/semdedup recipes in "
-            f"extensions/similarity.py; set {_EMB_EXACT_MAX_ROWS_ENV} "
-            f"higher only as an explicit opt-in to quadratic cost."
+            f"extensions/similarity.py."
         )
 
     B = _EMB_BLOCKS
@@ -723,15 +725,15 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # surviving pairs. No broadcast of the corpus, no n² rows.
 _EMB_LSH_BANDS = 88
 _EMB_LSH_PLANES_PER_BAND = 12
-# COUPLING: dedup_threshold_sweep's oracle counts EXACT all-pairs while
-# the engine counts banded-LSH candidates — the green compare rests on
-# recall-1 at tau >= 0.7 with THESE band parameters on THIS fixture.
-# Changing either constant (or the fixture) requires re-validating both
-# dedup_embedding_lsh AND dedup_threshold_sweep together; a recall drop
-# shows up as an oracle mismatch, which is intentional (the compare IS
-# the recall audit).
-_EMB_LSH_ORACLE = """
-WITH base AS (
+_EMB_LSH_TAU = 0.7
+# COUPLING: dedup_embedding_lsh and dedup_threshold_sweep both take their
+# candidates from _emb_lsh_candidates, while both oracles score EXACT all
+# pairs — the green compares rest on recall 1 at tau >= 0.7 with THESE
+# band parameters on THIS fixture. Changing either constant (or the
+# fixture) requires re-validating both queries; a recall drop shows up as
+# an oracle mismatch in both, which is intentional (the compare IS the
+# recall audit).
+_EMB_TWIN_CORPUS_SQL = """base AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
@@ -741,7 +743,10 @@ pert AS (
                                           THEN 0.0 ELSE x END) AS e
   FROM base WHERE vec_id % 10 = 0
 ),
-corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
+corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert)"""
+
+_EMB_LSH_ORACLE = f"""
+WITH {_EMB_TWIN_CORPUS_SQL},
 pairs AS (
   SELECT a.vec_id AS left_id, b.vec_id AS right_id,
          list_dot_product(a.e, b.e)
@@ -751,18 +756,14 @@ pairs AS (
 )
 SELECT left_id, right_id, round(cosine, 6) AS cosine
 FROM pairs
-WHERE cosine >= 0.7
+WHERE cosine >= {_EMB_LSH_TAU}
 ORDER BY left_id, right_id
 """
 
 
-@query("dedup_embedding_lsh", oracle=_EMB_LSH_ORACLE)
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minimised_impala_spark.extensions import vector_kernels as VK
-    from minimised_impala_spark.shipping import ship_module_by_value
-
-    ship_module_by_value("minimised_impala_spark.extensions.vector_kernels")
-
+def _emb_twin_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e) embeddings as doubles plus a planted near-twin of every
+    10th vector — mirrors _EMB_TWIN_CORPUS_SQL."""
     base = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -775,7 +776,56 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e", lambda x, i: F.when(i % 16 == 0, F.lit(0.0)).otherwise(x)
         ).alias("e"),
     )
-    corpus_df = base.unionByName(pert)
+    return base.unionByName(pert)
+
+
+def _emb_lsh_candidates(idx: DataFrame) -> DataFrame:
+    """(left_id, right_id) pairs that share a band bucket of the LSH index
+    ``idx`` (vec_id, sigs, q, qs, nrm) and whose int8 cosine bound reaches
+    _EMB_LSH_TAU.
+
+    Bulk pre-filter on int8 proxy codes (r13, guide §2.3/§8): candidate
+    pairs outnumber corpus rows ~350:1 at sf1, so the rescore cost is the
+    per-pair bytes crossing Arrow — 64 B codes + 2 scalars instead of
+    512 B doubles per side (~7x fewer bytes), and cosine_ub_pair is a
+    PROVABLE upper bound (derivation in vector_kernels.py), so no pair
+    that can reach tau is dropped. Only survivors (planted twins + a thin
+    margin band) pay the exact double-precision kernel."""
+    from minimised_impala_spark.extensions import vector_kernels as VK
+
+    bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
+    cand = _bucket_pairs(bands, ("band", "bucket"), "vec_id", "left_id", "right_id")
+    qa = idx.select(
+        F.col("vec_id").alias("left_id"), F.col("q").alias("lq"),
+        F.col("qs").alias("lqs"), F.col("nrm").alias("lnrm"),
+    )
+    qb = idx.select(
+        F.col("vec_id").alias("right_id"), F.col("q").alias("rq"),
+        F.col("qs").alias("rqs"), F.col("nrm").alias("rnrm"),
+    )
+    return (
+        cand.join(qa, "left_id")
+        .join(qb, "right_id")
+        # *_once: the filter on the UDF output column otherwise gets
+        # pushed below the projection and the kernel runs twice (§4.4)
+        .select(
+            "left_id",
+            "right_id",
+            VK.cosine_ub_pair_once(
+                "lq", "lqs", "lnrm", "rq", "rqs", "rnrm"
+            ).alias("ub"),
+        )
+        .filter(F.col("ub") >= _EMB_LSH_TAU)
+        .select("left_id", "right_id")
+    )
+
+
+@query("dedup_embedding_lsh", oracle=_EMB_LSH_ORACLE)
+def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from minimised_impala_spark.extensions import vector_kernels as VK
+    from minimised_impala_spark.shipping import ship_module_by_value
+
+    ship_module_by_value("minimised_impala_spark.extensions.vector_kernels")
 
     prep = VK.make_lsh_prep_udf(
         spark, _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND, with_norm_vec=True
@@ -786,60 +836,11 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JVM↔Python crossing is the cost — cross once with every output:
     # separate signature and normalize UDFs each put their own
     # ArrowEvalPython over their own corpus scan).
+    corpus_df = _emb_twin_corpus(spark, sf_dir)
     idx = seam(corpus_df.select("vec_id", prep("e").alias("p")).select(
         "vec_id", "p.ne", "p.sigs", "p.q", "p.qs", "p.nrm"
     ))
-    bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
-    # Candidate pairs per bucket via groupBy + in-bucket pair expansion:
-    # ONE exchange on the bucket key instead of the previous self-join's
-    # two shuffles + join (guide §2.4) — the same pattern
-    # lsh_candidate_pairs_of uses for MinHash. Pair count per bucket is
-    # k², bounded by near-dup cluster density exactly as the self-join's
-    # per-bucket output was.
-    # Two chained Generate nodes (posexplode anchor, explode of the
-    # tail slice) instead of one flatten/transform/struct lambda tree:
-    # the generators stay in codegen while the nested lambdas run
-    # interpreted per element and allocate a struct per pair (measured
-    # 1.54 s vs 1.12 s for the candidate stage at sf0.1; same rows).
-    ids = F.sort_array(F.collect_list("vec_id"))
-    cand = (
-        bands.groupBy("band", "bucket")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "left_id"))
-        .select(
-            "left_id",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias(
-                "right_id"
-            ),
-        )
-        .distinct()  # a pair colliding in several bands scores once
-    )
-    # Bulk pre-filter on int8 proxy codes, exact rescore survivors only
-    # (r13, guide §2.3/§8 — same two-tier rescore as
-    # dedup_threshold_sweep; the ub kernel's bound is proven lossless in
-    # vector_kernels.py, so recall is untouched).
-    qa = idx.select(
-        F.col("vec_id").alias("left_id"), F.col("q").alias("lq"),
-        F.col("qs").alias("lqs"), F.col("nrm").alias("lnrm"),
-    )
-    qb = idx.select(
-        F.col("vec_id").alias("right_id"), F.col("q").alias("rq"),
-        F.col("qs").alias("rqs"), F.col("nrm").alias("rnrm"),
-    )
-    survivors = (
-        cand.join(qa, "left_id")
-        .join(qb, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            VK.cosine_ub_pair_once(
-                "lq", "lqs", "lnrm", "rq", "rqs", "rnrm"
-            ).alias("ub"),
-        )
-        .filter(F.col("ub") >= 0.7)
-        .select("left_id", "right_id")
-    )
+    survivors = _emb_lsh_candidates(idx)
     norm = idx.select("vec_id", "ne")
     scored = (
         survivors.join(
@@ -854,7 +855,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pushed below the projection and the kernel runs twice per pair
         # (two ArrowEvalPython nodes in the before-plan; guide §4.4)
         .select("left_id", "right_id", VK.dot_pair_once("le", "re").alias("cosine"))
-        .filter(F.col("cosine") >= 0.7)
+        .filter(F.col("cosine") >= _EMB_LSH_TAU)
         .select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
     )
     return order_after_python(scored, "left_id", "right_id")
@@ -1191,27 +1192,7 @@ def pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PF_T_NUM, _PF_T_DEN = 3, 5  # t = 0.6
 
 
-@query(
-    "dedup_prefix_filter",
-    oracle=f"""
-WITH {CORPUS_SQL.strip()},
-{SHINGLES_SQL.strip().lstrip(',').strip()},
-sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT s1.doc_id AS d1, s2.doc_id AS d2, count(*) AS c
-  FROM shingles s1 JOIN shingles s2
-    ON s1.sh = s2.sh AND s1.doc_id < s2.doc_id
-  GROUP BY s1.doc_id, s2.doc_id
-)
-SELECT d1, d2,
-       round(c * 1.0 / (z1.sz + z2.sz - c), 6) AS jaccard
-FROM inter
-JOIN sizes z1 ON z1.doc_id = d1
-JOIN sizes z2 ON z2.doc_id = d2
-WHERE c * 1.0 / (z1.sz + z2.sz - c) >= 0.6
-ORDER BY d1, d2
-""",
-)
+@query("dedup_prefix_filter", oracle=_JACCARD_ORACLE)
 def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -1265,10 +1246,10 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The LSH probe is deterministic (md5-derived hashes), so the oracle
 # reproduces the same index and probe in SQL — both engines agree on
 # candidates AND scores.
-@query(
-    "dedup_incremental",
-    oracle=f"""
-WITH {{bands_cte}},
+# The same statement answers streaming_dedup_lsh, which runs this probe
+# per micro-batch.
+INCREMENTAL_ORACLE = f"""
+WITH {_minhash_bands_cte()},
 cand AS (
   SELECT DISTINCT b1.doc_id AS new_id, b2.doc_id AS corpus_id
   FROM bands b1 JOIN bands b2
@@ -1300,8 +1281,10 @@ best AS (
 SELECT new_id, corpus_id AS match_id, round(jac, 6) AS jaccard
 FROM best WHERE r = 1
 ORDER BY new_id
-""".format(bands_cte=_minhash_bands_cte()),
-)
+"""
+
+
+@query("dedup_incremental", oracle=INCREMENTAL_ORACLE)
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
@@ -2095,19 +2078,9 @@ def dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fan-out is a broadcast cross of the SCORED pairs (≪ corpus), so the
 # sweep costs one dedup candidate pass regardless of how many
 # thresholds are audited.
-_SWEEP_TAUS = (0.70, 0.80, 0.90, 0.95)
+_SWEEP_TAUS = (_EMB_LSH_TAU, 0.80, 0.90, 0.95)
 _SWEEP_ORACLE = f"""
-WITH base AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-pert AS (
-  SELECT vec_id + 100000 AS vec_id,
-         list_transform(e, (x, i) -> CASE WHEN (i - 1) % 16 = 0
-                                          THEN 0.0 ELSE x END) AS e
-  FROM base WHERE vec_id % 10 = 0
-),
-corpus AS (SELECT * FROM base UNION ALL SELECT * FROM pert),
+WITH {_EMB_TWIN_CORPUS_SQL},
 pairs AS (
   SELECT a.vec_id AS left_id, b.vec_id AS right_id,
          round(list_dot_product(a.e, b.e)
@@ -2144,16 +2117,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_module_by_value("minimised_impala_spark.extensions.vector_kernels")
 
-    base = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    pert = base.filter(F.col("vec_id") % 10 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "e", lambda x, i: F.when(i % 16 == 0, F.lit(0.0)).otherwise(x)
-        ).alias("e"),
-    )
-    corpus_df = base.unionByName(pert)
+    corpus_df = _emb_twin_corpus(spark, sf_dir)
     prep = VK.make_lsh_prep_udf(spark, _EMB_LSH_BANDS, _EMB_LSH_PLANES_PER_BAND)
     # ONE persisted index carries the raw vector, the banded signatures
     # AND the int8 proxy codes for the rescore pre-filter, all from a
@@ -2165,55 +2129,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = seam(corpus_df.select("vec_id", "e", prep("e").alias("p")).select(
         "vec_id", "e", "p.sigs", "p.q", "p.qs", "p.nrm"
     ))
-    bands = idx.select("vec_id", F.posexplode("sigs").alias("band", "bucket"))
-    # in-bucket pair expansion: one exchange on the bucket key instead of
-    # the self-join's two (guide §2.4; same pattern as dedup_embedding_lsh)
-    # two chained Generate nodes, not a flatten/transform lambda tree —
-    # see the identical rewrite in dedup_embedding_lsh above
-    ids = F.sort_array(F.collect_list("vec_id"))
-    cand_ids = (
-        bands.groupBy("band", "bucket")
-        .agg(ids.alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select("ids", F.posexplode("ids").alias("i", "left_id"))
-        .select(
-            "left_id",
-            F.explode(F.expr("slice(ids, i + 2, size(ids) - i - 1)")).alias(
-                "right_id"
-            ),
-        )
-        .distinct()
-    )
-    # Bulk pre-filter on int8 proxy codes (r13, guide §2.3/§8): candidate
-    # pairs outnumber corpus rows ~350:1 at sf1, so the rescore cost is
-    # the per-pair bytes crossing Arrow — 64 B codes + 2 scalars instead
-    # of 512 B doubles per side (~7x fewer bytes), and cosine_ub_pair is
-    # a PROVABLE upper bound (derivation in vector_kernels.py), so no
-    # pair that can reach τ₀ is dropped. Only survivors (planted twins +
-    # a thin margin band) pay the exact double-precision kernel.
-    qa = idx.select(
-        F.col("vec_id").alias("left_id"), F.col("q").alias("lq"),
-        F.col("qs").alias("lqs"), F.col("nrm").alias("lnrm"),
-    )
-    qb = idx.select(
-        F.col("vec_id").alias("right_id"), F.col("q").alias("rq"),
-        F.col("qs").alias("rqs"), F.col("nrm").alias("rnrm"),
-    )
-    survivors = (
-        cand_ids.join(qa, "left_id")
-        .join(qb, "right_id")
-        # *_once: the filter on the UDF output column otherwise gets
-        # pushed below the projection and the kernel runs twice (§4.4)
-        .select(
-            "left_id",
-            "right_id",
-            VK.cosine_ub_pair_once(
-                "lq", "lqs", "lnrm", "rq", "rqs", "rnrm"
-            ).alias("ub"),
-        )
-        .filter(F.col("ub") >= _SWEEP_TAUS[0])
-        .select("left_id", "right_id")
-    )
+    survivors = _emb_lsh_candidates(idx)
     va = idx.select(F.col("vec_id").alias("left_id"), F.col("e").alias("ea"))
     vb = idx.select(F.col("vec_id").alias("right_id"), F.col("e").alias("eb"))
     cand = (

@@ -17,6 +17,7 @@ exactly as a real codec UDF would be.
 
 from __future__ import annotations
 
+import io
 from collections.abc import Iterator
 
 import pandas as pd
@@ -39,20 +40,24 @@ DECODED_SCHEMA = (
 )
 
 
-def decode_image_real(payload: bytes) -> tuple[int, int, int]:
-    """Real codec hook: decodes via PIL when it is installed, raises
-    NotImplementedError otherwise. Environment-gated rather than
-    hard-stubbed so an install of the codec libs upgrades this path (and
-    its importorskip-gated tests) with no code change."""
+def _pil_image(payload: bytes):
+    """``payload`` opened as a PIL image; NotImplementedError when PIL is
+    not installed."""
     try:
-        import io
-
         from PIL import Image  # type: ignore[import-not-found]
     except ImportError as exc:
         raise NotImplementedError(
             "image codecs not available in this environment"
         ) from exc
-    with Image.open(io.BytesIO(payload)) as im:
+    return Image.open(io.BytesIO(payload))
+
+
+def decode_image_real(payload: bytes) -> tuple[int, int, int]:
+    """Real codec hook: decodes via PIL when it is installed, raises
+    NotImplementedError otherwise. Environment-gated rather than
+    hard-stubbed so an install of the codec libs upgrades this path (and
+    its importorskip-gated tests) with no code change."""
+    with _pil_image(payload) as im:
         return (im.width, im.height, len(im.getbands()))
 
 
@@ -171,15 +176,7 @@ def resize_image_real(payload: bytes, w: int, h: int) -> bytes:
     """Real resize hook: PIL.Image.resize when PIL is installed, raises
     NotImplementedError otherwise (environment-gated like
     decode_image_real)."""
-    try:
-        import io
-
-        from PIL import Image  # type: ignore[import-not-found]
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image codecs not available in this environment"
-        ) from exc
-    with Image.open(io.BytesIO(payload)) as im:
+    with _pil_image(payload) as im:
         out = io.BytesIO()
         im.resize((w, h)).save(out, format=im.format or "PNG")
         return out.getvalue()

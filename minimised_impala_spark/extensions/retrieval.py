@@ -35,12 +35,10 @@ B = 0.75
 QUERY_TERMS = ("join", "filter", "stream")
 TOPK = 10
 
-_BM25_ORACLE = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-  FROM documents
-),
-postings AS (
+# The BM25 model over `toks` (doc_id, term): term frequencies
+# (postings), document lengths (dl), corpus size and length (stats) and
+# document frequencies (df).
+_BM25_STATS_CTE = """postings AS (
   SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
   FROM toks GROUP BY doc_id, term
 ),
@@ -55,7 +53,14 @@ stats AS (
 df AS (
   SELECT term, CAST(count(*) AS BIGINT) AS df
   FROM postings GROUP BY term
+)"""
+
+_BM25_ORACLE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
+  FROM documents
 ),
+{_BM25_STATS_CTE},
 q AS (SELECT unnest(['join', 'filter', 'stream']) AS term),
 scored AS (
   SELECT p.doc_id,
@@ -185,22 +190,7 @@ q AS (
   SELECT term FROM toks WHERE doc_id = 0
   GROUP BY term ORDER BY count(*) DESC, term LIMIT 3
 ),
-postings AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM toks GROUP BY doc_id, term
-),
-dl AS (
-  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM postings GROUP BY doc_id
-),
-stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(dl) AS BIGINT) AS total_len
-  FROM dl
-),
-df AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df
-  FROM postings GROUP BY term
-),
+{_BM25_STATS_CTE},
 lex_scored AS (
   SELECT p.doc_id,
          round(sum(ln(1 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))

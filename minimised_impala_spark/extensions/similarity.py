@@ -52,11 +52,11 @@ def _vecd(col: str) -> Column:
 _plane = VK.plane
 
 
-# --------------------------------------------------------------------------
-@query(
-    "sim_cosine_topk",
-    oracle="""
-WITH v AS (
+def _exact_pairs_cte(n_queries: int) -> str:
+    """WITH-body through `pairs` (query_id, neighbor_id, cosine): the exact
+    6dp cosine of each query vector (vec_id < ``n_queries``) with every
+    other vector."""
+    return f"""v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
@@ -66,8 +66,15 @@ pairs AS (
            / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))),
            6) AS cosine
   FROM v q JOIN v c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < 10
-),
+  WHERE q.vec_id < {n_queries}
+)"""
+
+
+# --------------------------------------------------------------------------
+@query(
+    "sim_cosine_topk",
+    oracle=f"""
+WITH {_exact_pairs_cte(10)},
 ranked AS (
   SELECT query_id, neighbor_id, cosine,
          row_number() OVER (PARTITION BY query_id
@@ -120,10 +127,10 @@ _PLANE_SQL = (
 )
 
 
-@query(
-    "sim_lsh_buckets",
-    oracle=f"""
-WITH v AS (
+def _plane_dots_cte(n_planes: int) -> str:
+    """WITH-body through `proj` (vec_id, pl, dot): each vector's dot with
+    each of the first ``n_planes`` hyperplanes."""
+    return f"""v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
 ),
@@ -134,15 +141,31 @@ comps AS (
 proj AS (
   SELECT c.vec_id, j.pl,
          sum(c.x * {_PLANE_SQL}) AS dot
-  FROM comps c, (SELECT unnest(range({N_PLANES})) AS pl) j
+  FROM comps c, (SELECT unnest(range({n_planes})) AS pl) j
   GROUP BY c.vec_id, j.pl
-),
+)"""
+
+
+# The N_PLANES-bit hyperplane bucket of each vector (`sig`), as
+# VK.lsh_bucket computes it, and each vector at unit length (`norm`).
+_BUCKET_CTE = f"""{_plane_dots_cte(N_PLANES)},
 sig AS (
   SELECT vec_id,
          CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << pl) ELSE 0 END) AS BIGINT)
            AS bucket
   FROM proj GROUP BY vec_id
-)
+)"""
+_NORM_CTE = """norm AS (
+  SELECT vec_id,
+         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS ne
+  FROM v
+)"""
+
+
+@query(
+    "sim_lsh_buckets",
+    oracle=f"""
+WITH {_BUCKET_CTE}
 SELECT bucket, count(*) AS n_vectors
 FROM sig
 GROUP BY bucket
@@ -171,31 +194,8 @@ def sim_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_lsh_ann",
     oracle=f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-comps AS (
-  SELECT vec_id, i.dim, e[i.dim + 1] AS x
-  FROM v, (SELECT unnest(range({DIM})) AS dim) i
-),
-proj AS (
-  SELECT c.vec_id, j.pl,
-         sum(c.x * {_PLANE_SQL}) AS dot
-  FROM comps c, (SELECT unnest(range({N_PLANES})) AS pl) j
-  GROUP BY c.vec_id, j.pl
-),
-sig AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << pl) ELSE 0 END) AS BIGINT)
-           AS bucket
-  FROM proj GROUP BY vec_id
-),
-norm AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS ne
-  FROM v
-),
+WITH {_BUCKET_CTE},
+{_NORM_CTE},
 pairs AS (
   SELECT a.vec_id AS qid, b.vec_id AS nid,
          round(list_dot_product(na.ne, nb.ne), 6) AS cosine
@@ -264,20 +264,7 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ∝ collisions, and the union at most doubles them. Fully SQL-expressible
 # because the second set is just plane indices 8-15 in _PLANE_SQL.
 _MULTIPROBE_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-comps AS (
-  SELECT vec_id, i.dim, e[i.dim + 1] AS x
-  FROM v, (SELECT unnest(range({DIM})) AS dim) i
-),
-proj AS (
-  SELECT c.vec_id, j.pl,
-         sum(c.x * {_PLANE_SQL}) AS dot
-  FROM comps c, (SELECT unnest(range({2 * N_PLANES})) AS pl) j
-  GROUP BY c.vec_id, j.pl
-),
+WITH {_plane_dots_cte(2 * N_PLANES)},
 sig AS (
   SELECT vec_id,
          CAST(sum(CASE WHEN pl < {N_PLANES} AND dot > 0
@@ -293,11 +280,7 @@ cand AS (
   SELECT a.vec_id AS qid, b.vec_id AS nid
   FROM sig a JOIN sig b ON b.b1 = a.b1 AND b.vec_id <> a.vec_id
 ),
-norm AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS ne
-  FROM v
-),
+{_NORM_CTE},
 scored AS (
   SELECT c.qid, c.nid, round(list_dot_product(na.ne, nb.ne), 6) AS cosine
   FROM cand c
@@ -1084,6 +1067,33 @@ def sim_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _rescored_top5(short: DataFrame, *carry: str) -> DataFrame:
+    """The 5 nearest neighbors per query of a shortlist (query_id,
+    neighbor_id, *carry, qe, ce) by exact 6dp cosine, as (query_id,
+    neighbor_id, *carry, cosine, rn)."""
+    from pyspark.sql import Window as W
+
+    fcos = short.select(
+        "query_id",
+        "neighbor_id",
+        *carry,
+        F.round(VK.cosine_pair("qe", "ce"), 6).alias("fcos"),
+    )
+    wr = W.partitionBy("query_id").orderBy(F.desc("fcos"), F.asc("neighbor_id"))
+    return (
+        fcos.withColumn("rn", F.row_number().over(wr))
+        .filter(F.col("rn") <= 5)
+        .select(
+            "query_id",
+            "neighbor_id",
+            *carry,
+            F.col("fcos").alias("cosine"),
+            F.col("rn").cast("int").alias("rn"),
+        )
+        .orderBy("query_id", "rn")
+    )
+
+
 # --------------------------------------------------------------------------
 # Matryoshka-style two-stage retrieval (Kusupati et al. 2022, MRL): MRL
 # embeddings keep their semantics under PREFIX truncation, so stage 1
@@ -1161,27 +1171,8 @@ def sim_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ws = W.partitionBy("query_id").orderBy(F.desc("tcos"), F.asc("neighbor_id"))
-    short = (
-        pairs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= 20)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(VK.cosine_pair("qe", "ce"), 6).alias("fcos"),
-        )
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("fcos"), F.asc("neighbor_id"))
-    return (
-        short.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("fcos").alias("cosine"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-        .orderBy("query_id", "rn")
-    )
+    short = pairs.withColumn("srn", F.row_number().over(ws)).filter(F.col("srn") <= 20)
+    return _rescored_top5(short)
 
 
 # --------------------------------------------------------------------------
@@ -1269,29 +1260,8 @@ def sim_binary_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ws = W.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    short = (
-        pairs.withColumn("srn", F.row_number().over(ws))
-        .filter(F.col("srn") <= 32)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.round(VK.cosine_pair("qe", "ce"), 6).alias("fcos"),
-        )
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("fcos"), F.asc("neighbor_id"))
-    return (
-        short.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.col("fcos").alias("cosine"),
-            F.col("rn").cast("int").alias("rn"),
-        )
-        .orderBy("query_id", "rn")
-    )
+    short = pairs.withColumn("srn", F.row_number().over(ws)).filter(F.col("srn") <= 32)
+    return _rescored_top5(short, "hamming")
 
 
 # --------------------------------------------------------------------------
@@ -1449,31 +1419,8 @@ RECALL_QUERIES = 20
 
 
 _RECALL_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-comps AS (
-  SELECT vec_id, i.dim, e[i.dim + 1] AS x
-  FROM v, (SELECT unnest(range({DIM})) AS dim) i
-),
-proj AS (
-  SELECT c.vec_id, j.pl,
-         sum(c.x * {_PLANE_SQL}) AS dot
-  FROM comps c, (SELECT unnest(range({N_PLANES})) AS pl) j
-  GROUP BY c.vec_id, j.pl
-),
-sig AS (
-  SELECT vec_id,
-         CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << pl) ELSE 0 END) AS BIGINT)
-           AS bucket
-  FROM proj GROUP BY vec_id
-),
-norm AS (
-  SELECT vec_id,
-         list_transform(e, x -> x / sqrt(list_dot_product(e, e))) AS ne
-  FROM v
-),
+WITH {_BUCKET_CTE},
+{_NORM_CTE},
 ann_pairs AS (
   SELECT a.vec_id AS qid, b.vec_id AS nid,
          round(list_dot_product(na.ne, nb.ne), 6) AS cosine
@@ -1796,19 +1743,8 @@ def sim_diverse_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the τ compare keeps the boundary identical in both engines.
 @query(
     "sim_range_search",
-    oracle="""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-),
-pairs AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(list_dot_product(q.e, c.e)
-           / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))),
-           6) AS cosine
-  FROM v q JOIN v c ON c.vec_id <> q.vec_id
-  WHERE q.vec_id < 8
-)
+    oracle=f"""
+WITH {_exact_pairs_cte(8)}
 SELECT query_id, neighbor_id, cosine
 FROM pairs WHERE cosine >= 0.25
 ORDER BY query_id, neighbor_id

@@ -87,11 +87,8 @@ def _langid_score_sql(lang: str) -> str:
     return f"len(list_intersect(string_split(text, ' '), [{lits}]))"
 
 
-@query(
-    "text_langid",
-    oracle=f"""
-SELECT lang_pred, count(*) AS n_docs FROM (
-  SELECT doc_id,
+# The stopword-overlap language of `text`, as _langid_pred computes it.
+_LANGID_PRED_SQL = f"""
          CASE
            WHEN {_langid_score_sql('en')} >= {_langid_score_sql('de')}
             AND {_langid_score_sql('en')} >= {_langid_score_sql('es')}
@@ -104,16 +101,12 @@ SELECT lang_pred, count(*) AS n_docs FROM (
             AND {_langid_score_sql('es')} > 0 THEN 'es'
            WHEN {_langid_score_sql('fr')} > 0 THEN 'fr'
            ELSE 'unknown'
-         END AS lang_pred
-  FROM documents
-) t GROUP BY lang_pred
-ORDER BY lang_pred
-""",
-)
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-overlap language ID (n-gram heuristic). Deterministic
-    tie-break: priority order en > de > es > fr."""
-    docs = load_table(spark, sf_dir, "documents")
+         END"""
+
+
+def _langid_pred() -> Column:
+    """Stopword-overlap language ID (n-gram heuristic) of `text`.
+    Deterministic tie-break: priority order en > de > es > fr."""
     toks = F.split("text", " ")
 
     def score(lang: str) -> Column:
@@ -122,15 +115,30 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     en, de, es, fr = (score(lang) for lang in ("en", "de", "es", "fr"))
-    pred = (
+    return (
         F.when((en >= de) & (en >= es) & (en >= fr) & (en > 0), "en")
         .when((de >= es) & (de >= fr) & (de > 0), "de")
         .when((es >= fr) & (es > 0), "es")
         .when(fr > 0, "fr")
         .otherwise("unknown")
     )
+
+
+@query(
+    "text_langid",
+    oracle=f"""
+SELECT lang_pred, count(*) AS n_docs FROM (
+  SELECT doc_id,{_LANGID_PRED_SQL} AS lang_pred
+  FROM documents
+) t GROUP BY lang_pred
+ORDER BY lang_pred
+""",
+)
+def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language counts of the stopword-overlap language ID."""
+    docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(pred.alias("lang_pred"))
+        docs.select(_langid_pred().alias("lang_pred"))
         .groupBy("lang_pred")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("lang_pred")
@@ -301,8 +309,7 @@ def text_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (shuffle of (shingle, id) pairs — bench side is tiny so Spark broadcasts
 # it), count distinct shared shingles per (train, bench) pair. Cost is
 # ∝ |bench shingles| × avg docs per shingle, NOT |train|².
-_CONTAMINATION_ORACLE = """
-WITH corpus AS (SELECT doc_id, text FROM documents),
+_CONTAMINATED_CTE = """corpus AS (SELECT doc_id, text FROM documents),
 -- Identity-preserving exact-duplicate collapse (r12, VERDICT r11
 -- directive #7 — same rewrite the r11 near-dedup oracle got): identical
 -- text => identical distinct-trigram shingle set => identical
@@ -356,11 +363,18 @@ hits AS (
   SELECT i.train_g, i.bench_g, round(i.c * 1.0 / z.bsz, 6) AS containment
   FROM inter i JOIN bsizes z ON z.bench_id = i.bench_g
   WHERE i.c * 1.0 / z.bsz >= 0.5
-)
-SELECT tm.doc_id AS train_id, bm.bench_id AS bench_id, h.containment
-FROM hits h
-JOIN tmap tm ON tm.tgid = h.train_g
-JOIN bmap bm ON bm.bgid = h.bench_g
+),
+contaminated AS (
+  SELECT tm.doc_id AS train_id, bm.bench_id AS bench_id, h.containment
+  FROM hits h
+  JOIN tmap tm ON tm.tgid = h.train_g
+  JOIN bmap bm ON bm.bgid = h.bench_g
+)"""
+
+_CONTAMINATION_ORACLE = f"""
+WITH {_CONTAMINATED_CTE}
+SELECT train_id, bench_id, containment
+FROM contaminated
 ORDER BY train_id, bench_id
 """
 
@@ -566,12 +580,13 @@ def text_mix_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("text_contamination", oracle=_CONTAMINATION_ORACLE)
-def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _contamination_shingles(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(train_id, sh) distinct trigram shingles of every document and
+    (bench_id, sh) of the derived benchmark set, the latter seamed — as
+    the contamination oracles build them."""
     from minimised_impala_spark.extensions.dedup import _trigrams_of
 
     grams = F.array_distinct(_trigrams_of(F.col("toks")))
-    docs = load_table(spark, sf_dir, "documents")
     train_sh = docs.withColumn("toks", F.split("text", " ")).select(
         F.col("doc_id").alias("train_id"), F.explode(grams).alias("sh")
     )
@@ -580,22 +595,38 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     )
     # persist: bench_sh feeds both the per-bench sizes and the
-    # intersection broadcast — uncached each re-ran the bench scan +
-    # shingle explode (r12, guide §5)
+    # intersection broadcast (and the bloom build's set bits) — uncached
+    # each re-ran the bench scan + shingle explode (r12, guide §5)
     bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
         "bench_id", F.explode(grams).alias("sh")
     ))
+    return train_sh, bench_sh
+
+
+def _contaminated(train_sh: DataFrame, bench_sh: DataFrame) -> DataFrame:
+    """(bench_id, train_id, c, bsz) for every train document that holds c
+    of a benchmark item's bsz shingles, with c / bsz >= 0.5."""
     bsizes = bench_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))
     inter = (
-        train_sh.join(F.broadcast(bench_sh.withColumnRenamed("sh", "bsh")),
-                      F.col("sh") == F.col("bsh"))
+        train_sh.join(
+            F.broadcast(bench_sh.withColumnRenamed("sh", "bsh")),
+            F.col("sh") == F.col("bsh"),
+        )
         .groupBy("train_id", "bench_id")
         .agg(F.count(F.lit(1)).alias("c"))
     )
+    return inter.join(F.broadcast(bsizes), "bench_id").filter(
+        F.col("c") * 1.0 / F.col("bsz") >= 0.5
+    )
+
+
+@query("text_contamination", oracle=_CONTAMINATION_ORACLE)
+def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    train_sh, bench_sh = _contamination_shingles(docs)
     containment = F.col("c") * 1.0 / F.col("bsz")
     return (
-        inter.join(F.broadcast(bsizes), "bench_id")
-        .filter(containment >= 0.5)
+        _contaminated(train_sh, bench_sh)
         .select("train_id", "bench_id", F.round(containment, 6).alias("containment"))
         .orderBy("train_id", "bench_id")
     )
@@ -642,28 +673,13 @@ def _bloom_positions(df: DataFrame) -> DataFrame:
 
 @query("pipeline_decontaminate_bloom", oracle=_CONTAMINATION_ORACLE)
 def pipeline_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minimised_impala_spark.extensions.dedup import _trigrams_of
-
-    grams = F.array_distinct(_trigrams_of(F.col("toks")))
     docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 17 == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    # persist: three consumers (set-bit build, per-bench sizes, exact
-    # rescore broadcast) each re-ran the bench scan + shingle explode
-    # uncached (r12, guide §5)
-    bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
-        "bench_id", F.explode(grams).alias("sh")
-    ))
+    train_sh, bench_sh = _contamination_shingles(docs)
     # phase 1: the compressed bench representation — distinct set bits
     set_bits = (
         _bloom_positions(bench_sh.select("sh").distinct()).select("pos").distinct()
     )
     # phase 2: bloom prefilter — keep (train_id, sh) whose k probes ALL hit
-    train_sh = docs.withColumn("toks", F.split("text", " ")).select(
-        F.col("doc_id").alias("train_id"), F.explode(grams).alias("sh")
-    )
     candidates = (
         _bloom_positions(train_sh)
         .join(F.broadcast(set_bits), "pos")
@@ -673,19 +689,9 @@ def pipeline_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("k_hits")
     )
     # phase 3: exact rescore of the candidates only (drops false positives)
-    bsizes = bench_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))
-    inter = (
-        candidates.join(
-            F.broadcast(bench_sh.withColumnRenamed("sh", "bsh")),
-            F.col("sh") == F.col("bsh"),
-        )
-        .groupBy("train_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
     containment = F.col("c") * 1.0 / F.col("bsz")
     return (
-        inter.join(F.broadcast(bsizes), "bench_id")
-        .filter(containment >= 0.5)
+        _contaminated(candidates, bench_sh)
         .select("train_id", "bench_id", F.round(containment, 6).alias("containment"))
         .orderBy("train_id", "bench_id")
     )
@@ -1092,8 +1098,9 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decimals like text_lm_score. At 100 TB the model tables are the only
 # shuffles (|vocab| and |bigram-vocab| rows) and scoring is a broadcast
 # join over the token stream.
-_BIGRAM_LM_ORACLE = """
-WITH t AS (
+# Each document's bigrams (bg), and the corpus bigram (c12) and head (c1)
+# counts: the model tables of both bigram LMs.
+_BIGRAM_CTE = """t AS (
   SELECT doc_id, string_split(text, ' ') AS toks,
          len(string_split(text, ' ')) AS n
   FROM documents
@@ -1108,7 +1115,10 @@ c12 AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY bigram),
 c1 AS (
   SELECT split_part(bigram, chr(9), 1) AS w1, CAST(count(*) AS BIGINT) AS c1
   FROM bg GROUP BY w1
-),
+)"""
+
+_BIGRAM_LM_ORACLE = f"""
+WITH {_BIGRAM_CTE},
 vocab AS (
   SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
   FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents) u
@@ -1129,30 +1139,33 @@ ORDER BY doc_id
 """
 
 
+def _bigrams(t: DataFrame, key: str) -> DataFrame:
+    """(key, bigram) for every adjacent token pair of each `toks` row of
+    ``t`` (key, toks, n), the two tokens joined by a tab. Derived from the
+    materialized token array by index: a narrow map, no positional
+    self-join (the shingle lesson in dedup._trigrams_of)."""
+    return t.filter(F.col("n") >= 2).select(
+        key,
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.col("n") - 2),
+                lambda i: F.concat_ws(
+                    "\t",
+                    F.element_at("toks", i + 1),
+                    F.element_at("toks", i + 2),
+                ),
+            )
+        ).alias("bigram"),
+    )
+
+
 @query("text_bigram_lm", oracle=_BIGRAM_LM_ORACLE)
 def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.split("text", " ").alias("toks")).withColumn(
         "n", F.size("toks")
     )
-    # bigram stream from the materialized token array (index transform —
-    # no positional self-join)
-    bg = (
-        t.filter(F.col("n") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n") - 2),
-                    lambda i: F.concat_ws(
-                        "\t",
-                        F.element_at("toks", i + 1),
-                        F.element_at("toks", i + 2),
-                    ),
-                )
-            ).alias("bigram"),
-        )
-    )
+    bg = _bigrams(t, "doc_id")
     # persist the vocab-sized type table and derive the context totals
     # from IT (c1(w1) = Σ_w2 c12 exactly — every w1 occurrence is in
     # some bigram type) instead of re-grouping the corpus-sized bigram
@@ -1876,9 +1889,9 @@ def pipeline_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # changes the constants, not the plan shape.
 _QC_BIAS, _QC_W_NT, _QC_W_ATL, _QC_W_SR, _QC_W_PPT = -1.0, 0.02, -0.2, 8.0, -2.0
 
-_QCLS_ORACLE = f"""
-WITH f AS (
-  SELECT doc_id,
+# The classifier's features of `text` and its logit z = w·x + b over
+# them, as _quality_logit computes it.
+_QC_FEATURES_SQL = f"""
          len(string_split(text, ' ')) AS nt,
          length(replace(text, ' ', '')) * 1.0
            / len(string_split(text, ' ')) AS atl,
@@ -1886,13 +1899,19 @@ WITH f AS (
              ['the','and','of','to','a','in'])) * 1.0
            / len(list_distinct(string_split(text, ' '))) AS sr,
          len(regexp_extract_all(text, '{_PUNCT_RE}')) * 1.0
-           / len(string_split(text, ' ')) AS ppt
+           / len(string_split(text, ' ')) AS ppt"""
+_QC_Z_SQL = (
+    f"{_QC_BIAS} + {_QC_W_NT} * nt + {_QC_W_ATL} * atl"
+    f" + {_QC_W_SR} * sr + {_QC_W_PPT} * ppt"
+)
+
+_QCLS_ORACLE = f"""
+WITH f AS (
+  SELECT doc_id,{_QC_FEATURES_SQL}
   FROM documents
 ),
 z AS (
-  SELECT doc_id,
-         {_QC_BIAS} + {_QC_W_NT} * nt + {_QC_W_ATL} * atl
-           + {_QC_W_SR} * sr + {_QC_W_PPT} * ppt AS z
+  SELECT doc_id, {_QC_Z_SQL} AS z
   FROM f
 )
 SELECT doc_id,
@@ -1901,6 +1920,25 @@ SELECT doc_id,
 FROM z
 ORDER BY doc_id
 """
+
+
+def _quality_logit() -> Column:
+    """z = w·x + b of the fixed-weight logistic quality classifier over
+    (n_tokens, avg token length, stopword ratio, punctuation per token)
+    of `text`."""
+    toks = F.split("text", " ")
+    nt = F.size(toks)
+    atl = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) * 1.0 / nt
+    stop = F.array([F.lit(w) for w in _LANG_STOPWORDS["en"]])
+    sr = F.size(F.array_intersect(toks, stop)) * 1.0 / F.size(F.array_distinct(toks))
+    ppt = F.regexp_count("text", F.lit(_PUNCT_RE)) * 1.0 / nt
+    return (
+        F.lit(_QC_BIAS)
+        + F.lit(_QC_W_NT) * nt
+        + F.lit(_QC_W_ATL) * atl
+        + F.lit(_QC_W_SR) * sr
+        + F.lit(_QC_W_PPT) * ppt
+    )
 
 
 @query("text_quality_classifier", oracle=_QCLS_ORACLE)
@@ -1912,20 +1950,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The model is constants in codegen'd Column arithmetic: no Python UDF,
     # join or aggregate, just a narrow map over the scan.
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    nt = F.size(toks)
-    atl = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) * 1.0 / nt
-    stop = F.array([F.lit(w) for w in _LANG_STOPWORDS["en"]])
-    sr = F.size(F.array_intersect(toks, stop)) * 1.0 / F.size(F.array_distinct(toks))
-    ppt = F.regexp_count("text", F.lit(_PUNCT_RE)) * 1.0 / nt
-    z = (
-        F.lit(_QC_BIAS)
-        + F.lit(_QC_W_NT) * nt
-        + F.lit(_QC_W_ATL) * atl
-        + F.lit(_QC_W_SR) * sr
-        + F.lit(_QC_W_PPT) * ppt
-    )
-    score = F.round(1.0 / (1.0 + F.exp(-z)), 6)
+    score = F.round(1.0 / (1.0 + F.exp(-_quality_logit())), 6)
     return docs.select(
         "doc_id",
         score.alias("score"),
@@ -2643,46 +2668,8 @@ def text_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the fixture's bench docs are doc_id % 17 = 0). Same shingle-posting
 # join as the pair query (cost ∝ Σ bench-shingle df, never |train|²);
 # the rollup is a second small aggregation over the matched pairs only.
-_CONTAM_MATRIX_ORACLE = """
-WITH corpus AS (SELECT doc_id, text FROM documents),
-toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS p
-  FROM corpus
-),
-shingles AS (
-  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS sh
-  FROM toks a
-  JOIN toks b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-  JOIN toks c ON c.doc_id = a.doc_id AND c.p = a.p + 2
-),
-bench AS (
-  SELECT doc_id AS bench_id,
-         substr(text, strpos(text, ' ') + 1) AS text
-  FROM documents WHERE doc_id % 17 = 0
-),
-btoks AS (
-  SELECT bench_id, unnest(string_split(text, ' ')) AS tok,
-         generate_subscripts(string_split(text, ' '), 1) AS p
-  FROM bench
-),
-bshingles AS (
-  SELECT DISTINCT a.bench_id, a.tok || ' ' || b.tok || ' ' || c.tok AS sh
-  FROM btoks a
-  JOIN btoks b ON b.bench_id = a.bench_id AND b.p = a.p + 1
-  JOIN btoks c ON c.bench_id = a.bench_id AND c.p = a.p + 2
-),
-bsizes AS (SELECT bench_id, count(*) AS bsz FROM bshingles GROUP BY bench_id),
-inter AS (
-  SELECT s.doc_id AS train_id, b.bench_id, count(*) AS c
-  FROM shingles s JOIN bshingles b ON s.sh = b.sh
-  GROUP BY s.doc_id, b.bench_id
-),
-contaminated AS (
-  SELECT i.train_id, i.bench_id
-  FROM inter i JOIN bsizes z ON z.bench_id = i.bench_id
-  WHERE i.c * 1.0 / z.bsz >= 0.5
-)
+_CONTAM_MATRIX_ORACLE = f"""
+WITH {_CONTAMINATED_CTE}
 SELECT d.source,
        CAST((c.bench_id // 17) % 3 AS INT) AS suite,
        CAST(count(*) AS BIGINT) AS n_pairs,
@@ -2696,36 +2683,9 @@ ORDER BY d.source, suite
 
 @query("text_contamination_matrix", oracle=_CONTAM_MATRIX_ORACLE)
 def text_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minimised_impala_spark.extensions.dedup import _trigrams_of
-
-    grams = F.array_distinct(_trigrams_of(F.col("toks")))
     docs = load_table(spark, sf_dir, "documents")
-    train_sh = docs.withColumn("toks", F.split("text", " ")).select(
-        F.col("doc_id").alias("train_id"), F.explode(grams).alias("sh")
-    )
-    bench = docs.filter(F.col("doc_id") % 17 == 0).select(
-        F.col("doc_id").alias("bench_id"),
-        F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-    )
-    # persist: bench_sh feeds both the per-bench sizes and the
-    # intersection broadcast — uncached each re-ran the bench scan +
-    # shingle explode (r12, guide §5)
-    bench_sh = seam(bench.withColumn("toks", F.split("text", " ")).select(
-        "bench_id", F.explode(grams).alias("sh")
-    ))
-    bsizes = bench_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("bsz"))
-    inter = (
-        train_sh.join(
-            F.broadcast(bench_sh.withColumnRenamed("sh", "bsh")),
-            F.col("sh") == F.col("bsh"),
-        )
-        .groupBy("train_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    contaminated = (
-        inter.join(F.broadcast(bsizes), "bench_id")
-        .filter(F.col("c") * 1.0 / F.col("bsz") >= 0.5)
-        .select("train_id", "bench_id")
+    contaminated = _contaminated(*_contamination_shingles(docs)).select(
+        "train_id", "bench_id"
     )
     src = docs.select(F.col("doc_id").alias("train_id"), "source")
     return (
@@ -3000,20 +2960,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # codegen'd CASE per row + a 25-cell aggregate.
 _LANGID_CONF_ORACLE = f"""
 WITH pred AS (
-  SELECT lang AS true_lang,
-         CASE
-           WHEN {_langid_score_sql('en')} >= {_langid_score_sql('de')}
-            AND {_langid_score_sql('en')} >= {_langid_score_sql('es')}
-            AND {_langid_score_sql('en')} >= {_langid_score_sql('fr')}
-            AND {_langid_score_sql('en')} > 0 THEN 'en'
-           WHEN {_langid_score_sql('de')} >= {_langid_score_sql('es')}
-            AND {_langid_score_sql('de')} >= {_langid_score_sql('fr')}
-            AND {_langid_score_sql('de')} > 0 THEN 'de'
-           WHEN {_langid_score_sql('es')} >= {_langid_score_sql('fr')}
-            AND {_langid_score_sql('es')} > 0 THEN 'es'
-           WHEN {_langid_score_sql('fr')} > 0 THEN 'fr'
-           ELSE 'unknown'
-         END AS pred_lang
+  SELECT lang AS true_lang,{_LANGID_PRED_SQL} AS pred_lang
   FROM documents
 )
 SELECT true_lang, pred_lang,
@@ -3032,25 +2979,8 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-
-    def score(lang: str) -> Column:
-        return F.size(
-            F.array_intersect(
-                toks, F.array([F.lit(w) for w in _LANG_STOPWORDS[lang]])
-            )
-        )
-
-    en, de, es, fr = (score(lang) for lang in ("en", "de", "es", "fr"))
-    pred = (
-        F.when((en >= de) & (en >= es) & (en >= fr) & (en > 0), "en")
-        .when((de >= es) & (de >= fr) & (de > 0), "de")
-        .when((es >= fr) & (es > 0), "es")
-        .when(fr > 0, "fr")
-        .otherwise("unknown")
-    )
     conf = (
-        docs.select(F.col("lang").alias("true_lang"), pred.alias("pred_lang"))
+        docs.select(F.col("lang").alias("true_lang"), _langid_pred().alias("pred_lang"))
         .groupBy("true_lang", "pred_lang")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
@@ -3703,20 +3633,25 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: pure map-side expressions + one (lang, band) aggregate; the
 # regexes stream over each document once, no shuffle until the
 # |langs| x 5-row rollup.
-_READABILITY_ORACLE = """
-WITH scored AS (
-  SELECT lang,
+# Flesch reading ease of `text` from its word, sentence and syllable
+# counts, floored to e2 integers — as _flesch computes it.
+_FLESCH_COUNTS_SQL = """
          len(regexp_extract_all(text, '\\S+')) AS words,
          greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS sents,
          greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1)
-           AS sylls
+           AS sylls"""
+_FLESCH_E2_SQL = """
+         CAST(floor((206.835 - 1.015 * (words * 1.0 / sents)
+                     - 84.6 * (sylls * 1.0 / greatest(words, 1))) * 100)
+              AS BIGINT)"""
+
+_READABILITY_ORACLE = f"""
+WITH scored AS (
+  SELECT lang,{_FLESCH_COUNTS_SQL}
   FROM documents
 ),
 banded AS (
-  SELECT lang, words,
-         CAST(floor((206.835 - 1.015 * (words * 1.0 / sents)
-                     - 84.6 * (sylls * 1.0 / greatest(words, 1))) * 100)
-              AS BIGINT) AS flesch_e2
+  SELECT lang, words,{_FLESCH_E2_SQL} AS flesch_e2
   FROM scored
 )
 SELECT lang,
@@ -3734,11 +3669,9 @@ ORDER BY lang, band
 """
 
 
-@query("text_readability_scores", oracle=_READABILITY_ORACLE)
-def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The regexp counts are per-row expressions, so the (lang, band)
-    # rollup's is the only hash exchange.
-    docs = load_table(spark, sf_dir, "documents")
+def _flesch() -> tuple[Column, Column]:
+    """(words, flesch_e2): the word count of `text` and its Flesch reading
+    ease floored to e2 integers."""
     words = F.regexp_count("text", F.lit(r"\S+"))
     sents = F.greatest(F.regexp_count("text", F.lit("[.!?]+")), F.lit(1))
     sylls = F.greatest(
@@ -3752,6 +3685,15 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         * 100
     ).cast("bigint")
+    return words, flesch_e2
+
+
+@query("text_readability_scores", oracle=_READABILITY_ORACLE)
+def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The regexp counts are per-row expressions, so the (lang, band)
+    # rollup's is the only hash exchange.
+    docs = load_table(spark, sf_dir, "documents")
+    words, flesch_e2 = _flesch()
     banded = docs.select(
         "lang", words.alias("words"), flesch_e2.alias("flesch_e2")
     )
@@ -3887,29 +3829,13 @@ def text_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # scan; the report is a 10-row aggregate.
 _CALIB_ORACLE = f"""
 WITH f AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS nt,
-         length(replace(text, ' ', '')) * 1.0
-           / len(string_split(text, ' ')) AS atl,
-         len(list_intersect(string_split(text, ' '),
-             ['the','and','of','to','a','in'])) * 1.0
-           / len(list_distinct(string_split(text, ' '))) AS sr,
-         len(regexp_extract_all(text, '{_PUNCT_RE}')) * 1.0
-           / len(string_split(text, ' ')) AS ppt,
-         len(regexp_extract_all(text, '\\S+')) AS words,
-         greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS sents,
-         greatest(len(regexp_extract_all(lower(text), '[aeiouy]+')), 1)
-           AS sylls
+  SELECT doc_id,{_QC_FEATURES_SQL},{_FLESCH_COUNTS_SQL}
   FROM documents
 ),
 scored AS (
   SELECT doc_id,
-         CAST(round(1000000.0 / (1.0 + exp(-({_QC_BIAS} + {_QC_W_NT} * nt
-              + {_QC_W_ATL} * atl + {_QC_W_SR} * sr + {_QC_W_PPT} * ppt))))
-              AS BIGINT) AS score_e6,
-         CAST(floor((206.835 - 1.015 * (words * 1.0 / sents)
-                     - 84.6 * (sylls * 1.0 / greatest(words, 1))) * 100)
-              AS BIGINT) >= 5000 AS gold
+         CAST(round(1000000.0 / (1.0 + exp(-({_QC_Z_SQL}))))
+              AS BIGINT) AS score_e6,{_FLESCH_E2_SQL} >= 5000 AS gold
   FROM f
 ),
 ranked AS (
@@ -3941,33 +3867,8 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minimised_impala_spark.operators.prefix import distributed_cumsum
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    nt = F.size(toks)
-    atl = F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) * 1.0 / nt
-    stop = F.array([F.lit(w) for w in _LANG_STOPWORDS["en"]])
-    sr = F.size(F.array_intersect(toks, stop)) * 1.0 / F.size(F.array_distinct(toks))
-    ppt = F.regexp_count("text", F.lit(_PUNCT_RE)) * 1.0 / nt
-    z = (
-        F.lit(_QC_BIAS)
-        + F.lit(_QC_W_NT) * nt
-        + F.lit(_QC_W_ATL) * atl
-        + F.lit(_QC_W_SR) * sr
-        + F.lit(_QC_W_PPT) * ppt
-    )
-    score_e6 = F.round(1000000.0 / (1.0 + F.exp(-z))).cast("bigint")
-    words = F.regexp_count("text", F.lit(r"\S+"))
-    sents = F.greatest(F.regexp_count("text", F.lit("[.!?]+")), F.lit(1))
-    sylls = F.greatest(
-        F.regexp_count(F.lower("text"), F.lit("[aeiouy]+")), F.lit(1)
-    )
-    flesch_e2 = F.floor(
-        (
-            206.835
-            - 1.015 * (words * 1.0 / sents)
-            - 84.6 * (sylls * 1.0 / F.greatest(words, F.lit(1)))
-        )
-        * 100
-    ).cast("bigint")
+    score_e6 = F.round(1000000.0 / (1.0 + F.exp(-_quality_logit()))).cast("bigint")
+    _, flesch_e2 = _flesch()
     scored = docs.select(
         "doc_id",
         score_e6.alias("score_e6"),
@@ -4013,22 +3914,7 @@ def text_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KN_D = 0.75
 
 _KN_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS toks,
-         len(string_split(text, ' ')) AS n
-  FROM documents
-),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, n - 1),
-                               i -> toks[i] || chr(9) || toks[i + 1])) AS bigram
-  FROM t WHERE n >= 2
-),
-c12 AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY bigram),
-c1 AS (
-  SELECT split_part(bigram, chr(9), 1) AS w1, CAST(count(*) AS BIGINT) AS c1
-  FROM bg GROUP BY w1
-),
+WITH {_BIGRAM_CTE},
 n1h AS (
   SELECT split_part(bigram, chr(9), 1) AS w1,
          CAST(count(*) AS BIGINT) AS n1h
@@ -4068,22 +3954,7 @@ def text_kneser_ney_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select("doc_id", F.split("text", " ").alias("toks")).withColumn(
         "n", F.size("toks")
     )
-    bg = (
-        t.filter(F.col("n") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n") - 2),
-                    lambda i: F.concat_ws(
-                        "\t",
-                        F.element_at("toks", i + 1),
-                        F.element_at("toks", i + 2),
-                    ),
-                )
-            ).alias("bigram"),
-        )
-    )
+    bg = _bigrams(t, "doc_id")
     w1_of = F.split_part(F.col("bigram"), F.lit("\t"), F.lit(1))
     w2_of = F.split_part(F.col("bigram"), F.lit("\t"), F.lit(2))
     # persist: c12 has FOUR consumers (per_w1, n1t, the type count b and
@@ -4438,22 +4309,7 @@ def text_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h1"),
         )
     )
-    bg = (
-        t.filter(F.col("n") >= 2)
-        .select(
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n") - 2),
-                    lambda i: F.concat_ws(
-                        "\t",
-                        F.element_at("toks", i + 1),
-                        F.element_at("toks", i + 2),
-                    ),
-                )
-            ).alias("bigram"),
-        )
-    )
+    bg = _bigrams(t, "source")
     w1_of = F.split_part(F.col("bigram"), F.lit("\t"), F.lit(1))
     c12 = seam(
         bg.groupBy("source", "bigram")

@@ -1192,8 +1192,9 @@ def events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Impala-era analogue: this is the shape an analyst would hand-write
 # as three self-joins; the orientation is what makes it survive a
 # power-law graph.)
-_TRIANGLE_ORACLE = """
-WITH cells_all AS (
+# The capped co-occurrence edge list (edges_raw: u < v), as
+# _cooccurrence_edges builds it.
+_COOC_EDGES_CTE = """cells_all AS (
   SELECT DISTINCT event_type, date_trunc('hour', ts) AS h, user_id
   FROM events
 ),
@@ -1210,7 +1211,10 @@ edges_raw AS (
     ON b.event_type = a.event_type AND b.h = a.h AND b.user_id > a.user_id
   GROUP BY a.user_id, b.user_id
   HAVING count(*) >= 4
-),
+)"""
+
+_TRIANGLE_ORACLE = f"""
+WITH {_COOC_EDGES_CTE},
 deg AS (
   SELECT u AS node, count(*) AS d FROM (
     SELECT u FROM edges_raw UNION ALL SELECT v FROM edges_raw
@@ -1302,15 +1306,15 @@ def _orient_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     with the corpus), so the endpoint joins carry NO broadcast hint:
     AQE broadcasts at fixture scale and shuffle-joins on the node key
     once the table outgrows the threshold — the r9 invariance matrix
-    proves results are strategy-independent.  Returns (deg, oriented)
-    unmaterialized so callers (and the plan tests) see the full
-    lineage."""
+    proves results are strategy-independent.  Returns (deg, oriented),
+    deg seamed and oriented unmaterialized."""
     # selectExpr strings, not nested Column trees: every Column operator
     # is a py4j round trip and this helper alone cost ~0.5 s of the
     # caller's plan build (r12; the analyzed plan is identical)
-    # persist: deg has FOUR consumers (the two orient joins, the wedge
-    # sum and the node count) — uncached, each one re-ran the
-    # union+groupBy exchange over the edge list (r12, guide §5)
+    # persist: deg has three consumers (the two orient joins and the
+    # caller's one aggregate for the wedge sum and node count) —
+    # uncached, each one re-ran the degree count's exchange over the
+    # edge list (r12, guide §5)
     # explode(array(u, v)) instead of a two-scan unionAll: ONE pass over
     # the cached edge list feeds the degree count (r13, guide §2.4)
     deg = seam(
@@ -1487,29 +1491,12 @@ def events_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Reference parity: joins/aggregates only (PlanNodes.thrift HASH_JOIN/
 # AGGREGATION); the op itself is beyond the reference, expressed with
 # its operator set.
-_LINK_PRED_ORACLE = """
-WITH cells_all AS (
-  SELECT DISTINCT event_type, date_trunc('hour', ts) AS h, user_id
-  FROM events
-),
-cells AS (
-  SELECT event_type, h, user_id FROM (
-    SELECT event_type, h, user_id,
-           row_number() OVER (PARTITION BY event_type, h
-                              ORDER BY user_id) AS rn
-    FROM cells_all) t WHERE rn <= 16
-),
-edges AS (
-  SELECT a.user_id AS u, b.user_id AS v
-  FROM cells a JOIN cells b
-    ON b.event_type = a.event_type AND b.h = a.h AND b.user_id > a.user_id
-  GROUP BY a.user_id, b.user_id
-  HAVING count(*) >= 4
-),
+_LINK_PRED_ORACLE = f"""
+WITH {_COOC_EDGES_CTE},
 adj AS (
-  SELECT u AS node, v AS neigh FROM edges
+  SELECT u AS node, v AS neigh FROM edges_raw
   UNION ALL
-  SELECT v AS node, u AS neigh FROM edges
+  SELECT v AS node, u AS neigh FROM edges_raw
 ),
 deg AS (SELECT node, count(*) AS d FROM adj GROUP BY node),
 wedges AS (
@@ -1520,7 +1507,7 @@ wedges AS (
 cand AS (
   SELECT w.u, w.v, w.common_n
   FROM wedges w
-  WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.u = w.u AND e.v = w.v)
+  WHERE NOT EXISTS (SELECT 1 FROM edges_raw e WHERE e.u = w.u AND e.v = w.v)
 ),
 scored AS (
   SELECT c.u, c.v, c.common_n,
@@ -1990,8 +1977,12 @@ ORDER BY channel
 """
 
 
-@query("events_multitouch_attribution", oracle=_MTA_ORACLE)
-def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _purchase_touches(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(purch, touches): the purchase events (event_id, user_id, ts, value),
+    seamed, and each purchase joined to the user's non-purchase events of
+    the 7 days before it, as (channel, t_ts) per touch."""
     ev = load_table(spark, sf_dir, "events")
     # persist: the purchase set has two consumers (the touch band-join
     # and the value fan-out) — uncached both re-ran the filtered events
@@ -2004,16 +1995,19 @@ def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_type").alias("channel"),
         F.col("ts").alias("t_ts"),
     )
-    touch = (
-        purch.join(
-            t,
-            (F.col("t_user") == F.col("user_id"))
-            & (F.col("t_ts") < F.col("ts"))
-            & (F.col("t_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
-        )
-        .select("event_id", "channel")
-        .distinct()
+    touches = purch.join(
+        t,
+        (F.col("t_user") == F.col("user_id"))
+        & (F.col("t_ts") < F.col("ts"))
+        & (F.col("t_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
     )
+    return purch, touches
+
+
+@query("events_multitouch_attribution", oracle=_MTA_ORACLE)
+def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    purch, touches = _purchase_touches(spark, sf_dir)
+    touch = touches.select("event_id", "channel").distinct()
     fan = purch.join(touch, "event_id", "left").select(
         "event_id",
         "value",
@@ -2493,14 +2487,17 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order. Peers (equal ts) are frame-identical in both engines by RANGE
 # semantics. 100 TB shape: user-keyed window (sessionize's shuffle),
 # integer counts, flag filter — the report is flagged users only.
-_VELOCITY_ORACLE = """
-WITH vel AS (
+# Each event's count of the user's events in the trailing 24 hours.
+_VELOCITY_CTE = """vel AS (
   SELECT user_id,
          count(*) OVER (PARTITION BY user_id ORDER BY ts
                         RANGE BETWEEN INTERVAL 24 HOURS PRECEDING
                         AND CURRENT ROW) AS n_24h
   FROM events
-)
+)"""
+
+_VELOCITY_ORACLE = f"""
+WITH {_VELOCITY_CTE}
 SELECT user_id,
        CAST(max(n_24h) AS BIGINT) AS peak_24h,
        CAST(count(*) FILTER (WHERE n_24h >= 6) AS BIGINT) AS n_flagged
@@ -2517,14 +2514,8 @@ def events_velocity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_tables(spark, sf_dir, ("events",))
     return spark.sql(
-        """
-WITH vel AS (
-  SELECT user_id,
-         count(*) OVER (PARTITION BY user_id ORDER BY ts
-                        RANGE BETWEEN INTERVAL 24 HOURS PRECEDING
-                        AND CURRENT ROW) AS n_24h
-  FROM events
-)
+        f"""
+WITH {_VELOCITY_CTE}
 SELECT user_id,
        CAST(max(n_24h) AS BIGINT) AS peak_24h,
        CAST(count(CASE WHEN n_24h >= 6 THEN 1 END) AS BIGINT) AS n_flagged
@@ -2911,28 +2902,8 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
     attributed_e2)."""
     # The share denominator's window is keyed by the purchase event, never
     # partition-less.
-    ev = load_table(spark, sf_dir, "events")
-    # persist: the purchase set has two consumers (the touch band-join
-    # and the value fan-out) — uncached both re-ran the filtered events
-    # scan (r12, guide §5)
-    purch = seam(ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    ))
-    t = ev.filter(F.col("event_type") != "purchase").select(
-        F.col("user_id").alias("t_user"),
-        F.col("event_type").alias("channel"),
-        F.col("ts").alias("t_ts"),
-    )
-    touch = (
-        purch.join(
-            t,
-            (F.col("t_user") == F.col("user_id"))
-            & (F.col("t_ts") < F.col("ts"))
-            & (F.col("t_ts") >= F.col("ts") - F.expr("INTERVAL 7 DAY")),
-        )
-        .groupBy("event_id", "channel")
-        .agg(F.max("t_ts").alias("last_ts"))
-    )
+    purch, touches = _purchase_touches(spark, sf_dir)
+    touch = touches.groupBy("event_id", "channel").agg(F.max("t_ts").alias("last_ts"))
     w_e6 = F.when(F.col("channel").isNull(), F.lit(1000000).cast("bigint")).otherwise(
         F.round(
             F.exp(
@@ -2984,25 +2955,8 @@ def events_attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame
 # Scale: shares the capped `_cooccurrence_edges` build (WindowGroupLimit
 # cells, weight-4 threshold); degrees are one node-keyed count; the
 # histogram and fit run on |distinct degrees| rows.
-_DEGREE_DIST_ORACLE = """
-WITH cells_all AS (
-  SELECT DISTINCT event_type, date_trunc('hour', ts) AS h, user_id
-  FROM events
-),
-cells AS (
-  SELECT event_type, h, user_id FROM (
-    SELECT event_type, h, user_id,
-           row_number() OVER (PARTITION BY event_type, h
-                              ORDER BY user_id) AS rn
-    FROM cells_all) t WHERE rn <= 16
-),
-edges_raw AS (
-  SELECT a.user_id AS u, b.user_id AS v
-  FROM cells a JOIN cells b
-    ON b.event_type = a.event_type AND b.h = a.h AND b.user_id > a.user_id
-  GROUP BY a.user_id, b.user_id
-  HAVING count(*) >= 4
-),
+_DEGREE_DIST_ORACLE = f"""
+WITH {_COOC_EDGES_CTE},
 deg AS (
   SELECT u AS node, CAST(count(*) AS BIGINT) AS d FROM (
     SELECT u FROM edges_raw UNION ALL SELECT v FROM edges_raw

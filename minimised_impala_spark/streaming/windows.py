@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from minimised_impala_spark.extensions.dedup import INCREMENTAL_ORACLE
 from minimised_impala_spark.queries.registry import query
 from minimised_impala_spark.seams import seam
 from minimised_impala_spark.tables import fix_events_ts, scratch_dir, staging_dir
@@ -269,6 +270,39 @@ def streaming_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain(agg, "complete").select("event_type", "n").orderBy("event_type")
 
 
+def _view_clicks(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The view stream (view_id, v_user, v_ts) ``how``-joined to the click
+    stream (click_id, c_user, c_ts): the same user's clicks within 15
+    minutes after the view, both sides watermarked at 1 hour."""
+    views = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(
+            F.col("event_id").alias("view_id"),
+            F.col("user_id").alias("v_user"),
+            F.col("ts").alias("v_ts"),
+        )
+        .withWatermark("v_ts", "1 hour")
+    )
+    clicks = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("c_ts"),
+        )
+        .withWatermark("c_ts", "1 hour")
+    )
+    return views.join(
+        clicks,
+        (F.col("v_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("v_ts"))
+        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 15 MINUTES")),
+        how,
+    )
+
+
 @query(
     "streaming_outer_join",
     oracle="""
@@ -311,33 +345,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, state ∝ interval + watermark slack); the outer variant adds
     only the eviction-time null emission, no extra state.
     """
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    pairs = views.join(
-        clicks,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 15 MINUTES")),
-        "leftOuter",
-    )
+    pairs = _view_clicks(spark, sf_dir, "leftOuter")
     return (
         drain(pairs, "append")
         .groupBy(F.col("v_user").alias("user_id"))
@@ -372,32 +380,7 @@ def streaming_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is limited to the 15-minute interval plus watermark slack. The
     post-sink per-user rollup is batch (the join IS the streaming part).
     """
-    views = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    pairs = views.join(
-        clicks,
-        (F.col("v_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 15 MINUTES")),
-    )
+    pairs = _view_clicks(spark, sf_dir, "inner")
     return (
         drain(pairs, "append")
         .groupBy(F.col("v_user").alias("user_id"))
@@ -463,7 +446,8 @@ ORDER BY window_start, event_type
 """,
 )
 def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = staging_dir("fbsink", sf_dir, "events")
+    scratch = scratch_dir("fbsink")
+    out = os.path.join(scratch, "out")
     agg = (
         _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -478,8 +462,12 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(out)
 
-    run_to_end(agg.writeStream.outputMode("complete").foreachBatch(write_batch))
-    return spark.read.parquet(out).orderBy("window_start", "event_type")
+    try:
+        run_to_end(agg.writeStream.outputMode("complete").foreachBatch(write_batch))
+        # materialized now, so the scratch directory can go before returning
+        return seam(spark.read.parquet(out).orderBy("window_start", "event_type"), now=True)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @query(
@@ -696,46 +684,7 @@ def streaming_drift_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # answer exactly. At 100 TB/day: per-batch cost ∝ batch bands + band
 # collisions, never corpus size; the index is the thing a real pipeline
 # persists and reloads.
-def _stream_lsh_oracle() -> str:
-    from minimised_impala_spark.extensions.dedup import _minhash_bands_cte
-
-    return f"""
-WITH {_minhash_bands_cte()},
-cand AS (
-  SELECT DISTINCT b1.doc_id AS new_id, b2.doc_id AS corpus_id
-  FROM bands b1 JOIN bands b2
-    ON b1.band = b2.band AND b1.bsig = b2.bsig
-   AND b1.doc_id % 10 = 7 AND b2.doc_id % 10 <> 7
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.new_id, c.corpus_id, count(*) AS c
-  FROM cand c
-  JOIN shingles s1 ON s1.doc_id = c.new_id
-  JOIN shingles s2 ON s2.doc_id = c.corpus_id AND s2.sh = s1.sh
-  GROUP BY c.new_id, c.corpus_id
-),
-scored AS (
-  SELECT i.new_id, i.corpus_id,
-         i.c * 1.0 / (z1.sz + z2.sz - i.c) AS jac
-  FROM inter i
-  JOIN sizes z1 ON z1.doc_id = i.new_id
-  JOIN sizes z2 ON z2.doc_id = i.corpus_id
-  WHERE i.c * 1.0 / (z1.sz + z2.sz - i.c) >= 0.6
-),
-best AS (
-  SELECT new_id, corpus_id, jac,
-         row_number() OVER (PARTITION BY new_id
-                            ORDER BY jac DESC, corpus_id) AS r
-  FROM scored
-)
-SELECT new_id, corpus_id AS match_id, round(jac, 6) AS jaccard
-FROM best WHERE r = 1
-ORDER BY new_id
-"""
-
-
-@query("streaming_dedup_lsh", oracle=_stream_lsh_oracle())
+@query("streaming_dedup_lsh", oracle=INCREMENTAL_ORACLE)
 def streaming_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 

@@ -344,3 +344,21 @@ def test_backquoted_identifiers_never_rewritten():
         "SELECT `a||b` FROM t WHERE x > 1 AND y < 2"
     )
     assert translate("SELECT `ndv(x)` FROM t") == "SELECT `ndv(x)` FROM t"
+
+
+def test_iregexp_abutting_comment_literal_translates():
+    from minimised_impala_spark.dialect import translate
+
+    # comment and literal abut — under single-placeholder masking they
+    # formed one \x00 run classified wholesale as comment, and translate
+    # raised ValueError on valid SQL
+    assert (
+        translate("SELECT x IREGEXP/*c*/'a.c' FROM t")
+        == "SELECT x RLIKE '(?i)a.c' FROM t"
+    )
+    # literal-then-comment abutting on the tail side: the comment sits
+    # OUTSIDE the operand and is preserved verbatim
+    assert (
+        translate("SELECT x IREGEXP 'a.c'/*c*/ FROM t")
+        == "SELECT x RLIKE '(?i)a.c'/*c*/ FROM t"
+    )

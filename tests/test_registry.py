@@ -74,3 +74,73 @@ def test_priority_covers_never_verified_first():
     rotation_head = {"dedup_embedding_lsh", "udf_java_jar",
                      "agg_boolean_suite", "dialect_broadcast_hint"}
     assert rotation_head <= first50, f"rotation cut: {rotation_head - first50}"
+
+
+# -- copied code ------------------------------------------------------------
+# A window is 8 consecutive code lines of the package, each stripped, with
+# blank lines, comment lines and lines that only close a bracket or a
+# string skipped, and 150 characters or more in all. A window found twice
+# is a copy: both places should call one shared definition. A copy kept on
+# purpose is listed under the top-level definitions that hold it, with the
+# reason a shared definition would have to branch on its caller.
+WINDOW_LINES = 8
+WINDOW_CHARS = 150
+NOT_CODE = {")", "),", "]", "}", '"""', 'oracle="""'}
+COPIES_KEPT: dict[frozenset[str], str] = {}
+
+
+def _owner_spans(source: str) -> list[tuple[int, int, str]]:
+    import ast
+
+    spans = []
+    for node in ast.parse(source).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            spans.append((first, node.end_lineno, node.name))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            target = node.targets[0] if isinstance(node, ast.Assign) else node.target
+            spans.append((node.lineno, node.end_lineno, getattr(target, "id", "?")))
+    return spans
+
+
+def copied_windows() -> dict[frozenset[str], int]:
+    """{the definitions holding a copied window: windows copied among them}."""
+    from collections import defaultdict
+    from pathlib import Path
+
+    import minimised_impala_spark
+
+    pkg = Path(minimised_impala_spark.__file__).parent
+    where = defaultdict(set)
+    for path in sorted(pkg.rglob("*.py")):
+        source = path.read_text()
+        spans = _owner_spans(source)
+        code = [
+            (i, s)
+            for i, s in enumerate((ln.strip() for ln in source.splitlines()), 1)
+            if s and not s.startswith("#") and s not in NOT_CODE
+        ]
+        for k in range(len(code) - WINDOW_LINES + 1):
+            window = tuple(s for _, s in code[k:k + WINDOW_LINES])
+            if sum(map(len, window)) < WINDOW_CHARS:
+                continue
+            line = code[k][0]
+            owner = next((n for a, b, n in spans if a <= line <= b), "<module>")
+            where[window].add((f"{path.relative_to(pkg)}:{owner}", line))
+    copies = defaultdict(int)
+    for places in where.values():
+        if len(places) > 1:
+            copies[frozenset(owner for owner, _ in places)] += 1
+    return dict(copies)
+
+
+def test_no_copied_code():
+    copies = copied_windows()
+    unlisted = sorted(
+        (sorted(owners), n) for owners, n in copies.items() if owners not in COPIES_KEPT
+    )
+    assert not unlisted, "copied windows; share one definition:\n" + "\n".join(
+        f"{n} windows in {', '.join(owners)}" for owners, n in unlisted
+    )
+    stale = [sorted(owners) for owners in COPIES_KEPT if owners not in copies]
+    assert not stale, f"COPIES_KEPT entries that no longer match a copy: {stale}"

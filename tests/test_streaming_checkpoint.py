@@ -63,11 +63,16 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
 def test_streaming_builds_leave_nothing_in_the_session(spark, sf_dir):
     # a long-lived session runs every streaming query again and again: a
     # second pass must add no temp view (a memory sink's view holds all
-    # of its rows) and leave no stream running
+    # of its rows), leave no stream running and leave no sink or scratch
+    # directory in the staging root, only the streams' input stages
+    import os
+
     from minimised_impala_spark.queries import load_all
     from minimised_impala_spark.queries.registry import QUERIES, run
+    from minimised_impala_spark.tables import _staging_root
 
     load_all()
+    before = set(os.listdir(_staging_root()))
     names = [n for n in QUERIES if n.startswith("streaming_")]
     names.append("pipeline_quality_scorecard")  # embeds a streaming build
 
@@ -81,6 +86,43 @@ def test_streaming_builds_leave_nothing_in_the_session(spark, sf_dir):
         passes.append(views())
     assert passes[1] == passes[0]
     assert spark.streams.active == []
+    left = set(os.listdir(_staging_root())) - before
+    assert all(d.startswith("stream_x") for d in left), sorted(left)
+
+
+def test_foreach_batch_sink_builds_apart_under_racing_threads(spark, sf_dir):
+    # each build lands its sink in its own scratch directory: two threads
+    # building and collecting the query at once must not overwrite or
+    # delete each other's files
+    import threading
+
+    from minimised_impala_spark.queries import load_all
+    from minimised_impala_spark.queries.registry import ORACLES, fresh
+    from minimised_impala_spark.seams import query_scope
+    from tests.oracle import compare
+
+    load_all()
+    name = "streaming_foreach_batch_sink"
+    start = threading.Barrier(2)
+    results, errors = [], []
+
+    def build() -> None:
+        try:
+            start.wait(timeout=30)
+            with query_scope():
+                results.append(compare(name, spark, sf_dir, fresh(name), ORACLES[name]))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert len(results) == 2
+    for res in results:
+        assert res["ok"] and res["strict_match"], res
 
 
 def test_stage_stream_is_built_once_under_racing_threads(spark, tmp_path):

@@ -124,3 +124,15 @@ def test_sanity_bound_uses_same_core_count(tmp_path):
     assert bench._prior_round_bound(False, 16, str(tmp_path)) == float("inf")
     assert bench._prior_round_bound(True, 4, str(tmp_path)) == 36.0
     assert bench._prior_round_bound(True, 8, str(tmp_path)) == float("inf")
+
+
+def test_scale_smoke_zero_row_guard():
+    """A 0-row result at any probed scale is a vacuous timing (a streaming
+    query that staged no input at sf1 once timed as a pass) and must fail
+    the scale smoke unless whitelisted."""
+    from tools.mis import ZERO_ROW_OK, vacuous
+
+    assert vacuous("q", [100, 0])
+    assert vacuous("q", [0, 100])
+    assert not vacuous("q", [100, 1000])
+    assert not vacuous(next(iter(ZERO_ROW_OK)), [100, 0])
